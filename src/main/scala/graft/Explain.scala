@@ -13,7 +13,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = GraftSession.local(8, "graft-explain")
+    val spark = GraftSession.local(appName = "graft-explain")
     names.foreach { n =>
       println(s"\n========== $n ==========")
       try SparkEntry.queries(n)(spark, sfDir).explain("formatted")

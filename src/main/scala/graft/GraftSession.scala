@@ -2,17 +2,23 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory tuned for the local[32] harness while keeping every
-  * setting cluster-sane: AQE on (runtime re-plan, skew-join handling),
-  * shuffle partitions sized to cores (not the 200 default), UTC, and
-  * auto-broadcast enabled so small dimensions never shuffle.
+/** The one session factory of every entry point (Verify, Bench,
+  * ScaleBench, TimeQuery, the ETL apps): every setting cluster-sane —
+  * AQE on (runtime re-plan, skew-join handling), shuffle partitions
+  * sized to cores (not the 200 default), UTC, and auto-broadcast
+  * enabled so small dimensions never shuffle.
   *
   * On a real cluster the same builder applies — only `master` and the
   * partition count change (set `spark.sql.shuffle.partitions` ~ 2-3x
   * total executor cores there).
   */
 object GraftSession {
-  def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
+  /** Local cores: `SPARK_GRAFT_CPUS` when set, else every processor
+    * this JVM may use. */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def local(cores: Int = defaultCores, appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cores]")

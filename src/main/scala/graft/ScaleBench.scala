@@ -314,16 +314,7 @@ object ScaleBench {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = args.headOption.getOrElse("target/scale/sf1")
     val replicas = sys.env.getOrElse("SPARK_GRAFT_REPLICAS", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(appName = "graft-scalebench")
 
     if (!new java.io.File(s"$outDir/$ReplicatedMarker").exists()) {
       val t = timeOnce(replicate(spark, srcDir, outDir, replicas))
@@ -717,16 +708,7 @@ object ScaleBench {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = args.headOption.getOrElse("target/scale/sf1")
     val replicas = sys.env.getOrElse("SPARK_GRAFT_REPLICAS", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(appName = "graft-scalebench")
     if (!new java.io.File(s"$outDir/$ReplicatedMarker").exists()) {
       val t = timeOnce(replicate(spark, srcDir, outDir, replicas))
       System.err.println(f"[scale] materialized ${replicas}x tier at $outDir in $t%.1fs")

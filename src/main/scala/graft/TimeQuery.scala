@@ -1,29 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Focused single-query timer for plan/scale investigation:
   * `runMain graft.TimeQuery <sfDir> <queryName> [reps]`.
-  * Honors SPARK_GRAFT_CPUS (threads) and SPARK_GRAFT_SHUFFLE
-  * (spark.sql.shuffle.partitions, default = cpus) so a suspicious
-  * ScaleBench ratio can be re-measured under a different shuffle
-  * width without touching the harness. Hot-cache like Bench: base
-  * tables cached, one untimed warmup, then per-rep seconds. */
+  * Cores as every entry point: [[GraftSession.defaultCores]].
+  * Hot-cache like Bench: base tables cached, one untimed warmup, then
+  * per-rep seconds. */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cores = GraftSession.defaultCores
+    val spark = GraftSession.local(cores, "graft-timequery")
     import org.apache.spark.storage.StorageLevel
     graft.sources.Tables.all.foreach { t =>
       try graft.sources.Tables(spark, sfDir, t)
@@ -38,7 +26,7 @@ object TimeQuery {
     }
     once() // warmup
     val times = Seq.fill(reps)(once())
-    println(f"""{"query":"$name","sf":"$sfDir","shuffle":$shuffle,""" +
+    println(f"""{"query":"$name","sf":"$sfDir","cores":$cores,""" +
       s""""reps":[${times.map(t => f"$t%.3f").mkString(",")}]}""")
     spark.stop()
   }

@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 import graft.ext.{Dedup, Similarity, TextAnalysis}
 import graft.functions.VectorFunctions
 import graft.sources.Tables
@@ -45,17 +46,36 @@ object ExtPipelines {
     * planned TWO actions, each scanning BOTH inputs through the
     * union+replicate ExceptAll rewrite (guide §1.2/§2.3: one pass where
     * one pass suffices; aggregate early so the join sees one row per
-    * distinct value, not every duplicate). */
+    * distinct value, not every duplicate).
+    *
+    * LOUD on a schema mismatch: the two sides must agree on column
+    * names, order and data types (nullability aside — a `toDF` long
+    * and a parquet long compare), or the comparison would silently
+    * coerce or misalign columns and an identity pin could pass on
+    * unrelated frames. */
   private[graft] def multisetEq(a: DataFrame, b: DataFrame): Boolean = {
+    def shape(t: DataType): DataType = t match {
+      case st: StructType =>
+        StructType(st.fields.map(f => StructField(f.name, shape(f.dataType))))
+      case at: ArrayType => ArrayType(shape(at.elementType))
+      case mt: MapType => MapType(shape(mt.keyType), shape(mt.valueType))
+      case other => other
+    }
+    require(shape(a.schema) == shape(b.schema),
+      s"multisetEq: the two sides differ in schema: ${a.schema.simpleString}" +
+        s" vs ${b.schema.simpleString}")
     val cols = a.columns.toSeq
-    val ac = a.groupBy(cols.map(col): _*).agg(count(lit(1)).as("__ca"))
+    // the count columns are longer than every value column's name, so
+    // neither can clash with one
+    val pad = "_" * (cols.map(_.length).max + 1)
+    val (ca, cb) = (s"${pad}a", s"${pad}b")
+    val ac = a.groupBy(cols.map(col): _*).agg(count(lit(1)).as(ca))
       .alias("l")
-    val bc = b.groupBy(cols.map(col): _*).agg(count(lit(1)).as("__cb"))
+    val bc = b.groupBy(cols.map(col): _*).agg(count(lit(1)).as(cb))
       .alias("r")
     val cond = cols.map(c => col(s"l.$c") <=> col(s"r.$c")).reduce(_ && _)
     ac.join(bc, cond, "full_outer")
-      .filter(coalesce(col("__ca"), lit(0L)) =!=
-        coalesce(col("__cb"), lit(0L)))
+      .filter(coalesce(col(ca), lit(0L)) =!= coalesce(col(cb), lit(0L)))
       .isEmpty
   }
 

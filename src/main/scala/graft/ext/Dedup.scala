@@ -582,19 +582,16 @@ object Dedup {
   def appendToMinhashIndex(admitted: DataFrame, path: String,
       textCol: String = "text", idCol: String = "doc_id"): Unit = {
     val spark = admitted.sparkSession
-    // leased: an append racing a compaction's staging could commit a
-    // manifest the flip's commit would clobber (last-writer-wins on
-    // the composition); under the lease the second writer fails loudly
-    IndexLayout.withMaintenanceLease(spark, path) { _ =>
-      val m = IndexLayout.requireManifest(spark, path, MinhashIndexFormat)
-      val (banded, sh, sizes) = minhashIndexFrames(admitted,
-        IndexLayout.intParam(m, path, "n"),
-        IndexLayout.intParam(m, path, "numHashes"),
-        IndexLayout.intParam(m, path, "bands"),
-        IndexLayout.intParam(m, path, "rows"), textCol, idCol)
-      stageAndCommitAppend(spark, path, m, banded, sh, sizes, idCol)
-      sh.unpersist()
-    }
+    // sign under the STORED family; the from-frames verb re-checks it
+    // under the lease, so a rebuild racing this call fails loudly
+    val m = minhashIndexParams(spark, path)
+    val Seq(n, numHashes, bands, rows) = Seq("n", "numHashes", "bands", "rows")
+      .map(IndexLayout.intParam(m, path, _))
+    val (banded, sh, sizes) = minhashIndexFrames(admitted, n, numHashes,
+      bands, rows, textCol, idCol)
+    try appendToMinhashIndexFromFrames(spark, path, banded, sh, sizes, n,
+      numHashes, bands, rows, idCol)
+    finally sh.unpersist()
   }
 
   /** [[appendToMinhashIndex]] from PRE-COMPUTED index frames — the
@@ -613,6 +610,9 @@ object Dedup {
       banded: DataFrame, sh: DataFrame, sizes: DataFrame, n: Int = 3,
       numHashes: Int = 16, bands: Int = 8, rows: Int = 2,
       idCol: String = "doc_id"): Unit = {
+    // leased: an append racing a compaction's staging could commit a
+    // manifest the flip's commit would clobber (last-writer-wins on
+    // the composition); under the lease the second writer fails loudly
     IndexLayout.withMaintenanceLease(spark, path) { _ =>
       val m = IndexLayout.requireManifest(spark, path, MinhashIndexFormat)
       val stored = Seq("n" -> n, "numHashes" -> numHashes,
@@ -623,34 +623,14 @@ object Dedup {
           s"computed under $k=$v but $path stores $k=$s — appending " +
           "them would mis-sign every later probe")
       }
-      stageAndCommitAppend(spark, path, m, banded, sh, sizes, idCol)
+      val buckets = IndexLayout.intParam(m, path, "buckets")
+      IndexLayout.appendFrames(spark, path, m, Seq(
+        ("bands", banded, Some("band")),
+        ("shingles", sh.withColumn("bucket", idBucket(col(idCol), buckets)),
+          Some("bucket")),
+        ("sizes", sizes.withColumn("bucket", idBucket(col(idCol), buckets)),
+          Some("bucket"))))
     }
-  }
-
-  /** The staging+commit core of the append verbs: three independent
-    * batch-root writes off one persisted shingle frame — overlapped
-    * (IndexLayout.inParallel): the per-frame staging cost is dominated
-    * by fixed write/commit latency at batch scale, so the append pays
-    * it once, not three times. */
-  private def stageAndCommitAppend(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      m: Map[String, String], banded: DataFrame, sh: DataFrame,
-      sizes: DataFrame, idCol: String): Unit = {
-    val buckets = IndexLayout.intParam(m, path, "buckets")
-    val tag = s"a${IndexLayout.seqOf(m) + 1}"
-    val Seq(stBands, stShingles, stSizes) = IndexLayout.inParallel(Seq(
-      () => IndexLayout.stageAppendBatch(spark, path, "bands", tag,
-        banded, Some("band")),
-      () => IndexLayout.stageAppendBatch(spark, path, "shingles",
-        tag, sh.withColumn("bucket", idBucket(col(idCol), buckets)),
-        Some("bucket")),
-      () => IndexLayout.stageAppendBatch(spark, path, "sizes", tag,
-        sizes.withColumn("bucket", idBucket(col(idCol), buckets)),
-        Some("bucket"))))
-    val staged = Seq("bands" -> stBands, "shingles" -> stShingles,
-        "sizes" -> stSizes)
-      .collect { case (n, Some(e)) => n -> e }.toMap
-    if (staged.nonEmpty) IndexLayout.commitAppend(spark, path, m, staged)
   }
 
   /** Fold a [[graft.streaming.Streaming.nearDupIngestStream]] DELTA
@@ -761,18 +741,10 @@ object Dedup {
       // three frames staged, then spliced by a single manifest write —
       // a reader sees the pre-fold or post-fold index, never a torn
       // bands-without-shingles mix
-      val tag = s"a${IndexLayout.seqOf(m) + 1}"
-      val staged = Seq(
-        "bands" -> delta("bands").flatMap(IndexLayout.stageAppendBatch(
-          spark, path, "bands", tag, _, Some("band"))),
-        "shingles" -> delta("shingles").map(rekeyed(_, "shingles"))
-          .flatMap(IndexLayout.stageAppendBatch(
-            spark, path, "shingles", tag, _, Some("bucket"))),
-        "sizes" -> delta("sizes").map(rekeyed(_, "sizes"))
-          .flatMap(IndexLayout.stageAppendBatch(
-            spark, path, "sizes", tag, _, Some("bucket"))))
-        .collect { case (n, Some(e)) => n -> e }.toMap
-      if (staged.nonEmpty) IndexLayout.commitAppend(spark, path, m, staged)
+      IndexLayout.appendFrames(spark, path, m,
+        delta("bands").map(("bands", _, Some("band"))).toSeq ++
+          Seq("shingles", "sizes").flatMap(name => delta(name)
+            .map(d => (name, rekeyed(d, name), Some("bucket")))))
       Seq("bands", "shingles", "sizes").foreach(name =>
         IndexFs.delete(spark, s"$deltaPath/$name"))
       // the folded epoch's bucket-count marker goes with its dirs, so
@@ -803,16 +775,9 @@ object Dedup {
     * systems). Repeated deletes of one id just accumulate harmless
     * duplicate tombstone rows until compaction clears them. */
   def deleteFromMinhashIndex(ids: DataFrame, path: String,
-      idCol: String = "doc_id"): Unit = {
-    val spark = ids.sparkSession
-    // leased: a tombstone appended while a compaction is staging would
-    // be dropped by the flip WITHOUT being resolved — a silently
-    // undone delete, the worst failure a takedown pipeline can have
-    IndexLayout.withMaintenanceLease(spark, path) { _ =>
-      val m = IndexLayout.requireManifest(spark, path, MinhashIndexFormat)
-      IndexLayout.appendTombstones(spark, path, m, ids, idCol)
-    }
-  }
+      idCol: String = "doc_id"): Unit =
+    IndexLayout.appendTombstones(ids.sparkSession, path, MinhashIndexFormat,
+      ids, idCol)
 
   /** The standing tombstone ids of a [[saveMinhashIndex]] index, if
     * any ([[deleteFromMinhashIndex]] wrote some since the last
@@ -858,7 +823,7 @@ object Dedup {
     * a time, any number of readers. */
   def compactMinhashTombstones(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String = "doc_id"): Unit =
-    compactMinhash(spark, path, idCol, foldEvenClean = false)
+    IndexLayout.compact(spark, MinhashFamily, path, idCol, foldEvenClean = false)
 
   /** FOLD the composition of a [[saveMinhashIndex]] index even when no
     * tombstone exists — the maintenance verb for the APPEND-ONLY
@@ -874,62 +839,7 @@ object Dedup {
     * [[maintainMinhashIndex]]'s composition-length trigger. */
   def foldMinhashComposition(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String = "doc_id"): Unit =
-    compactMinhash(spark, path, idCol, foldEvenClean = true)
-
-  private def compactMinhash(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, foldEvenClean: Boolean): Unit = {
-    // leased across staging AND flip — the whole window in which a
-    // concurrent append/delete would be silently retired or dropped
-    IndexLayout.withMaintenanceLease(spark, path) { lease =>
-      val m = IndexLayout.requireManifest(spark, path, MinhashIndexFormat)
-      val tombStanding = IndexLayout.loadTombstones(spark, path, m, idCol)
-      // an empty tombstone set makes the pruned compaction a pure
-      // composition FOLD (nothing affected, nothing anti-joined away;
-      // split partitions — including every batch root — consolidate)
-      val tombForFold =
-        if (foldEvenClean && tombStanding.isEmpty)
-          Some(spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(
-              Seq(IndexLayout.frameSchema(m, "sizes")(idCol)))))
-        else tombStanding
-      tombForFold.foreach { tombRaw =>
-        val carried = IndexLayout.dropRetired(spark, path, m)
-        // the tombstone set feeds three anti-joins and a bucket-list
-        // aggregate; delta-sized, so one ckptLocal pins it for all four.
-        // try/finally: a compaction that fails mid-stage must not leak
-        // the pinned 2x-replicated blocks (the streaming-ingest leak
-        // class, closed the same way)
-        val tomb = Checkpoints.ckptLocal(tombRaw.distinct())
-        try {
-          val buckets = IndexLayout.intParam(m, path, "buckets")
-          val affected = tomb.select(idBucket(col(idCol), buckets).as("bk"))
-            .distinct()
-            .collect().map(_.getInt(0)).toSeq // ≤ buckets rows: bounded action
-          val newGen = IndexLayout.intParam(m, path, "gen") + 1
-          // the three frame stagings write disjoint newGen roots from
-          // one fixed manifest + the pinned tombstone set — independent
-          // jobs, overlapped so the verb costs ~the slowest staging
-          // instead of their sum (IndexLayout.inParallel)
-          val Seq(stShingles, stSizes, stBands) = IndexLayout.inParallel(Seq(
-            () => IndexLayout.stageCompactFrame(spark, path, m,
-              "shingles", "bucket", affected, tomb, idCol, newGen),
-            () => IndexLayout.stageCompactFrame(spark, path, m,
-              "sizes", "bucket", affected, tomb, idCol, newGen),
-            () => IndexLayout.stageRewriteFrame(spark, path, m,
-              "bands", "band", tomb, idCol, newGen)))
-          val staged = Map(
-            "shingles" -> stShingles,
-            "sizes" -> stSizes,
-            "bands" -> stBands,
-            "tombstones" -> IndexLayout.stageDropFrame(m, "tombstones", newGen))
-          // heartbeat + still-the-owner assertion right before the commit
-          IndexLayout.renewLease(spark, path, lease)
-          IndexLayout.flip(spark, path, m, newGen, staged, carried)
-        } finally Checkpoints.free(tomb)
-      }
-    }
-  }
+    IndexLayout.compact(spark, MinhashFamily, path, idCol, foldEvenClean = true)
 
   /** REFRESH a persisted [[saveMinhashIndex]] index to the next corpus
     * epoch — the composite maintenance verb a living corpus runs after
@@ -1022,12 +932,7 @@ object Dedup {
         val newGen = IndexLayout.intParam(m, path, "gen") + 1
         def rebucketFrame(name: String): (Seq[String], Seq[String]) = {
           val newRoot = s"$name/g$newGen"
-          val base = IndexLayout.readFrame(spark, path, m, name)
-          val survivors = tombOpt match {
-            case Some(tomb) => base.join(tomb, Seq(idCol), "left_anti")
-            case None => base
-          }
-          survivors
+          IndexLayout.liveRows(spark, path, m, name, idCol)
             .drop("bucket")
             .withColumn("bucket", idBucket(col(idCol), newBuckets))
             .repartition(col("bucket"))
@@ -1035,19 +940,16 @@ object Dedup {
             .partitionBy("bucket").parquet(s"$path/$newRoot")
           (Seq(newRoot), IndexLayout.frameEntries(m, name))
         }
+        // bands and tombstones are staged only when tombstones stand;
+        // otherwise the flip carries both through unchanged
         val staged = Map(
           "shingles" -> rebucketFrame("shingles"),
           "sizes" -> rebucketFrame("sizes")) ++
-          (tombOpt match {
-            case Some(tomb) => Map(
-              "bands" -> IndexLayout.stageRewriteFrame(spark, path, m,
-                "bands", "band", tomb, idCol, newGen),
-              "tombstones" -> IndexLayout.stageDropFrame(m, "tombstones",
-                newGen))
-            case None => Map(
-              "bands" -> IndexLayout.stageKeepFrame(m, "bands"),
-              "tombstones" -> IndexLayout.stageKeepFrame(m, "tombstones"))
-          })
+          tombOpt.map(tomb => Map(
+            "bands" -> IndexLayout.stageRewriteFrame(spark, path, m,
+              "bands", "band", tomb, idCol, newGen),
+            "tombstones" -> IndexLayout.stageDropFrame(m, "tombstones",
+              newGen))).getOrElse(Map.empty)
         IndexLayout.renewLease(spark, path, lease)
         IndexLayout.flip(spark, path,
           m + ("buckets" -> newBuckets.toString), newGen, staged, carried)
@@ -1109,33 +1011,16 @@ object Dedup {
         s" $maxAppendBatches batches)")
     val m = IndexLayout.requireManifest(spark, path, MinhashIndexFormat)
     val buckets = IndexLayout.intParam(m, path, "buckets")
-    val sizes = IndexLayout.readFrame(spark, path, m, "sizes")
-    val nRows = sizes.count()
-    // dead = tombstones that STRIKE an indexed row. Raw tombstone count
-    // would do: an idempotent takedown pipeline re-submitting its
-    // cumulative delete list re-appends ids a past compaction already
-    // removed (and may name ids never indexed) — counting those as
-    // backlog fires a whole-frame compaction every night with zero
-    // dead rows, and deflating `live` skews the rebucket sizing too.
-    // The semi-join broadcasts the delta-sized distinct tombstones
-    // against a one-column scan of the smallest per-doc frame.
-    val nDead = IndexLayout.loadTombstones(spark, path, m, idCol)
-      .map(t => sizes.select(col(idCol))
-        .join(broadcast(t.distinct()), Seq(idCol), "left_semi").count())
-      .getOrElse(0L)
+    val (nRows, nDead) =
+      IndexLayout.rowsAndDead(spark, MinhashFamily, path, m, idCol)
     val live = nRows - nDead
     val desired = math.max(1L, (live + targetDocsPerBucket - 1)
       / targetDocsPerBucket)
     if (desired >= 2L * buckets) {
       rebucketMinhashIndex(spark, path, desired.toInt, idCol)
       (false, true)
-    } else if (nDead * 100L > live * maxTombstonePct) {
-      compactMinhashTombstones(spark, path, idCol)
-      (true, false)
-    } else if (IndexLayout.maxBatchRootCount(m) > maxAppendBatches) {
-      foldMinhashComposition(spark, path, idCol)
-      (true, false)
-    } else (false, false)
+    } else (IndexLayout.compactOrFold(spark, MinhashFamily, path, m, idCol,
+      live, nDead, maxTombstonePct, maxAppendBatches), false)
   }
 
   /** DEFAULT doc-id bucket count for the stored shingle/size frames of
@@ -1167,6 +1052,23 @@ object Dedup {
     * path-based verbs thread it from the manifest automatically. */
   private[graft] def idBucket(id: Column, buckets: Int): Column =
     pmod(xxhash64(id), lit(buckets)).cast("int")
+
+  /** The MinHash family's lifecycle descriptor
+    * ([[graft.ext.IndexLayout.IndexFamily]]): `shingles`/`sizes`
+    * compact per id bucket, `bands` has no id-derived partitioning (a
+    * doc's rows land in every `band=` dir) so it is rewritten whole, and
+    * the buckets a tombstone set touches are its ids' [[idBucket]]s
+    * under the stored count — a literal list of ≤ `buckets` values. */
+  private[graft] val MinhashFamily = IndexLayout.IndexFamily(
+    format = MinhashIndexFormat,
+    idFrame = _ => "sizes",
+    partitioned = _ => Seq("shingles" -> "bucket", "sizes" -> "bucket"),
+    rewritten = Seq("bands" -> "band"),
+    affected = (_, path, m, tomb, idCol) =>
+      tomb.select(idBucket(col(idCol),
+          IndexLayout.intParam(m, path, "buckets")).as("bk"))
+        .distinct()
+        .collect().map(_.getInt(0)).toSeq) // ≤ buckets rows: bounded action
 
   /** Candidate-id sets at or below this many distinct ids take the
     * broadcast semi-join (and, against bucket-partitioned stored

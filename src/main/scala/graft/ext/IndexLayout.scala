@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types.StructType
 
 /** The MANIFEST + GENERATION layout shared by both persisted-index
@@ -957,6 +957,24 @@ private[graft] object IndexLayout {
     writeManifest(spark, path, updated)
   }
 
+  /** The append-commit of every maintenance verb that adds rows: stage
+    * each (frame, rows, partition column) into its fresh batch root
+    * `name/<tag(nextSeq)>` ([[stageAppendBatch]]), then splice every
+    * non-empty one into the composition with ONE [[commitAppend]]. The
+    * stagings write disjoint roots off one fixed manifest, so they run
+    * overlapped ([[inParallel]]): at batch scale each costs mostly fixed
+    * write/commit latency, paid once instead of once per frame. An
+    * all-empty batch commits nothing. The caller holds the lease. */
+  def appendFrames(spark: SparkSession, path: String, m: Map[String, String],
+      frames: Seq[(String, DataFrame, Option[String])],
+      tag: Int => String = seq => s"a$seq"): Unit = {
+    val t = tag(seqOf(m) + 1)
+    val staged = inParallel(frames.map { case (name, df, partCol) =>
+      () => stageAppendBatch(spark, path, name, t, df, partCol).map(name -> _)
+    }).flatten.toMap
+    if (staged.nonEmpty) commitAppend(spark, path, m, staged)
+  }
+
   // ---------------------------------------------------------------
   // compaction staging (no manifest writes here — the orchestrating
   // family verb stages every frame, then flips ONCE)
@@ -1111,10 +1129,6 @@ private[graft] object IndexLayout {
       : (Seq[String], Seq[String]) =
     (Seq(s"$name/g$newGen"), frameEntries(m, name))
 
-  /** Carry a frame UNCHANGED through a flip (e.g. IVF centroids). */
-  def stageKeepFrame(m: Map[String, String], name: String)
-      : (Seq[String], Seq[String]) = (frameEntries(m, name), Seq.empty)
-
   /** Run INDEPENDENT per-frame staging closures concurrently on the
     * shared session. A maintenance verb stages each of its frames into
     * its own fresh generation/batch root — disjoint directories, no
@@ -1129,7 +1143,9 @@ private[graft] object IndexLayout {
     * at every tier, local or cluster.
     *
     * Failure semantics: EVERY closure runs to completion before the
-    * FIRST failure (in argument order) propagates to the caller. An
+    * FIRST failure (in argument order) propagates to the caller, with
+    * every later failure attached to it as suppressed, so a second
+    * frame's error is never swallowed. An
     * early rethrow would return while sibling stagings still write —
     * the caller's lease is released in its `finally`, so a re-run
     * could acquire the lease and race its own `mode(overwrite)` write
@@ -1154,11 +1170,15 @@ private[graft] object IndexLayout {
         // each get() blocks until ITS task finishes — iterating them all
         // awaits every staging, whatever failed in between
         val outcomes = futures.map(fu => scala.util.Try(fu.get()))
-        outcomes.map {
-          case scala.util.Success(a) => a
+        outcomes.collect {
           case scala.util.Failure(e: java.util.concurrent.ExecutionException)
-            if e.getCause != null => throw e.getCause
-          case scala.util.Failure(e) => throw e
+            if e.getCause != null => e.getCause
+          case scala.util.Failure(e) => e
+        } match {
+          case first +: later =>
+            later.filterNot(_ eq first).foreach(first.addSuppressed)
+            throw first
+          case _ => outcomes.map(_.get)
         }
       } finally pool.shutdown()
     }
@@ -1286,23 +1306,29 @@ private[graft] object IndexLayout {
   // tombstones (shared by both families)
   // ---------------------------------------------------------------
 
-  /** Append delete ids as a MANIFEST-COMMITTED tombstone batch —
-    * O(delete-batch), standing data never touched: stage the distinct
-    * ids into the fresh batch root `tombstones/a<nextSeq>` and splice
-    * it into the composition with one [[commitAppend]]. A delete is
-    * therefore atomic-visible exactly like a data append, and a pinned
-    * as-of reader ([[readManifestAt]]) correctly does NOT see deletes
+  /** The delete verb of every `format` layout with a tombstone frame:
+    * append the distinct delete ids as a MANIFEST-COMMITTED tombstone
+    * batch — O(delete-batch), standing data never touched — staged into
+    * the fresh batch root `tombstones/<tag(nextSeq)>` (`a<seq>` for the
+    * batch verbs, `b<seq>_<batchId>` for a streaming micro-batch) and
+    * spliced in by one [[commitAppend]]. A delete is therefore
+    * atomic-visible exactly like a data append, and a pinned as-of
+    * reader ([[readManifestAt]]) correctly does NOT see deletes
     * committed after its seq. An EMPTY id frame commits nothing
     * ([[stageAppendBatch]]'s None — a schema-anchor footer would read
     * back as tombstones-present and tax every later serve with a
     * pointless anti-join). Each batch root holds bare parquet files;
     * legacy `batch_id=N` dirs inside old open roots keep reading
-    * through the stored frame schema unchanged. */
-  def appendTombstones(spark: SparkSession, path: String,
-      m: Map[String, String], ids: DataFrame, idCol: String): Unit =
-    stageAppendBatch(spark, path, "tombstones", s"a${seqOf(m) + 1}",
-      ids.select(col(idCol)).distinct(), None)
-      .foreach(e => commitAppend(spark, path, m, Map("tombstones" -> e)))
+    * through the stored frame schema unchanged. Leased: a tombstone
+    * appended while a compaction is staging would be dropped by the
+    * flip WITHOUT being resolved — a silently undone delete. */
+  def appendTombstones(spark: SparkSession, path: String, format: String,
+      ids: DataFrame, idCol: String,
+      tag: Int => String = seq => s"a$seq"): Unit =
+    withMaintenanceLease(spark, path) { _ =>
+      appendFrames(spark, path, requireManifest(spark, path, format),
+        Seq(("tombstones", ids.select(col(idCol)).distinct(), None)), tag)
+    }
 
   /** The standing tombstone ids, if any — None when no tombstone
     * directory holds committed data, so serves skip the anti-join
@@ -1311,6 +1337,134 @@ private[graft] object IndexLayout {
       m: Map[String, String], idCol: String): Option[DataFrame] =
     readFrameGroups(spark, path, m, "tombstones").reduceOption(_.union(_))
       .map(_.select(col(idCol)))
+
+  /** Frame `name` of the composition minus the rows its standing
+    * tombstones strike — the live rows a rebuild-style verb or a
+    * policy read works from. */
+  def liveRows(spark: SparkSession, path: String, m: Map[String, String],
+      name: String, idCol: String): DataFrame = {
+    val rows = readFrame(spark, path, m, name)
+    loadTombstones(spark, path, m, idCol)
+      .fold(rows)(t => rows.join(t, Seq(idCol), "left_anti"))
+  }
+
+  // ---------------------------------------------------------------
+  // the maintenance lifecycle shared by both index families
+  // ---------------------------------------------------------------
+
+  /** What the shared lifecycle ([[compact]], [[rowsAndDead]],
+    * [[compactOrFold]]) needs to know about an index family:
+    *  - `format`: the manifest format tag every verb validates;
+    *  - `idFrame`: the frame holding one row per indexed id, under the
+    *    stored manifest (its id column types the empty fold set, and
+    *    the autopilots count rows and dead rows on it);
+    *  - `partitioned`: the (frame, partition column) pairs a compaction
+    *    rewrites partition by partition, pruned to the affected ones;
+    *  - `rewritten`: the (frame, partition column) pairs with no
+    *    id-derived partitioning, rewritten whole by every compaction;
+    *  - `affected`: the partition values a (pinned, distinct) tombstone
+    *    set touches, from (session, path, manifest, tombstones, idCol).
+    * Frames in neither list (a quantizer, a codebook) carry through
+    * every flip unchanged. */
+  final case class IndexFamily(
+      format: String,
+      idFrame: Map[String, String] => String,
+      partitioned: Map[String, String] => Seq[(String, String)],
+      rewritten: Seq[(String, String)],
+      affected: (SparkSession, String, Map[String, String], DataFrame,
+        String) => Seq[Any])
+
+  /** Physically remove a family index's tombstoned rows and clear the
+    * tombstones — or, with `foldEvenClean`, FOLD the composition even
+    * when no tombstone exists (an empty tombstone set: nothing is
+    * anti-joined away, and every split partition and batch root
+    * consolidates into the next generation — [[stageCompactFrame]]'s
+    * fold). Without tombstones and without `foldEvenClean` it does
+    * nothing. Cost is pruned to the partitions the tombstones touch for
+    * the family's `partitioned` frames; its `rewritten` frames are
+    * rewritten whole. Readers stay live throughout: every frame is
+    * staged into generation roots nothing references yet, then ONE
+    * [[flip]] replaces the compositions and drops the tombstones
+    * together. A kill before the flip leaves the manifest unchanged
+    * and only overwrite-idempotent staging. */
+  def compact(spark: SparkSession, fam: IndexFamily, path: String,
+      idCol: String, foldEvenClean: Boolean): Unit =
+    // leased across staging AND flip — the whole window in which a
+    // concurrent append/delete would be silently retired or dropped
+    withMaintenanceLease(spark, path) { lease =>
+      val m = requireManifest(spark, path, fam.format)
+      val tombStanding = loadTombstones(spark, path, m, idCol)
+      val tombForFold =
+        if (foldEvenClean && tombStanding.isEmpty)
+          Some(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+            StructType(Seq(frameSchema(m, fam.idFrame(m))(idCol)))))
+        else tombStanding
+      tombForFold.foreach { tombRaw =>
+        val carried = dropRetired(spark, path, m)
+        // the tombstone set feeds the affected-partition discovery and
+        // every staging's anti-join; delta-sized, so one ckptLocal pins
+        // it for all of them. try/finally: a compaction that fails
+        // mid-stage must not leak the pinned 2x-replicated blocks
+        val tomb = Checkpoints.ckptLocal(tombRaw.distinct())
+        try {
+          val affected = fam.affected(spark, path, m, tomb, idCol)
+          val newGen = intParam(m, path, "gen") + 1
+          // every staging writes a disjoint newGen root from one fixed
+          // manifest + the pinned tombstone set — independent jobs,
+          // overlapped so the verb costs ~the slowest staging
+          val staged = inParallel(
+            fam.partitioned(m).map { case (name, p) => () =>
+              name -> stageCompactFrame(spark, path, m, name, p, affected,
+                tomb, idCol, newGen) } ++
+            fam.rewritten.map { case (name, p) => () =>
+              name -> stageRewriteFrame(spark, path, m, name, p, tomb,
+                idCol, newGen) }).toMap +
+            ("tombstones" -> stageDropFrame(m, "tombstones", newGen))
+          // heartbeat + still-the-owner assertion right before the commit
+          renewLease(spark, path, lease)
+          flip(spark, path, m, newGen, staged, carried)
+        } finally Checkpoints.free(tomb)
+      }
+    }
+
+  /** The autopilots' policy read: (rows, dead rows) of the family's
+    * `idFrame`. Dead = tombstones that STRIKE an indexed row, not raw
+    * tombstones: an idempotent takedown pipeline re-submitting its
+    * cumulative delete list re-appends ids a past compaction already
+    * removed (and may name ids never indexed) — counting those as
+    * backlog would fire a compaction every night with zero dead rows.
+    * The semi-join broadcasts the delta-sized distinct tombstones
+    * against a one-column scan of the per-id frame. */
+  def rowsAndDead(spark: SparkSession, fam: IndexFamily, path: String,
+      m: Map[String, String], idCol: String): (Long, Long) = {
+    val rows = readFrame(spark, path, m, fam.idFrame(m))
+    val nRows = rows.count()
+    val nDead = loadTombstones(spark, path, m, idCol)
+      .map(t => rows.select(col(idCol))
+        .join(broadcast(t.distinct()), Seq(idCol), "left_semi").count())
+      .getOrElse(0L)
+    (nRows, nDead)
+  }
+
+  /** The autopilots' shared tail, after each family's own heavier
+    * trigger (rebucket, retrain) declined: COMPACT when the dead rows
+    * exceed `maxTombstonePct` of the live ones; otherwise FOLD when any
+    * frame's composition holds more than `maxAppendBatches` committed
+    * batch roots ([[maxBatchRootCount]] — a manifest lookup, no read).
+    * The fold is the append-only lifecycle's trigger: an index with no
+    * deletes never compacts, yet every committed append adds one
+    * union-ed scan to every serve until a compaction folds the batch
+    * roots; it is checked last because a compaction folds them too.
+    * @return whether either fired (a fold IS a compaction, with an
+    *         empty tombstone set) */
+  def compactOrFold(spark: SparkSession, fam: IndexFamily, path: String,
+      m: Map[String, String], idCol: String, live: Long, nDead: Long,
+      maxTombstonePct: Int, maxAppendBatches: Int): Boolean = {
+    val backlog = nDead * 100L > live * maxTombstonePct
+    val fire = backlog || maxBatchRootCount(m) > maxAppendBatches
+    if (fire) compact(spark, fam, path, idCol, foldEvenClean = !backlog)
+    fire
+  }
 
   /** One frame's health line in an [[describeIndex]] report. */
   final case class FrameInfo(name: String, nEntries: Int)

@@ -409,6 +409,34 @@ object Similarity {
     * ([[graft.ext.IndexLayout]]). */
   val IvfIndexFormat = "graft-ivf-index"
 
+  /** The IVF family's lifecycle descriptor
+    * ([[graft.ext.IndexLayout.IndexFamily]]): `lists` — plus the
+    * parallel full-precision `fp` frame of a quantized (int8 / pq)
+    * storage, gated on the same stored `storage` parameter serve and
+    * append read — compact per `list_id`; nothing is rewritten whole,
+    * and the quantizers (centroids, pq codebook) carry through every
+    * flip. Lists are partitioned by `list_id`, not by id, so the lists
+    * a tombstone set touches are DISCOVERED with a column-pruned
+    * (id, list_id) semi-join — one slim column plus free partition
+    * metadata, no embedding bytes, ≤ nList rows collected. */
+  private[graft] val IvfFamily = IndexLayout.IndexFamily(
+    format = IvfIndexFormat,
+    idFrame = m => if (quantized(m)) "fp" else "lists",
+    partitioned = m => ("lists" -> "list_id") +:
+      (if (quantized(m)) Seq("fp" -> "list_id") else Seq.empty),
+    rewritten = Seq.empty,
+    affected = (spark, path, m, tomb, idCol) =>
+      IndexLayout.readFrame(spark, path, m, "lists")
+        .select(col(idCol), col("list_id"))
+        .join(tomb, Seq(idCol), "left_semi")
+        .select("list_id").distinct()
+        .collect().map(_.get(0)).toSeq) // ≤ nList rows: bounded
+
+  /** An int8 or pq storage: a probe frame of codes plus a parallel
+    * full-precision `fp` frame holding the same rows. */
+  private def quantized(m: Map[String, String]): Boolean =
+    m.getOrElse("storage", "fp") != "fp"
+
   /** Loud per-row dimension guard against the index manifest's `dim`:
     * a wrong-dimension vector would otherwise score a silently-wrong
     * truncated cosine (the kernels min() the lengths). Codegen'd
@@ -653,37 +681,30 @@ object Similarity {
     val assigned = ivfAssign(dimChecked(batch, vecCol,
       IndexLayout.intParam(m, path, "dim"), "appendToIvfIndex"),
       cent, vecCol, idCol)
-    val storage = m.getOrElse("storage", "fp")
-    val tag = s"a${IndexLayout.seqOf(m) + 1}"
-    val staged: Map[String, String] =
-      if (storage == "int8" || storage == "pq") {
-        // the two frames MUST hold identical rows, and `batch` may not
-        // be re-execution-stable (a directory a producer appends to
-        // between the writes, a sampled upstream) — one batch-sized
-        // ckptLocal pins the assignment for both staged writes, freed
-        // once they commit.
-        val pinned = Checkpoints.ckptLocal(assigned)
-        try {
-          val encoded =
-            if (storage == "int8") quantizedLists(pinned, vecCol, idCol)
-            else pqLists(residualized(pinned, cent, vecCol, idCol),
-              // encode with the STORED codebook and STORED shape (the pq
-              // analog of the immutable coarse quantizer): retraining or
-              // re-shaping per batch would invalidate every stored code
-              loadPqCodebook(spark, path, m), idCol,
-              IndexLayout.intParam(m, path, "numSub"),
-              IndexLayout.intParam(m, path, "numCents"))
-          Seq(
-            "fp" -> IndexLayout.stageAppendBatch(spark, path, "fp", tag,
-              pinned, Some("list_id")),
-            "lists" -> IndexLayout.stageAppendBatch(spark, path, "lists",
-              tag, encoded, Some("list_id")))
-            .collect { case (n, Some(e)) => n -> e }.toMap
-        } finally Checkpoints.free(pinned)
-      } else
-        IndexLayout.stageAppendBatch(spark, path, "lists", tag, assigned,
-          Some("list_id")).map("lists" -> _).toMap
-    if (staged.nonEmpty) IndexLayout.commitAppend(spark, path, m, staged)
+    if (quantized(m)) {
+      // the two frames MUST hold identical rows, and `batch` may not
+      // be re-execution-stable (a directory a producer appends to
+      // between the writes, a sampled upstream) — one batch-sized
+      // ckptLocal pins the assignment for both staged writes, freed
+      // once they commit.
+      val pinned = Checkpoints.ckptLocal(assigned)
+      try {
+        val encoded =
+          if (m("storage") == "int8") quantizedLists(pinned, vecCol, idCol)
+          else pqLists(residualized(pinned, cent, vecCol, idCol),
+            // encode with the STORED codebook and STORED shape (the pq
+            // analog of the immutable coarse quantizer): retraining or
+            // re-shaping per batch would invalidate every stored code
+            loadPqCodebook(spark, path, m), idCol,
+            IndexLayout.intParam(m, path, "numSub"),
+            IndexLayout.intParam(m, path, "numCents"))
+        IndexLayout.appendFrames(spark, path, m, Seq(
+          ("fp", pinned, Some("list_id")),
+          ("lists", encoded, Some("list_id"))))
+      } finally Checkpoints.free(pinned)
+    } else
+      IndexLayout.appendFrames(spark, path, m,
+        Seq(("lists", assigned, Some("list_id"))))
   }
 
   /** ANN top-k against a [[saveIvfIndex]]-persisted index: identical
@@ -918,16 +939,9 @@ object Similarity {
     * with a pointless compaction). The emptiness probe is one job over
     * the delta-sized delete set. */
   def deleteFromIvfIndex(ids: DataFrame, path: String,
-      idCol: String = "vec_id"): Unit = {
-    val spark = ids.sparkSession
-    // leased: a tombstone appended while a compaction is staging would
-    // be dropped by the flip WITHOUT being resolved — a silently
-    // undone delete (see deleteFromMinhashIndex)
-    IndexLayout.withMaintenanceLease(spark, path) { _ =>
-      val m = IndexLayout.requireManifest(spark, path, IvfIndexFormat)
-      IndexLayout.appendTombstones(spark, path, m, ids, idCol)
-    }
-  }
+      idCol: String = "vec_id"): Unit =
+    IndexLayout.appendTombstones(ids.sparkSession, path, IvfIndexFormat,
+      ids, idCol)
 
   /** The standing tombstone ids of a [[saveIvfIndex]] index, if any
     * (None once [[compactIvfTombstones]] has cleared them — the
@@ -959,7 +973,7 @@ object Similarity {
     * already served before any compaction ran. */
   def compactIvfTombstones(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String = "vec_id"): Unit =
-    compactIvf(spark, path, idCol, foldEvenClean = false)
+    IndexLayout.compact(spark, IvfFamily, path, idCol, foldEvenClean = false)
 
   /** FOLD the composition of a [[saveIvfIndex]] index even when no
     * tombstone exists — [[graft.ext.Dedup.foldMinhashComposition]]'s
@@ -971,70 +985,7 @@ object Similarity {
     * fired by [[maintainIvfIndex]]'s composition-length trigger. */
   def foldIvfComposition(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String = "vec_id"): Unit =
-    compactIvf(spark, path, idCol, foldEvenClean = true)
-
-  private def compactIvf(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, foldEvenClean: Boolean): Unit = {
-    // leased across staging AND flip — the whole window in which a
-    // concurrent append/delete would be silently retired or dropped
-    IndexLayout.withMaintenanceLease(spark, path) { lease =>
-      val m = IndexLayout.requireManifest(spark, path, IvfIndexFormat)
-      val tombStanding = IndexLayout.loadTombstones(spark, path, m, idCol)
-      // empty tombstones make the pruned compaction a pure composition
-      // FOLD: nothing anti-joined away, batch roots consolidate
-      val tombForFold =
-        if (foldEvenClean && tombStanding.isEmpty)
-          Some(spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(
-              Seq(IndexLayout.frameSchema(m, "lists")(idCol)))))
-        else tombStanding
-      tombForFold.foreach { tombRaw =>
-        val carried = IndexLayout.dropRetired(spark, path, m)
-        val tomb = Checkpoints.ckptLocal(tombRaw.distinct())
-        // try/finally: a compaction that fails mid-stage must not leak
-        // the pinned 2x-replicated tombstone blocks (the streaming-ingest
-        // leak class, closed the same way)
-        try {
-          val affected = IndexLayout.readFrame(spark, path, m, "lists")
-            .select(col(idCol), col("list_id"))
-            .join(tomb, Seq(idCol), "left_semi")
-            .select("list_id").distinct()
-            .collect().map(_.get(0)).toSeq // ≤ nList rows: bounded
-          val newGen = IndexLayout.intParam(m, path, "gen") + 1
-          // the lists staging and (for quantized layouts) the parallel
-          // fp staging write disjoint newGen roots from one fixed
-          // manifest — overlapped via IndexLayout.inParallel below
-          val quantized = m.getOrElse("storage", "fp") != "fp"
-          val framesStaged = IndexLayout.inParallel(
-            Seq(() => IndexLayout.stageCompactFrame(spark, path, m,
-              "lists", "list_id", affected, tomb, idCol, newGen)) ++
-            (if (quantized)
-              Seq(() => IndexLayout.stageCompactFrame(spark, path, m,
-                "fp", "list_id", affected, tomb, idCol, newGen))
-             else Seq.empty))
-          val staged = Map(
-            "lists" -> framesStaged.head,
-            "centroids" -> IndexLayout.stageKeepFrame(m, "centroids"),
-            "tombstones" -> IndexLayout.stageDropFrame(m, "tombstones", newGen)) ++
-            // a quantized layout (int8 / pq) carries the parallel
-            // full-precision frame — compacted with the same affected
-            // lists and the same flip (staged above, concurrently with
-            // the lists). Gated on the SAME storage
-            // parameter serve and append read (one source of truth); a
-            // manifest claiming a quantized storage without a stored fp
-            // schema fails loudly inside the staging read. The pq
-            // codebook frame, like the centroids, carries through every
-            // flip untouched (both quantizers are immutable after
-            // build).
-            (if (quantized) Map("fp" -> framesStaged(1)) else Map.empty)
-          // heartbeat + still-the-owner assertion right before the commit
-          IndexLayout.renewLease(spark, path, lease)
-          IndexLayout.flip(spark, path, m, newGen, staged, carried)
-        } finally Checkpoints.free(tomb)
-      }
-    }
-  }
+    IndexLayout.compact(spark, IvfFamily, path, idCol, foldEvenClean = true)
 
   /** REFRESH a persisted [[saveIvfIndex]] index to the next corpus
     * epoch — [[graft.ext.Dedup.refreshMinhashIndex]]'s composite on
@@ -1158,19 +1109,15 @@ object Similarity {
       val carried = IndexLayout.dropRetired(spark, path, m)
       // full-precision survivors: the frame that still holds real
       // vectors (the quantized storages' lists frame holds codes)
-      val fullFrame = if (storage == "fp") "lists" else "fp"
+      val fullFrame = IvfFamily.idFrame(m)
       val fullSchema = IndexLayout.frameSchema(m, fullFrame)
       require(fullSchema.fieldNames.contains(idCol) &&
         fullSchema.fieldNames.contains(vecCol),
         s"retrainIvfIndex: stored '$fullFrame' frame has columns " +
           s"${fullSchema.fieldNames.mkString(",")} — expected id '$idCol' " +
           s"and vector '$vecCol' (pass the index's own column names)")
-      val standing = IndexLayout.readFrame(spark, path, m, fullFrame)
+      val survivors = IndexLayout.liveRows(spark, path, m, fullFrame, idCol)
         .select(col(idCol), col(vecCol))
-      val survivors = IndexLayout.loadTombstones(spark, path, m, idCol) match {
-        case Some(tomb) => standing.join(tomb, Seq(idCol), "left_anti")
-        case None => standing
-      }
       val newGen = IndexLayout.intParam(m, path, "gen") + 1
       // the new quantizer: ivfCentroids returns a driver-LOCAL relation
       // (seeds collected, Lloyd iterations collected) — already
@@ -1302,12 +1249,8 @@ object Similarity {
       : (Long, Boolean) = {
     val m = IndexLayout.requireManifest(spark, path, IvfIndexFormat)
     val cent = IndexLayout.readFrame(spark, path, m, "centroids")
-    val lists = IndexLayout.readFrame(spark, path, m, "lists")
+    val live = IndexLayout.liveRows(spark, path, m, "lists", idCol)
       .select(col(idCol), col("list_id"))
-    val live = IndexLayout.loadTombstones(spark, path, m, idCol) match {
-      case Some(tomb) => lists.join(tomb, Seq(idCol), "left_anti")
-      case None => lists
-    }
     def occ(df: DataFrame): Map[Long, Long] =
       df.groupBy("list_id").agg(count(lit(1)).as("c"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -1390,40 +1333,23 @@ object Similarity {
     require(maxTombstonePct > 0 && maxAppendBatches > 0,
       s"maintainIvfIndex($maxTombstonePct%, $maxAppendBatches batches)")
     val m = IndexLayout.requireManifest(spark, path, IvfIndexFormat)
-    val fullFrame = if (m.getOrElse("storage", "fp") == "fp") "lists" else "fp"
-    val rows = IndexLayout.readFrame(spark, path, m, fullFrame)
-    val nRows = rows.count()
-    val tomb = IndexLayout.loadTombstones(spark, path, m, idCol)
-      .map(t => broadcast(t.distinct()))
-    // dead = tombstones striking an indexed row (see
-    // maintainMinhashIndex: a re-submitted cumulative delete list must
-    // not re-fire the compaction nightly against zero dead rows)
-    val nDead = tomb
-      .map(t => rows.select(col(idCol)).join(t, Seq(idCol), "left_semi").count())
-      .getOrElse(0L)
+    val (nRows, nDead) = IndexLayout.rowsAndDead(spark, IvfFamily, path, m, idCol)
     val live = nRows - nDead
     val liveOcc: Map[Long, Long] =
       if (live == 0 || !m.contains("trainOcc")) Map.empty
-      else {
-        val struck = rows.select(col(idCol), col("list_id"))
-        tomb.map(t => struck.join(t, Seq(idCol), "left_anti"))
-          .getOrElse(struck)
-          .groupBy(col("list_id").cast("long").as("l"))
-          .agg(count(lit(1)).as("c"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      }
+      else IndexLayout.liveRows(spark, path, m, IvfFamily.idFrame(m), idCol)
+        .groupBy(col("list_id").cast("long").as("l"))
+        .agg(count(lit(1)).as("c"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val retrain = liveOcc.nonEmpty &&
       occTvMu(liveOcc, parseOcc(m("trainOcc"))) > imbalanceTvThresholdMu
-    val backlog = !retrain && nDead * 100L > live * maxTombstonePct
-    val fanout = !retrain && !backlog &&
-      IndexLayout.maxBatchRootCount(m) > maxAppendBatches
-    if (retrain)
+    if (retrain) {
       retrainIvfIndex(spark, path,
         nList = IndexLayout.intParam(m, path, "nList"), nIters = 1,
         vecCol = vecCol, idCol = idCol)
-    else if (backlog) compactIvfTombstones(spark, path, idCol)
-    else if (fanout) foldIvfComposition(spark, path, idCol)
-    (retrain, backlog || fanout)
+      (true, false)
+    } else (false, IndexLayout.compactOrFold(spark, IvfFamily, path, m,
+      idCol, live, nDead, maxTombstonePct, maxAppendBatches))
   }
 
   /** LSH-bucketed ANN: corpus and queries are hashed with the same

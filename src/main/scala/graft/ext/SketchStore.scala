@@ -76,8 +76,7 @@ object SketchStore {
   }
 
   /** Append new days' sketch rows incrementally — one MANIFEST-
-    * COMMITTED batch ([[IndexLayout.stageAppendBatch]] +
-    * [[IndexLayout.commitAppend]]): staged rows are invisible until
+    * COMMITTED batch ([[IndexLayout.appendFrames]]): staged rows are invisible until
     * the single manifest splice, a killed append leaves only an
     * unreferenced batch root (swept at the next fold), and a replay
     * overwrites the same deterministic root. Leased like every
@@ -86,11 +85,8 @@ object SketchStore {
     val spark = days.sparkSession
     IndexLayout.withMaintenanceLease(spark, path) { _ =>
       val m = requireStore(spark, path, kind)
-      val dayCol = IndexLayout.param(m, path, "dayCol")
-      IndexLayout.stageAppendBatch(spark, path, "sketches",
-        s"a${IndexLayout.seqOf(m) + 1}", days, Some(dayCol))
-        .foreach(e =>
-          IndexLayout.commitAppend(spark, path, m, Map("sketches" -> e)))
+      IndexLayout.appendFrames(spark, path, m, Seq(
+        ("sketches", days, Some(IndexLayout.param(m, path, "dayCol")))))
     }
   }
 

@@ -490,36 +490,19 @@ object Streaming {
   private def indexDeleteStream(ids: DataFrame, indexPath: String,
       format: String, checkpoint: String, idCol: String, trigger: Trigger)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.ext.IndexLayout
     perBatchSink(ids, checkpoint, trigger) { (batch, batchId) =>
-      val spark = batch.sparkSession
-      // per-micro-batch LEASE: each batch is one maintenance commit of
-      // a tombstone batch root, so it takes the same lease as the
-      // batch verbs — a compaction that starts between micro-batches
-      // holds the lease and the next batch FAILS LOUDLY (and replays
-      // after the compaction releases) instead of writing a tombstone
-      // the flip would silently resolve away
-      IndexLayout.withMaintenanceLease(spark, indexPath) { _ =>
-        // manifest re-read per micro-batch: cheap (one small file), and
-        // it pins the current composition even if an OFFLINE compaction
-        // bumped the generation between stream runs. The batch root is
-        // named `b<seq>_<batchId>`: a replay that found the manifest
-        // unchanged overwrites its own root (idempotent); a replay
-        // whose first attempt DID commit stages a fresh uniquely-named
-        // root, whose duplicate ids are harmless by the id-shadowing
-        // contract and cleared at the next compaction — no tombstone is
-        // ever lost, and no name can collide with a live or retired
-        // root of an earlier epoch. An EMPTY micro-batch commits
-        // nothing (stageAppendBatch's None: a schema-anchor footer
-        // would read back as tombstones-present, taxing every later
-        // serve with a pointless anti-join).
-        val m = IndexLayout.requireManifest(spark, indexPath, format)
-        IndexLayout.stageAppendBatch(spark, indexPath, "tombstones",
-          s"b${IndexLayout.seqOf(m) + 1}_$batchId",
-          batch.select(col(idCol)).distinct().coalesce(1), None)
-          .foreach(e => IndexLayout.commitAppend(spark, indexPath, m,
-            Map("tombstones" -> e)))
-      }
+      // one leased tombstone commit per micro-batch: a compaction that
+      // starts between micro-batches holds the lease and the next batch
+      // FAILS LOUDLY (and replays after the compaction releases) instead
+      // of writing a tombstone the flip would silently resolve away.
+      // The manifest is re-read per batch, and the root is named
+      // `b<seq>_<batchId>`: a replay that found the manifest unchanged
+      // overwrites its own root (idempotent); a replay whose first
+      // attempt DID commit stages a fresh uniquely-named root, whose
+      // duplicate ids are harmless by the id-shadowing contract and
+      // cleared at the next compaction. coalesce(1): one file per batch.
+      graft.ext.IndexLayout.appendTombstones(batch.sparkSession, indexPath,
+        format, batch.coalesce(1), idCol, seq => s"b${seq}_$batchId")
     }
   }
 

@@ -2710,6 +2710,17 @@ class ExtSpec extends SparkSpec {
       .toDF("k", "v")
     eqBoth(withNullA, withNullB) // true
     eqBoth(withNullA, Seq((Some(1L), "a"), (None, "n")).toDF("k", "v"))
+    // nullability is not schema: a non-null long equals a nullable one
+    eqBoth(base, withNullA.limit(0).union(base))
+    // a user column may carry the old count-column names
+    eqBoth(Seq((1L, 2L)).toDF("__ca", "__cb"), Seq((1L, 2L)).toDF("__ca", "__cb"))
+    // column names, order or types that differ fail loudly, never compare
+    Seq(Seq((1L, "a")).toDF("k", "w"), Seq(("a", 1L)).toDF("v", "k"),
+        Seq((1, "a")).toDF("k", "v")).foreach { other =>
+      val err = intercept[IllegalArgumentException](
+        graft.analytics.ExtPipelines.multisetEq(base, other))
+      assert(err.getMessage.contains("differ in schema"), err.getMessage)
+    }
   }
 
   test("saveMinhashIndexFromFrames: a per-doc filter of shared frames equals a from-text build") {
@@ -2789,8 +2800,10 @@ class ExtSpec extends SparkSpec {
         () => { Thread.sleep(400); slowDone.set(true); 2 },
         () => { Thread.sleep(100); throw new IllegalStateException("second") }))
     }
-    // the FIRST failure in argument order is the one thrown...
+    // the FIRST failure in argument order is the one thrown, with every
+    // later failure attached as suppressed rather than swallowed...
     assert(e.getMessage == "first")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("second"))
     // ...and only after every sibling finished: no zombie staging
     // writer survives the call (the lease-release race ADVICE flagged)
     assert(slowDone.get,

@@ -322,8 +322,7 @@ class PropertySpec extends SparkSpec {
           def compactCycle(doomed: Set[Long]): Unit = {
             val del = doomed.intersect(live.keySet)
             if (del.nonEmpty) {
-              val m = IndexLayout.readManifest(spark, path).get
-              IndexLayout.appendTombstones(spark, path, m,
+              IndexLayout.appendTombstones(spark, path, "graft-proptest",
                 del.toSeq.toDF("id"), "id")
               val m1 = IndexLayout.readManifest(spark, path).get
               val tomb = IndexLayout.loadTombstones(spark, path, m1, "id").get
@@ -384,8 +383,8 @@ class PropertySpec extends SparkSpec {
       Seq((1L, "a,b"), (2L, "plain")).toDF("id", "pv")
         .repartition(col("pv")).write.partitionBy("pv")
         .parquet(IndexLayout.genRoot(path, "data", 0))
-      val m = IndexLayout.readManifest(spark, path).get
-      IndexLayout.appendTombstones(spark, path, m, Seq(2L).toDF("id"), "id")
+      IndexLayout.appendTombstones(spark, path, "graft-proptest",
+        Seq(2L).toDF("id"), "id")
       val m1 = IndexLayout.readManifest(spark, path).get
       val tomb = IndexLayout.loadTombstones(spark, path, m1, "id").get
       val e = intercept[IllegalStateException] {
@@ -599,7 +598,7 @@ class PropertySpec extends SparkSpec {
               if (doomed.nonEmpty) {
                 tombstoned ++= doomed
                 model.put(seq + 1, appended -- tombstoned)
-                IndexLayout.appendTombstones(spark, path, m,
+                IndexLayout.appendTombstones(spark, path, "graft-proptest",
                   doomed.toDF("id"), "id")
               }
             case 'k' | 'c' =>
