@@ -42,14 +42,11 @@ object Pipelines {
   def pivotDurations(spark: SparkSession, dir: String): DataFrame =
     Viewing.pivotDurations(durationByCategory(spark, dir))
 
-  /** Flagship §3.2 pipeline (also `SparkEntry.entry`), faithful
-    * branch+join shape. */
+  /** Flagship §3.2 pipeline (also `SparkEntry.entry`): one per-user
+    * aggregation — one scan, one shuffle, no join — then E4–E7. Both
+    * `flagship_profile` and `flagship_profile_fast` run this body. */
   def flagshipProfile(spark: SparkSession, dir: String): DataFrame =
     Viewing.fullPipeline(Tables.events(spark, dir))
-
-  /** Single-pass flagship (same result + oracle, one shuffle, no join). */
-  def flagshipProfileFast(spark: SparkSession, dir: String): DataFrame =
-    Viewing.fullPipelineFast(Tables.events(spark, dir))
 
   /** Incremental flagship: mergeable per-user state over a history slice
     * + a fresh slice, merged and finalized — hash-identical to the

@@ -14,8 +14,10 @@ import graft.sources.LogSource
   *
   * Deliberate divergences from the reference (SURVEY.md §7.4), all
   * flagged here: the pivot uses an EXPLICIT category list (static schema,
-  * kills the hidden distinct job, makes per-day unions alignable), and
-  * the scan declares its schema (no inference pass).
+  * kills the hidden distinct job, makes per-day unions alignable), the
+  * scan declares its schema (no inference pass), and the month report's
+  * device-count and pivot branches plus their join run as ONE
+  * per-contract aggregation, so the JSON is parsed once, not twice.
   */
 object ReferenceEtl {
 
@@ -85,18 +87,20 @@ object ReferenceEtl {
 
   /** §3.2 ETL_process + OLAP_process — the flagship full pipeline from a
     * flattened log frame to the 10-column analytics row
-    * (`ETL_full_output/ETL_full.py:74-90,140-150`). */
+    * (`ETL_full_output/ETL_full.py:74-90,140-150`), as one per-contract
+    * aggregation over one scan ([[ViewingCore.fullPipeline]]). */
   def fullPipeline(flat: DataFrame): DataFrame =
     ViewingCore.fullPipeline(schema)(flat)
 
-  /** §3.1 one-day pipeline: no zero-fill (nulls survive, faithful), plus
-    * the literal Date column (`ETL_one_day/ETL_one_day.py:37-40`). */
+  /** §3.1 one-day pipeline: per-contract category sums in one
+    * aggregation, no zero-fill (nulls survive, faithful), plus the
+    * literal Date column (`ETL_one_day/ETL_one_day.py:37-40`). */
   def oneDayPipeline(flat: DataFrame, date: String): DataFrame =
-    pivotDurations(durationByCategory(validRows(categorize(flat))), fillZero = false)
-      .withColumn("Date", lit(date))
+    ViewingCore.oneDayPipeline(schema, date)(flat)
 
   /** End-to-end over daily JSONL files, one multi-path scan (S2 — the
-    * strategy the reference measured 2.45x faster, SURVEY.md §6). */
+    * strategy the reference measured 2.45x faster, SURVEY.md §6). A
+    * reversed date range fails in [[LogSource.datePaths]]. */
   def runFull(spark: SparkSession, base: String, fromDate: String, toDate: String): DataFrame =
     fullPipeline(LogSource.flattenSource(
       LogSource.readDays(spark, LogSource.datePaths(base, fromDate, toDate))))

@@ -87,66 +87,14 @@ object Viewing {
   def pivotDurations(df: DataFrame, fillZero: Boolean = true): DataFrame =
     ViewingCore.pivotDurations(schema, fillZero)(df)
 
-  /** §3.2 flagship shape: two aggregate branches over one scan,
-    * re-converging in J1, then E4–E7 enrichment. */
+  /** §3.2 flagship: one per-user aggregation (one scan, one shuffle, no
+    * join), then E4–E7 enrichment — see [[ViewingCore.fullPipeline]]. */
   def fullPipeline(events: DataFrame): DataFrame =
     ViewingCore.fullPipeline(schema)(events)
 
-  /** Single-pass flagship: same output as [[fullPipeline]], better plan.
-    * The faithful shape (two aggregate branches + join, reference
-    * `ETL_full.py:74-90`) scans the input twice and shuffles three times;
-    * here both branches fold into ONE conditional aggregation —
-    * one scan, one shuffle, no join. At 100 TB that is the difference
-    * between reading 200 TB + three exchanges and reading 100 TB + one.
-    *
-    * Equivalence: TotalDevices counts all rows pre-filter (faithful A2);
-    * a user joins iff the stats branch kept ≥1 valid row, reproduced by
-    * `n_valid > 0`; pivot cells for absent categories are null → 0 via
-    * coalesce, matching na.fill(0). Checked against the same oracle SQL
-    * as the faithful query. */
-  def fullPipelineFast(events: DataFrame): DataFrame =
-    profileFinalize(profileState(events))
-
-  /** Mergeable per-user aggregation STATE of the flagship pipeline: the
-    * four per-category cent sums plus the device/valid row counts. Every
-    * cell is an associative sum/count, so states computed over disjoint
-    * event slices merge exactly via [[mergeProfileStates]] — the
-    * property that turns the flagship into an INCREMENTAL daily job at
-    * 100 TB: aggregate only the new day (tiny), merge with yesterday's
-    * state (per-user rows, orders of magnitude smaller than raw events),
-    * finalize. No history rescan, ever. */
-  def profileState(events: DataFrame): DataFrame = {
-    val cat = categorize(events).withColumn("vc", cents)
-    val valid = col("user_id") =!= 0 && col("Type") =!= "Error"
-    val catSums = categories.map(c =>
-      coalesce(sum(when(valid && col("Type") === c, col("vc"))), lit(0L)).as(c))
-    cat.groupBy("user_id").agg(
-      catSums.head,
-      catSums.tail :+ count(lit(1)).as("TotalDevices")
-        :+ count(when(valid, lit(1))).as("n_valid"): _*)
-  }
-
-  /** Merge two disjoint-slice states: per-user cell-wise sums. */
-  def mergeProfileStates(a: DataFrame, b: DataFrame): DataFrame = {
-    val cells = categories ++ Seq("TotalDevices", "n_valid")
-    a.unionByName(b).groupBy("user_id")
-      .agg(sum(cells.head).as(cells.head),
-        cells.tail.map(c => sum(c).as(c)): _*)
-  }
-
-  /** Finalize a state into the flagship output: drop users with no valid
-    * rows (join semantics of the faithful shape), then E4–E7 enrich. */
-  def profileFinalize(state: DataFrame): DataFrame = {
-    val joined = state
-      .filter(col("user_id") =!= 0 && col("n_valid") > 0)
-      .select(("user_id" +: categories :+ "TotalDevices").map(col): _*)
-    val enriched = Enrich.mostWatch(catLabels)(joined)
-    Enrich.activityLevel(categories)(Enrich.taste(catLabels)(enriched))
-  }
-
-  /** Incremental flagship: state over the history slice merged with
-    * state over the new slice, finalized — hash-identical to the
-    * single-pass [[fullPipelineFast]] (same oracle) because every state
+  /** Incremental flagship: [[ViewingCore.profileState]] over the history
+    * slice merged with the state over the new slice, finalized —
+    * hash-identical to [[fullPipeline]] (same oracle) because every state
     * cell is associative. `splitDate` models the history/new-day cut. */
   def incrementalProfile(events: DataFrame, splitDate: String): DataFrame = {
     // null ts satisfies neither <= nor > — route it to the history slice
@@ -156,17 +104,17 @@ object Viewing {
     val history = events.filter(
       to_date(col("ts")) <= lit(splitDate) || col("ts").isNull)
     val fresh = events.filter(to_date(col("ts")) > lit(splitDate))
-    profileFinalize(mergeProfileStates(profileState(history), profileState(fresh)))
+    val state = ViewingCore.profileState(schema) _
+    ViewingCore.profileFinalize(schema)(
+      ViewingCore.mergeProfileStates(schema)(state(history), state(fresh)))
   }
 
-  /** §3.1 one-day analog: filter to one calendar day, pivot WITHOUT
-    * zero-fill (faithful nulls), add the literal Date column (E8). */
+  /** §3.1 one-day analog: filter to one calendar day, per-user category
+    * sums in one aggregation WITHOUT zero-fill (faithful nulls), add the
+    * literal Date column (E8). */
   def oneDayPipeline(events: DataFrame, date: String): DataFrame =
-    pivotDurations(
-      durationByCategory(validRows(categorize(
-        events.filter(to_date(col("ts")) === lit(date))))),
-      fillZero = false)
-      .withColumn("Date", lit(date))
+    ViewingCore.oneDayPipeline(schema, date)(
+      events.filter(to_date(col("ts")) === lit(date)))
 
   /** U1 analog (method 2, `test_method2_eachFILE.py:116-133`): per-day
     * aggregate + union. Kept for parity/benchmark comparison; the single

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * OPERATOR logic — E1's first-match-wins when-chain, P3+P4's
   * valid-row filter, A1's partial-aggregated category sums, A2's
   * faithful row-count "devices", A3+E9's explicit-values pivot, and
-  * the §3.2 flagship composition — lives once, in [[ViewingCore]],
+  * the §3.1/§3.2 one-aggregation pipelines — lives once, in [[ViewingCore]],
   * and both deployments are bindings of it.
   *
   * @param idCol     the grouping entity (Contract / user_id)
@@ -99,19 +99,60 @@ object ViewingCore {
     if (fillZero) wide.na.fill(0) else wide
   }
 
-  /** §3.2 flagship shape: two aggregate branches over one scan
-    * (pre-filter device counts + valid-row category pivot),
-    * re-converging in J1, then the E4–E7 enrichment chain. */
-  def fullPipeline(s: ViewingSchema)(df: DataFrame): DataFrame = {
-    // projectDevice = false: the (id, device) projection is a no-op
-    // under column pruning, and skipping it keeps the pipeline usable
-    // on frames that carry no device column at all (the reference's
-    // own OLAP stage never reads it either)
-    val devices = deviceCountsFaithful(s, projectDevice = false)(df)
-    val stats =
-      pivotDurations(s)(durationByCategory(s)(validRows(s)(categorize(s)(df))))
-    val joined = stats.join(devices, Seq(s.idCol), "inner")
+  /** §3.1 one-day shape: per-category sums over valid rows as ONE
+    * conditional aggregation — one `groupBy(idCol)`, one shuffle — with
+    * the same cells as `pivotDurations(fillZero = false)` over A1: no
+    * zero-fill, so a category with no valid rows stays null (faithful).
+    * Then E8's literal `Date` column. */
+  def oneDayPipeline(s: ViewingSchema, date: String)(df: DataFrame): DataFrame = {
+    val sums = s.categories.map(c => sum(when(col("Type") === c, s.measure)).as(c))
+    validRows(s)(categorize(s)(df))
+      .groupBy(s.idCol).agg(sums.head, sums.tail: _*)
+      .withColumn("Date", lit(date))
+  }
+
+  /** Mergeable per-id aggregation STATE of the §3.2 flagship: the
+    * zero-filled per-category sums over valid rows, the faithful A2 row
+    * count `TotalDevices` (all rows, pre-filter, Error rows included)
+    * and the valid-row count `n_valid`. One scan, one `groupBy(idCol)`.
+    * Every cell is an associative sum/count, so states computed over
+    * disjoint slices merge exactly via [[mergeProfileStates]] — the
+    * property behind the incremental and streaming forms: aggregate only
+    * the new slice, merge with the standing per-id state, finalize. */
+  def profileState(s: ViewingSchema)(df: DataFrame): DataFrame = {
+    val valid = s.validId(col(s.idCol)) && col("Type") =!= "Error"
+    val sums = s.categories.map(c =>
+      coalesce(sum(when(valid && col("Type") === c, s.measure)), lit(0L)).as(c))
+    categorize(s)(df).groupBy(s.idCol).agg(
+      sums.head,
+      sums.tail :+ count(lit(1)).as("TotalDevices")
+        :+ count(when(valid, lit(1))).as("n_valid"): _*)
+  }
+
+  /** Merge two disjoint-slice states: per-id cell-wise sums. */
+  def mergeProfileStates(s: ViewingSchema)(a: DataFrame, b: DataFrame): DataFrame = {
+    val cells = s.categories ++ Seq("TotalDevices", "n_valid")
+    a.unionByName(b).groupBy(s.idCol)
+      .agg(sum(cells.head).as(cells.head), cells.tail.map(c => sum(c).as(c)): _*)
+  }
+
+  /** Finalize a state into the flagship row: `n_valid > 0` keeps exactly
+    * the ids the reference's inner join keeps (those with a valid row),
+    * then the E4–E7 enrichment chain. */
+  def profileFinalize(s: ViewingSchema)(state: DataFrame): DataFrame = {
+    val joined = state.filter(col("n_valid") > 0)
+      .select((s.idCol +: s.categories :+ "TotalDevices").map(col): _*)
     val enriched = Enrich.mostWatch(s.catLabels)(joined)
     Enrich.activityLevel(s.categories)(Enrich.taste(s.catLabels)(enriched))
   }
+
+  /** §3.2 flagship: the reference computes device counts and the
+    * category pivot as two branches over one input and joins them
+    * (`ETL_full.py:74-90`), which Spark plans as two scans of the input.
+    * Here both branches are one aggregation — one scan, one shuffle, no
+    * join — with the same output: TotalDevices counts all rows
+    * pre-filter, `n_valid > 0` reproduces the inner join, and `coalesce`
+    * to 0 reproduces the pivot's `na.fill(0)`. */
+  def fullPipeline(s: ViewingSchema)(df: DataFrame): DataFrame =
+    profileFinalize(s)(profileState(s)(df))
 }

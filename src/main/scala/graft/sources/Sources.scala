@@ -158,11 +158,13 @@ object LogSource {
 
   /** S4 — driver-side date-range → path list
     * (`ETL_full_output/ETL_full.py:17-30`): inclusive [from, to],
-    * yyyyMMdd file names. */
+    * yyyyMMdd file names. A reversed range fails here rather than
+    * yielding no paths, which would make a month report silently empty. */
   def datePaths(base: String, fromDate: String, toDate: String): Seq[String] = {
     val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd")
     val from = java.time.LocalDate.parse(fromDate, fmt)
     val to = java.time.LocalDate.parse(toDate, fmt)
+    require(!from.isAfter(to), s"date range is reversed: from $fromDate is after to $toDate")
     Iterator.iterate(from)(_.plusDays(1))
       .takeWhile(!_.isAfter(to))
       .map(d => s"$base/${d.format(fmt)}.json")

@@ -691,15 +691,16 @@ object Streaming {
       .select(col("event_id"), col("user_id"), col("c_mktsegment").as("segment"))
 
   /** Streaming flagship profile: the SAME mergeable per-user state the
-    * incremental batch form uses (`Viewing.profileState`), kept by the
-    * engine's state store across micro-batches, finalized per emission.
+    * batch and incremental forms use (`ViewingCore.profileState`), kept
+    * by the engine's state store across micro-batches, finalized per
+    * emission.
     * Complete output mode — no watermark, one state row per user, the
     * same state bound as the batch groupBy (and as [[dedupStream]]);
     * enrichment is stateless post-aggregation projection. The third
     * equivalent form of the flagship (batch single-pass, incremental
     * state-merge, streaming) — all three against one oracle. */
   def profileStream(events: DataFrame): DataFrame =
-    Viewing.profileFinalize(Viewing.profileState(events))
+    Viewing.fullPipeline(events)
 
   /** Streaming exact dedup: emit each (user_id, event_type) key once, on
     * first arrival. Exact global dedup necessarily keeps one state row

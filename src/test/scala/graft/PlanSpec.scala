@@ -1,6 +1,8 @@
 package graft
 
 import graft.analytics.Pipelines
+import graft.ops.ReferenceEtl
+import graft.sources.LogSource
 
 /** Physical-plan assertions — the scale properties the engine promises,
   * pinned so a regression (lost pushdown, join strategy flip, extra
@@ -57,27 +59,47 @@ class PlanSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
+  private def occurrences(p: String, what: String): Int =
+    p.sliding(what.length).count(_ == what)
+
+  private def hashExchanges(p: String): Int = occurrences(p, "Exchange hashpartitioning")
+
   test("flagship fast plan has exactly one shuffle exchange") {
-    val p = plan(Pipelines.flagshipProfileFast(spark, sf()))
-    val shuffles = p.sliding("Exchange hashpartitioning".length)
-      .count(_ == "Exchange hashpartitioning")
-    assert(shuffles == 1, s"expected 1 shuffle, plan:\n$p")
+    val p = plan(Pipelines.flagshipProfile(spark, sf()))
+    assert(hashExchanges(p) == 1, s"expected 1 shuffle, plan:\n$p")
   }
 
   test("incremental flagship merge adds no exchange beyond the two slice states") {
     val p = plan(Pipelines.incrementalProfile(spark, sf()))
-    val shuffles = p.sliding("Exchange hashpartitioning".length)
-      .count(_ == "Exchange hashpartitioning")
     // one shuffle per slice state; the union is already hash-partitioned
     // on user_id so the merge aggregation reuses it — co-partitioned merge
-    assert(shuffles == 2, s"expected 2 shuffles, plan:\n$p")
+    assert(hashExchanges(p) == 2, s"expected 2 shuffles, plan:\n$p")
   }
 
-  test("faithful flagship plan has more shuffles than the fast variant") {
-    val p = plan(Pipelines.flagshipProfile(spark, sf()))
-    val shuffles = p.sliding("Exchange hashpartitioning".length)
-      .count(_ == "Exchange hashpartitioning")
-    assert(shuffles >= 2, s"expected >=2 shuffles, plan:\n$p")
+  test("flagship and month report plan one scan and one exchange; one-day one exchange") {
+    // two reference-shaped daily JSONL files
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-jsonl")
+    for (day <- Seq("20220401", "20220402")) {
+      val line = """{"_index":"history","_type":"vod","_id":"a","_score":0,""" +
+        """"_source":{"Contract":"C1","Mac":"M1","TotalDuration":10,"AppName":"VOD"}}"""
+      java.nio.file.Files.write(dir.resolve(s"$day.json"), line.getBytes("UTF-8"))
+    }
+    val flagships = Seq(
+      "flagship_profile" -> SparkEntry.queries("flagship_profile")(spark, sf()),
+      "flagship_profile_fast" -> SparkEntry.queries("flagship_profile_fast")(spark, sf()),
+      "runFull" -> ReferenceEtl.runFull(spark, dir.toString, "20220401", "20220402"))
+    for ((name, df) <- flagships) {
+      val p = plan(df)
+      assert(hashExchanges(p) == 1, s"$name: expected 1 shuffle, plan:\n$p")
+      assert(occurrences(p, "FileScan") == 1, s"$name: expected 1 file scan, plan:\n$p")
+    }
+    val day = LogSource.flattenSource(LogSource.readDay(spark, s"$dir/20220401.json"))
+    for ((name, df) <- Seq(
+        "ReferenceEtl.oneDayPipeline" -> ReferenceEtl.oneDayPipeline(day, "2022-04-01"),
+        "e8_one_day" -> Pipelines.oneDay(spark, sf()))) {
+      val p = plan(df)
+      assert(hashExchanges(p) == 1, s"$name: expected 1 shuffle, plan:\n$p")
+    }
   }
 
   test("g20: bucketed agg+join plan has zero shuffle exchanges") {

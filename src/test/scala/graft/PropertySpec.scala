@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import graft.ops.{Skew, Viewing}
+import graft.analytics.ExtPipelines
+import graft.ops.{Enrich, ReferenceEtl, Skew, Viewing, ViewingCore, ViewingSchema}
 
 /** ScalaCheck property tests over generated event data. */
 class PropertySpec extends SparkSpec {
@@ -12,12 +14,13 @@ class PropertySpec extends SparkSpec {
     assert(res.passed, res.status.toString)
   }
 
-  private val eventGen: Gen[List[(Long, String, Double)]] = Gen.listOfN(200,
-    for {
-      user <- Gen.chooseNum(0L, 20L)
-      et <- Gen.oneOf("view", "click", "purchase", "signup", "error", "junk")
-      cents <- Gen.chooseNum(1L, 50000L)
-    } yield (user, et, cents / 100.0))
+  private val eventRowGen: Gen[(Long, String, Double)] = for {
+    user <- Gen.chooseNum(0L, 20L)
+    et <- Gen.oneOf("view", "click", "purchase", "signup", "error", "junk")
+    cents <- Gen.chooseNum(1L, 50000L)
+  } yield (user, et, cents / 100.0)
+
+  private val eventGen: Gen[List[(Long, String, Double)]] = Gen.listOfN(200, eventRowGen)
 
   test("property: pivot row-sums equal long-form sums on generated data") {
     import spark.implicits._
@@ -36,14 +39,67 @@ class PropertySpec extends SparkSpec {
     }, n = 10)
   }
 
-  test("property: fast flagship equals faithful flagship on generated data") {
+  /** The reference's category pivot of valid-row sums, from the public
+    * operators. */
+  private def pivoted(s: ViewingSchema, fillZero: Boolean)(df: DataFrame): DataFrame =
+    ViewingCore.pivotDurations(s, fillZero)(ViewingCore.durationByCategory(s)(
+      ViewingCore.validRows(s)(ViewingCore.categorize(s)(df))))
+
+  /** The reference's two-branch flagship: faithful device counts joined
+    * to the zero-filled pivot, then E4–E7. */
+  private def twoBranchFlagship(s: ViewingSchema)(df: DataFrame): DataFrame = {
+    val devices = ViewingCore.deviceCountsFaithful(s, projectDevice = false)(df)
+    val joined = pivoted(s, fillZero = true)(df).join(devices, Seq(s.idCol))
+    Enrich.activityLevel(s.categories)(Enrich.taste(s.catLabels)(
+      Enrich.mostWatch(s.catLabels)(joined)))
+  }
+
+  /** The reference's one-day shape: the pivot without zero-fill. */
+  private def pivotOneDay(s: ViewingSchema, date: String)(df: DataFrame): DataFrame =
+    pivoted(s, fillZero = false)(df).withColumn("Date", lit(date))
+
+  test("property: events flagship and one-day pipeline equal the two-branch reference") {
     import spark.implicits._
-    check(Prop.forAll(eventGen) { rows =>
+    val day = "2024-01-10"
+    val gen = Gen.listOfN(200, for {
+      (user, et, value) <- eventRowGen
+      ts <- Gen.oneOf("2024-01-10 08:00:00", "2024-01-11 08:00:00")
+    } yield (user, et, value, ts))
+    check(Prop.forAll(gen) { rows =>
       rows.isEmpty || {
-        val df = rows.toDF("user_id", "event_type", "value")
-        val a = Viewing.fullPipeline(df)
-        val b = Viewing.fullPipelineFast(df)
-        a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+        val df = rows.toDF("user_id", "event_type", "value", "ts")
+          .withColumn("ts", to_timestamp(col("ts")))
+        val s = Viewing.schema
+        ExtPipelines.multisetEq(Viewing.fullPipeline(df),
+          twoBranchFlagship(s)(df)) &&
+        ExtPipelines.multisetEq(Viewing.oneDayPipeline(df, day),
+          pivotOneDay(s, day)(df.filter(to_date(col("ts")) === lit(day))))
+      }
+    }, n = 10)
+  }
+
+  test("property: reference-log flagship and one-day pipeline equal the two-branch reference") {
+    import spark.implicits._
+    // sentinel "0" and null contracts, null durations, and unmapped or
+    // case-variant codes (kplus is not KPLUS) alongside the 14 real codes
+    val codes = ReferenceEtl.schema.mapping.flatMap(_._1) ++
+      Seq("kplus", "vod", "UNKNOWN_APP")
+    val gen = Gen.listOfN(200, for {
+      contract <- Gen.frequency(1 -> Gen.const(Option.empty[String]),
+        5 -> Gen.oneOf("0", "C1", "C2", "C3", "C4").map(Option(_)))
+      mac <- Gen.oneOf("M1", "M2", "M3")
+      dur <- Gen.frequency(1 -> Gen.const(Option.empty[Long]),
+        6 -> Gen.chooseNum(1L, 200000L).map(Option(_)))
+      app <- Gen.frequency(1 -> Gen.const(Option.empty[String]),
+        12 -> Gen.oneOf(codes).map(Option(_)))
+    } yield (contract, mac, dur, app))
+    check(Prop.forAll(gen) { rows =>
+      rows.isEmpty || {
+        val df = rows.toDF("Contract", "Mac", "TotalDuration", "AppName")
+        val s = ReferenceEtl.schema
+        ExtPipelines.multisetEq(ReferenceEtl.fullPipeline(df), twoBranchFlagship(s)(df)) &&
+        ExtPipelines.multisetEq(ReferenceEtl.oneDayPipeline(df, "2022-04-01"),
+          pivotOneDay(s, "2022-04-01")(df))
       }
     }, n = 10)
   }

@@ -15,14 +15,15 @@ private object ReadmeQuickStartCheck {
   def example(): Unit = {
     val spark = GraftSession.local()        // AQE on, UTC, cores-sized shuffle
 
-    // Reference-parity daily ETL over the JSONL export format:
+    // Reference-parity ETL over the JSONL export format. The profile is one
+    // per-contract aggregation, so the input is scanned once:
     val day     = LogSource.readDay(spark, "/data/logs/20240115.json")
     val profile = ReferenceEtl.fullPipeline(LogSource.flattenSource(day))
     CsvSink.writeSingle(profile, "/out/profiles.csv")
 
-    // Or the same semantics over parquet event tables, single-pass:
+    // Or the same semantics over parquet event tables:
     val events  = graft.sources.Tables.events(spark, "/data/sf")
-    val fast    = Viewing.fullPipelineFast(events)
+    val users   = Viewing.fullPipeline(events)
 
     // Training-corpus prep: dedup -> near-dup clusters -> pack:
     val docs     = graft.sources.Tables.documents(spark, "/data/sf")
@@ -62,7 +63,7 @@ private object ReadmeQuickStartCheck {
     spark.sql("SELECT doc_id, graft_repeat_stats(split(text, ' ')) FROM documents").show()
 
     // silence unused-value warnings — the bindings mirror the README
-    val _ = (fast, clusters, shards, topk, semKept, knn, admitted,
+    val _ = (users, clusters, shards, topk, semKept, knn, admitted,
       delta, triage, outliers, chunks, hits, bpePairs)
   }
 }

@@ -40,6 +40,22 @@ class ReferenceEtlSpec extends SparkSpec {
       "/base/20220401.json", "/base/20220402.json"))
   }
 
+  test("S4: a reversed date range fails loudly, naming both dates") {
+    // an empty path list would make runFull write an empty month report
+    // and runPerDayUnion fail in `empty.reduce`
+    val calls: Seq[() => Any] = Seq(
+      () => LogSource.datePaths(dataDir.toString, "20220403", "20220401"),
+      () => ReferenceEtl.runFull(spark, dataDir.toString, "20220403", "20220401"),
+      () => ReferenceEtl.runPerDayUnion(spark, dataDir.toString, "20220403", "20220401"))
+    for (call <- calls) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("20220403") && e.getMessage.contains("20220401"),
+        e.getMessage)
+    }
+    // a one-day range is not reversed
+    assert(LogSource.datePaths("/base", "20220401", "20220401") == Seq("/base/20220401.json"))
+  }
+
   test("S1+P1: single-day scan flattens the ES envelope to 4 columns") {
     val flat = LogSource.flattenSource(
       LogSource.readDay(spark, s"$dataDir/20220401.json"))

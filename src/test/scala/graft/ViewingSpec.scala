@@ -46,11 +46,11 @@ class ViewingSpec extends SparkSpec {
       .withColumn("value", lit(1.0e7))
     val withNulls = events.unionByName(bump)
     val inc = Viewing.incrementalProfile(withNulls, "2024-01-15")
-    val fast = Viewing.fullPipelineFast(withNulls)
-    assert(inc.exceptAll(fast).isEmpty && fast.exceptAll(inc).isEmpty)
+    val full = Viewing.fullPipeline(withNulls)
+    assert(inc.exceptAll(full).isEmpty && full.exceptAll(inc).isEmpty)
     // guard against vacuous pass: dropping the null-ts rows WOULD change
     // the profile, so the identity above proves they were counted
-    assert(inc.exceptAll(Viewing.fullPipelineFast(events)).count() > 0)
+    assert(inc.exceptAll(Viewing.fullPipeline(events)).count() > 0)
   }
 
   test("faithful device counts include Error rows; distinct counts are <= faithful") {
