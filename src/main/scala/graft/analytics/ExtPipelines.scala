@@ -3,9 +3,10 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
-import graft.ext.{Dedup, Similarity, TextAnalysis}
+import graft.ext.{Checkpoints, Dedup, IndexLayout, Similarity, TextAnalysis}
 import graft.functions.VectorFunctions
 import graft.sources.Tables
+import Audit.{IvfAudit, MinhashAudit}
 
 /** Extended training-data-pipeline queries (dedup, similarity, text
   * analysis) over `documents` / `embeddings` — SparkEntry entries with
@@ -13,25 +14,24 @@ import graft.sources.Tables
   */
 object ExtPipelines {
 
-  /** Recursive delete of a per-invocation temp artifact (index copies,
-    * stream sinks): every Verify dump and bench rep creates one, and
-    * it must not accumulate in /tmp across rounds. One closed-resource
-    * call (the earlier per-site Files.walk copies leaked the walk
-    * stream until GC). */
-  private def deleteTempTree(root: java.nio.file.Path): Unit =
-    org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
-
-  /** Collision-resistant key for per-input-dir memoized artifact paths
-    * (x24b labels, x26b index, x29 CC, s17 index). String.hashCode is
-    * 32 bits: two distinct input dirs colliding onto one fixed /tmp
-    * path would make the second dir's BuildOnce memo silently reuse or
-    * overwrite the first dir's artifact — wrong served results, not a
-    * failure. An MD5 prefix (64 hex bits here) makes an accidental
-    * collision astronomically unlikely, and path-shape stays short. */
-  private def dirKey(dir: String): String =
-    java.security.MessageDigest.getInstance("MD5")
+  /** A per-input-dir artifact written once per JVM at a FIXED path
+    * under java.io.tmpdir, `graft_<name>_<key>`, memoized in `memo`
+    * (x24b labels, x26b index, x29 CC, s17 and v20 indexes). The key is
+    * collision-resistant: String.hashCode is 32 bits, and two distinct
+    * input dirs colliding onto one fixed path would make the second
+    * dir's memo silently reuse or overwrite the first dir's artifact —
+    * wrong served results, not a failure. An MD5 prefix (64 hex bits)
+    * makes an accidental collision astronomically unlikely, and the
+    * path stays short. */
+  private def memoPath(memo: graft.ext.BuildOnce[String, String],
+      dir: String, name: String)(build: String => Unit): String = memo(dir) {
+    val key = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .take(8).map(b => f"$b%02x").mkString
+    val p = sys.props("java.io.tmpdir") + s"/graft_${name}_$key"
+    build(p)
+    p
+  }
 
   /** EXACT multiset equality of two same-schema frames in ONE action —
     * the identity-pin comparator every audit verb runs. Each side
@@ -213,12 +213,8 @@ object ExtPipelines {
   /** The persisted x9 cluster-label artifact, built once per JVM and
     * read by every downstream consumer (x24b's apply, x28's audit). */
   private def clusterLabels(spark: SparkSession, dir: String): DataFrame = {
-    val path = x24bLabels(dir) {
-      val p = sys.props("java.io.tmpdir") +
-        s"/graft_x24b_labels_${dirKey(dir)}"
-      dedupClusters(spark, dir).write.mode("overwrite").parquet(p)
-      p
-    }
+    val path = memoPath(x24bLabels, dir, "x24b_labels")(p =>
+      dedupClusters(spark, dir).write.mode("overwrite").parquet(p))
     spark.read.parquet(path)
   }
 
@@ -252,9 +248,7 @@ object ExtPipelines {
     * must equal a full recursive-CTE recompute over ALL pairs —
     * standing ∪ delta — exactly, row for row. */
   def ccIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val root = x29Store(dir) {
-      val p = sys.props("java.io.tmpdir") +
-        s"/graft_x29_cc_${dirKey(dir)}"
+    val root = memoPath(x29Store, dir, "x29_cc") { p =>
       import org.apache.spark.storage.StorageLevel
       val pairs = Dedup.jaccardPairs(Tables.documents(spark, dir), n = 3,
         threshold = 0.5, maxShingleDf = Some(100))
@@ -267,7 +261,6 @@ object ExtPipelines {
         pairs.filter(col("_delta")).select("a_id", "b_id")
           .write.mode("overwrite").parquet(s"$p/delta")
       } finally pairs.unpersist(blocking = false)
-      p
     }
     Dedup.connectedComponentsIncremental(
       spark.read.parquet(s"$root/labels"),
@@ -351,25 +344,19 @@ object ExtPipelines {
     * exactly matches a standing doc — must be 0: identical docs have
     * identical signatures, so LSH recall for them is 1 and the exact-
     * Jaccard verify rejects at j = 1). */
-  def minhashIndexIngest(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val parts = graft.ext.DataSplit.withSplit(
-      Tables.documents(spark, dir).select("doc_id", "text"), "doc_id")
-    val standing = parts.filter(col("split") === "train")
-    val batch = parts.filter(col("split") === "test")
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_mh_idx")
-    val path = tmpRoot.toString + "/idx"
-    try {
-      // NON-default bucket count on purpose: the whole x26 family runs
-      // its correctness gate against an index whose bucket count exists
-      // only in the manifest — a verb that fell back to the compile-time
-      // default would mis-prune and fail the identity pins
+  def minhashIndexIngest(spark: SparkSession, dir: String): DataFrame =
+    Audit.withScratch("graft_x26") { root =>
+      import spark.implicits._
+      val s = MinhashAudit.split
+      val docs = MinhashAudit.corpus(spark, dir)
+      val (standing, batch) = (docs.filter(s.standing), docs.filter(s.batch))
+      val path = s"$root/idx"
       // ONE signing pass feeds both the persisted index and the
-      // in-memory control frames (they were already the same definition
-      // — minhashIndexFrames — planned twice; guide §2.4), and the
-      // batch is signed once for its two serves
+      // in-memory control frames, and the batch is signed once for its
+      // two serves
       val (mb, msh, msz) = Dedup.minhashIndexFrames(standing)
-      Dedup.saveMinhashIndexFromFrames(mb, msh, msz, path, idBuckets = 48)
+      Dedup.saveMinhashIndexFromFrames(mb, msh, msz, path,
+        idBuckets = MinhashAudit.Buckets)
       val bf = Dedup.minhashIndexFrames(batch)
       val fromIdx = Dedup.nearDupIngestFromPath(spark, path, batch,
         batchFrames = Some(bf))
@@ -385,12 +372,10 @@ object ExtPipelines {
           .select(col("doc_id"), col("text")), "doc_id")
         .join(standing.select(col("text")), Seq("text"), "left_semi")
         .count()
-      // driver-side local relation (the probes above are eager), so
-      // nothing lazy still reads the index files after cleanup
       Seq((batch.count(), identical, nExactAdmitted))
         .toDF("n_batch", "identical", "n_exact_admitted")
-    } finally deleteTempTree(tmpRoot)
-  }
+    }
+
 
   /** Memoized per-JVM MinHash index store for [[minhashIndexServe]]
     * (x26b) — the x24b pattern: one FIXED path per input dir, written
@@ -439,18 +424,11 @@ object ExtPipelines {
     * nearDupIngest's internal bounded one — the driver's single
     * collect over the returned row does all the counting. */
   def minhashIndexServe(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val parts = graft.ext.DataSplit.withSplit(
-      Tables.documents(spark, dir).select("doc_id", "text"), "doc_id")
-    val standing = parts.filter(col("split") === "train")
-    val batch = parts.filter(col("split") === "test")
-    val path = x26bIndex(dir) {
-      val p = sys.props("java.io.tmpdir") +
-        s"/graft_x26b_idx_${dirKey(dir)}"
-      // non-default bucket count: see minhashIndexIngest
-      Dedup.saveMinhashIndex(standing, p, idBuckets = 48)
-      p
-    }
+    val s = MinhashAudit.split
+    val docs = MinhashAudit.corpus(spark, dir)
+    val (standing, batch) = (docs.filter(s.standing), docs.filter(s.batch))
+    val path = memoPath(x26bIndex, dir, "x26b_idx")(p =>
+      Dedup.saveMinhashIndex(standing, p, idBuckets = MinhashAudit.Buckets))
     x26bFrames.evict(_._1.sparkContext.isStopped)
     val (ib, ish, isz) = x26bFrames((spark, dir)) {
       val fs = Dedup.loadMinhashIndex(spark, path)
@@ -491,70 +469,49 @@ object ExtPipelines {
     * frames(corpus ∪ admitted) = frames(corpus) ∪ frames(admitted) and
     * parquet round-trips are bit-stable. Emits `n_batch2` (the oracle
     * recomputes the md5-bucket rule) and `identical` (TRUE). */
-  def minhashIndexAppend(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, dir).select("doc_id", "text")
-    val bk = graft.ext.DataSplit.bucket(col("doc_id"))
-    val standing = docs.filter(bk < 52428)
-    val batch1 = docs.filter(bk >= 52428 && bk < 58982)
-    val batch2 = docs.filter(bk >= 58982)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_mh_append")
-    try {
-      // incremental path: build on standing, ingest day 1, append its
-      // admitted docs, ingest day 2 against the appended index.
-      // The standing corpus is SIGNED ONCE (guide §2.4): the same
-      // frames triple feeds the incremental build and — unioned with
-      // the delta's frames — the rebuild control below. What the pin
-      // audits is unchanged: the append MACHINERY (staging, manifest
-      // composition, the serve reading a composed layout) must serve
-      // exactly like a monolithic gen-0 layout; frame-content equality
-      // was always a per-doc theorem, stated in appendToMinhashIndex's
-      // contract.
-      val incPath = tmpRoot.toString + "/inc"
-      val (sb, ssh, ssz) = Dedup.minhashIndexFrames(standing)
-      // non-default bucket count: see minhashIndexIngest
+  def minhashIndexAppend(spark: SparkSession, dir: String): DataFrame =
+    Audit.withScratch("graft_x26c") { root =>
+      import spark.implicits._
+      val s = MinhashAudit.split
+      val docs = MinhashAudit.corpus(spark, dir)
+      val batch1 = docs.filter(s.range(52428, 58982))
+      val batch2 = docs.filter(s.range(58982))
+      val (incPath, rbPath) = (s"$root/inc", s"$root/rebuild")
+      // the standing corpus and day 1 are each signed ONCE: the same
+      // frames feed the incremental build, day 1's serve and append, and
+      // — unioned — the rebuild control. What the pin audits is the
+      // append MACHINERY (staging, manifest composition, the serve
+      // reading a composed layout) against a monolithic gen-0 layout;
+      // frame-content equality is a per-doc theorem, stated in
+      // appendToMinhashIndex's contract.
+      val (sb, ssh, ssz) = Dedup.minhashIndexFrames(docs.filter(s.standing))
       Dedup.saveMinhashIndexFromFrames(sb, ssh, ssz, incPath,
-        idBuckets = 48)
-      // day-1's batch is signed ONCE for its serve, the append, and the
-      // rebuild union below (§2.4): the admitted slice of its frames IS
-      // frames(admitted docs) — per-doc rows, id-semi-joined against
-      // the eagerly-pinned admitted set (the pin keeps the three
-      // appended frames agreeing even if a plan re-executes, the same
-      // job the old ckptLocal of the admitted TEXT did)
+        idBuckets = MinhashAudit.Buckets)
+      // the admitted slice of day 1's frames IS frames(admitted docs),
+      // semi-joined against the eagerly pinned admitted set (the pin
+      // keeps the three appended frames agreeing if a plan re-executes)
       val bf1 = Dedup.minhashIndexFrames(batch1)
-      val admitted1 = graft.ext.Checkpoints.ckptLocal(
+      val admitted1 = Checkpoints.ckptLocal(
         Dedup.nearDupIngestFromPath(spark, incPath, batch1,
           batchFrames = Some(bf1)))
       def adm(df: DataFrame): DataFrame =
         df.join(admitted1, Seq("doc_id"), "left_semi")
       Dedup.appendToMinhashIndexFromFrames(spark, incPath,
         adm(bf1._1), adm(bf1._2), adm(bf1._3))
-      // rebuild path: one full index over standing ∪ day-1-admitted —
-      // written from the already-computed standing frames plus the
-      // admitted slice of day-1's (frames are per-doc and the two doc
-      // sets are disjoint, so the union IS frames(standing ∪ admitted)).
-      // Written HERE, right after the append, so the standing and
-      // day-1 shingle caches free before day-2's frames are pinned —
-      // at most one corpus-scale cached frame lives at a time
-      val rbPath = tmpRoot.toString + "/rebuild"
+      // the rebuild is written right after the append, so the standing
+      // and day-1 shingle caches free before day 2 is signed: at most
+      // one corpus-scale cached frame lives at a time
       Dedup.saveMinhashIndexFromFrames(sb.unionByName(adm(bf1._1)),
         ssh.unionByName(adm(bf1._2)), ssz.unionByName(adm(bf1._3)),
-        rbPath, idBuckets = 48)
+        rbPath, idBuckets = MinhashAudit.Buckets)
       bf1._2.unpersist()
       ssh.unpersist()
-      // day-2's batch is signed ONCE for its two serves (§2.4)
-      val bf2 = Dedup.minhashIndexFrames(batch2)
-      val incAdmitted2 = Dedup.nearDupIngestFromPath(spark, incPath, batch2,
-        batchFrames = Some(bf2))
-      val rbAdmitted2 = Dedup.nearDupIngestFromPath(spark, rbPath, batch2,
-        batchFrames = Some(bf2))
-      bf2._2.unpersist()
-      val identical = multisetEq(incAdmitted2, rbAdmitted2)
-      // driver-side local relation (the probes above are eager), so
-      // nothing lazy still reads the index files after cleanup
+      val identical = MinhashAudit.arriving(docs, batch2) { a =>
+        multisetEq(a.serve(incPath), a.serve(rbPath))
+      }
       Seq((batch2.count(), identical)).toDF("n_batch2", "identical")
-    } finally deleteTempTree(tmpRoot)
-  }
+    }
+
 
   /** x26d: persisted MinHash index DELETE — the removal pin that
     * completes the x26 family's CRUD lifecycle (build x26 / serve x26b
@@ -573,52 +530,9 @@ object ExtPipelines {
     * construction, and compaction preserves the surviving frame set
     * row-for-row. Emits `n_batch` (oracle recomputes the md5-bucket
     * rule) and `identical` (TRUE). */
-  def minhashIndexDelete(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, dir).select("doc_id", "text")
-    val bk = graft.ext.DataSplit.bucket(col("doc_id"))
-    val standing = docs.filter(bk < 52428)
-    val doomed = docs.filter(bk >= 39321 && bk < 52428)
-    val batch = docs.filter(bk >= 52428)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_mh_delete")
-    try {
-      val incPath = tmpRoot.toString + "/inc"
-      // ONE signing pass over standing feeds BOTH builds (guide §2.4):
-      // the rebuild control over standing∖doomed is a per-doc filter of
-      // the same frames (frames(corpus.filter(p)) = frames(corpus)
-      // .filter(p) exactly — every row is a per-doc function of text).
-      // The verbs under audit — delete's tombstone append and the
-      // compaction's stored-row movement — are untouched.
-      val (sb, ssh, ssz) = Dedup.minhashIndexFrames(standing)
-      // non-default bucket count: see minhashIndexIngest
-      Dedup.saveMinhashIndexFromFrames(sb, ssh, ssz, incPath,
-        idBuckets = 48)
-      val rbPath = tmpRoot.toString + "/rebuild"
-      Dedup.saveMinhashIndexFromFrames(sb.filter(bk < 39321),
-        ssh.filter(bk < 39321), ssz.filter(bk < 39321), rbPath,
-        idBuckets = 48)
-      ssh.unpersist()
-      Dedup.deleteFromMinhashIndex(doomed.select("doc_id"), incPath)
-      // the batch is signed ONCE for its three serves (§2.4)
-      val bf = Dedup.minhashIndexFrames(batch)
-      // the path serve honors standing tombstones automatically
-      val tombAdmitted = Dedup.nearDupIngestFromPath(spark, incPath, batch,
-        batchFrames = Some(bf))
-      Dedup.compactMinhashTombstones(spark, incPath)
-      // post-compaction the tombstones left the composition — served bare
-      val compAdmitted = Dedup.nearDupIngestFromPath(spark, incPath, batch,
-        batchFrames = Some(bf))
-      val rbAdmitted = Dedup.nearDupIngestFromPath(spark, rbPath, batch,
-        batchFrames = Some(bf))
-      bf._2.unpersist()
-      def eq(a: DataFrame, b: DataFrame): Boolean = multisetEq(a, b)
-      val identical =
-        eq(tombAdmitted, rbAdmitted) && eq(compAdmitted, rbAdmitted)
-      // driver-side local relation (the probes above are eager), so
-      // nothing lazy still reads the index files after cleanup
-      Seq((batch.count(), identical)).toDF("n_batch", "identical")
-    } finally deleteTempTree(tmpRoot)
-  }
+  def minhashIndexDelete(spark: SparkSession, dir: String): DataFrame =
+    Audit.removal(spark, dir, MinhashAudit, "x26d")(Audit.batchDelete)
+
 
   /** x26e: persisted MinHash index REFRESH — the composite that closes
     * the living-corpus loop by feeding x20's refresh decisions into the
@@ -643,51 +557,46 @@ object ExtPipelines {
     val (oldSnap, newSnap) = snapshots(spark, dir)
     // delta-sized and consumed by several writes below; pinned so the
     // quality-gate/digest jobs run once, not per consumer
-    val acts = graft.ext.Checkpoints.ckptLocal(
-      refreshDecisions(oldSnap, newSnap))
+    val acts = Checkpoints.ckptLocal(refreshDecisions(oldSnap, newSnap))
     val removedIds = Dedup.snapshotDiff(oldSnap, newSnap)
       .filter(col("status") === "removed").select("doc_id")
     val updatedIds = acts.filter(col("action") === "admit_update")
       .select("doc_id")
-    val admittedDocs = graft.ext.Checkpoints.ckptLocal(
+    val admittedDocs = Checkpoints.ckptLocal(
       newSnap.join(
         acts.filter(col("action").isin("admit_new", "admit_update"))
           .select("doc_id"),
         Seq("doc_id"), "left_semi"))
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_mh_refresh")
-    try {
-      val incPath = tmpRoot.toString + "/inc"
-      val rbPath = tmpRoot.toString + "/rebuild"
+    Audit.withScratch("graft_x26e") { root =>
+      val (incPath, rbPath) = (s"$root/inc", s"$root/rebuild")
       // The rebuild control stays an INDEPENDENT from-text build over
       // nextSnapshot — x26e's pin is precisely that refresh(old) lands
       // on that independently-derived corpus, so the control must not
       // share the treatment's frames (unlike x26d/x30, where the
       // control corpus is a filter of the same standing set). The two
       // legs touch disjoint directories and share no mutable state, so
-      // they are independent jobs — overlapped (guide §2.6 /
-      // IndexLayout.inParallel) the verb costs ~the slower leg, not
-      // their sum. non-default bucket count: see minhashIndexIngest
-      graft.ext.IndexLayout.inParallel(Seq(
+      // they run overlapped: the verb costs ~the slower leg
+      IndexLayout.inParallel(Seq(
         () => {
-          Dedup.saveMinhashIndex(oldSnap, incPath, idBuckets = 48)
+          Dedup.saveMinhashIndex(oldSnap, incPath,
+            idBuckets = MinhashAudit.Buckets)
           Dedup.refreshMinhashIndex(spark, incPath,
             removedIds.unionByName(updatedIds), admittedDocs)
         },
         () => Dedup.saveMinhashIndex(nextSnapshot(spark, dir), rbPath,
-          idBuckets = 48)))
+          idBuckets = MinhashAudit.Buckets)))
       val (ib, ish, isz) = Dedup.loadMinhashIndex(spark, incPath)
       val (rb, rs, rz) = Dedup.loadMinhashIndex(spark, rbPath)
       // three independent frame compares, overlapped the same way (the
       // short-circuit only ever saved work on a FAILING pin)
-      val identical = graft.ext.IndexLayout.inParallel(Seq(
+      val identical = IndexLayout.inParallel(Seq(
         () => multisetEq(ib, rb),
         () => multisetEq(ish, rs),
         () => multisetEq(isz, rz))).forall(identity)
-      // driver-side local relation (the comparisons above are eager),
-      // so nothing lazy still reads the index files after cleanup
       Seq((admittedDocs.count(), identical)).toDF("n_admitted", "identical")
-    } finally deleteTempTree(tmpRoot)
+    }
   }
+
 
   /** x30: persisted MinHash index REBUCKET — the scale-parameter
     * maintenance verb ([[graft.ext.Dedup.rebucketMinhashIndex]]): an
@@ -706,54 +615,45 @@ object ExtPipelines {
     * match the rebuild's. Emits `n_batch` (oracle recomputes the
     * md5-bucket rule), `buckets_after` (the flipped manifest's stored
     * count, read back by the serve path) and `identical` (TRUE). */
-  def minhashIndexRebucket(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, dir).select("doc_id", "text")
-    val bk = graft.ext.DataSplit.bucket(col("doc_id"))
-    val standing = docs.filter(bk < 52428)
-    val doomed = standing.filter(bk >= 39321)
-    val batch = docs.filter(bk >= 52428)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_mh_rebucket")
-    try {
-      val incPath = tmpRoot.toString + "/inc"
-      // ONE signing pass over standing feeds BOTH builds (guide §2.4,
-      // the x26d discipline): the fresh-at-48 control over the
-      // survivors is a per-doc filter of the same frames; the verb
-      // under audit — rebucket MOVING stored rows to the new bucket
-      // keying — is untouched
-      val (sb, ssh, ssz) = Dedup.minhashIndexFrames(standing)
+  def minhashIndexRebucket(spark: SparkSession, dir: String): DataFrame =
+    Audit.withScratch("graft_x30") { root =>
+      import spark.implicits._
+      val s = MinhashAudit.split
+      val docs = MinhashAudit.corpus(spark, dir)
+      val (incPath, rbPath) = (s"$root/inc", s"$root/rebuild")
+      // ONE signing pass over standing feeds both builds: the
+      // fresh-at-48 control over the survivors is a per-doc filter of
+      // the same frames; the verb under audit — rebucket MOVING stored
+      // rows to the new bucket keying — is untouched
+      val (sb, ssh, ssz) = Dedup.minhashIndexFrames(docs.filter(s.standing))
       Dedup.saveMinhashIndexFromFrames(sb, ssh, ssz, incPath,
         idBuckets = 16)
-      val rbPath = tmpRoot.toString + "/rebuild"
-      Dedup.saveMinhashIndexFromFrames(sb.filter(bk < 39321),
-        ssh.filter(bk < 39321), ssz.filter(bk < 39321), rbPath,
-        idBuckets = 48)
+      Dedup.saveMinhashIndexFromFrames(sb.filter(s.survivors),
+        ssh.filter(s.survivors), ssz.filter(s.survivors), rbPath,
+        idBuckets = MinhashAudit.Buckets)
       ssh.unpersist()
-      Dedup.deleteFromMinhashIndex(doomed.select("doc_id"), incPath)
-      Dedup.rebucketMinhashIndex(spark, incPath, newBuckets = 48)
+      Dedup.deleteFromMinhashIndex(docs.filter(s.doomed).select("doc_id"),
+        incPath)
+      Dedup.rebucketMinhashIndex(spark, incPath,
+        newBuckets = MinhashAudit.Buckets)
       val bucketsAfter = Dedup.minhashIndexParams(spark, incPath)("buckets")
-      // the batch is signed ONCE for its two serves (§2.4)
-      val bf = Dedup.minhashIndexFrames(batch)
-      val rbAdmitted0 = Dedup.nearDupIngestFromPath(spark, incPath, batch,
-        batchFrames = Some(bf))
-      val fbAdmitted = Dedup.nearDupIngestFromPath(spark, rbPath, batch,
-        batchFrames = Some(bf))
-      bf._2.unpersist()
+      val batch = docs.filter(s.batch)
+      val (rbAdmitted0, fbAdmitted) = MinhashAudit.arriving(docs, batch) {
+        a => (a.serve(incPath), a.serve(rbPath))
+      }
       val (ib, ish, isz) = Dedup.loadMinhashIndex(spark, incPath)
       val (fb, fsh, fsz) = Dedup.loadMinhashIndex(spark, rbPath)
-      // four independent identity compares, overlapped (guide §2.6; the
+      // four independent identity compares, overlapped (the
       // short-circuit only ever saved work on a FAILING pin)
-      val identical = graft.ext.IndexLayout.inParallel(Seq(
+      val identical = IndexLayout.inParallel(Seq(
         () => multisetEq(rbAdmitted0, fbAdmitted),
         () => multisetEq(ib, fb),
         () => multisetEq(ish, fsh),
         () => multisetEq(isz, fsz))).forall(identity)
-      // driver-side local relation (the probes above are eager), so
-      // nothing lazy still reads the index files after cleanup
       Seq((batch.count(), bucketsAfter.toLong, identical))
         .toDF("n_batch", "buckets_after", "identical")
-    } finally deleteTempTree(tmpRoot)
-  }
+    }
+
 
   /** s15: STREAMING MinHash near-dup ingest — the x26b serving path
     * run as a real Structured Streaming query
@@ -771,38 +671,30 @@ object ExtPipelines {
     * per-call cost is the batch side (the production shape). */
   def streamNearDupIngest(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val parts = graft.ext.DataSplit.withSplit(
-      Tables.documents(spark, dir).select("doc_id", "text"), "doc_id")
-    val standing = parts.filter(col("split") === "train")
-    val batch = parts.filter(col("split") === "test")
-    val path = x26bIndex(dir) {
-      val p = sys.props("java.io.tmpdir") +
-        s"/graft_x26b_idx_${dirKey(dir)}"
-      // non-default bucket count: see minhashIndexIngest (shared memo
-      // with the x26b serve — the stream reads every layout parameter
-      // back from the manifest)
-      Dedup.saveMinhashIndex(standing, p, idBuckets = 48)
-      p
-    }
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_s15")
-    try {
+    val s = MinhashAudit.split
+    val docs = MinhashAudit.corpus(spark, dir)
+    val (standing, batch) = (docs.filter(s.standing), docs.filter(s.batch))
+    // shared memo with the x26b serve — the stream reads every layout
+    // parameter back from the manifest
+    val path = memoPath(x26bIndex, dir, "x26b_idx")(p =>
+      Dedup.saveMinhashIndex(standing, p, idBuckets = MinhashAudit.Buckets))
+    Audit.withScratch("graft_s15") { root =>
       val docsStream = graft.streaming.Streaming.documentsStream(spark, dir)
-        .filter(graft.ext.DataSplit.bucket(col("doc_id")) >= 52428)
+        .filter(s.batch)
         .select("doc_id", "text")
       val q = graft.streaming.Streaming.nearDupIngestStream(docsStream, path,
-        s"$tmpRoot/out", s"$tmpRoot/delta", s"$tmpRoot/ck")
+        s"$root/out", s"$root/delta", s"$root/ck")
       q.awaitTermination()
-      val admitted = spark.read.parquet(s"$tmpRoot/out").select("doc_id")
+      val admitted = spark.read.parquet(s"$root/out").select("doc_id")
       val nExact = admitted
         .join(batch.filter(size(split(col("text"), " ")) >= 3)
           .select(col("doc_id"), col("text")), "doc_id")
         .join(standing.select(col("text")), Seq("text"), "left_semi")
         .count()
-      // driver-side local relation: the sink dirs are deleted below, so
-      // nothing lazy may still read them
       Seq((batch.count(), nExact)).toDF("n_batch", "n_exact_admitted")
-    } finally deleteTempTree(tmpRoot)
+    }
   }
+
 
   /** s18: STREAMING index TAKEDOWN — x26d's removal discipline with
     * the deletes arriving as a real stream
@@ -817,51 +709,9 @@ object ExtPipelines {
     * (ingest s15/s16, serve s17, delete here); kill/resume
     * exactly-once is pinned by StreamingSpec. Emits `n_batch` (oracle
     * recomputes the md5-bucket rule) and `identical` (TRUE). */
-  def streamIndexDelete(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, dir).select("doc_id", "text")
-    val bk = graft.ext.DataSplit.bucket(col("doc_id"))
-    val standing = docs.filter(bk < 52428)
-    val doomed = docs.filter(bk >= 39321 && bk < 52428)
-    val batch = docs.filter(bk >= 52428)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_s18")
-    try {
-      val incPath = tmpRoot.toString + "/idx"
-      // ONE signing pass over standing feeds BOTH builds (guide §2.4,
-      // the x26d discipline): the rebuild control over standing∖doomed
-      // is a per-doc filter of the same frames; the verb under audit —
-      // the STREAMED tombstone appends — is untouched
-      val (sb, ssh, ssz) = Dedup.minhashIndexFrames(standing)
-      // non-default bucket count: see minhashIndexIngest
-      Dedup.saveMinhashIndexFromFrames(sb, ssh, ssz, incPath,
-        idBuckets = 48)
-      val rbPath = tmpRoot.toString + "/rebuild"
-      Dedup.saveMinhashIndexFromFrames(sb.filter(bk < 39321),
-        ssh.filter(bk < 39321), ssz.filter(bk < 39321), rbPath,
-        idBuckets = 48)
-      ssh.unpersist()
-      val in = tmpRoot.toString + "/in"
-      doomed.select("doc_id").repartition(3).write.parquet(in)
-      val src = spark.readStream
-        .schema(spark.read.parquet(in).schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      val q = graft.streaming.Streaming.minhashDeleteStream(
-        src, incPath, tmpRoot.toString + "/ck")
-      q.awaitTermination()
-      // the batch is signed ONCE for its two serves (§2.4)
-      val bf = Dedup.minhashIndexFrames(batch)
-      // the path serve honors the streamed tombstones automatically
-      val tombAdmitted = Dedup.nearDupIngestFromPath(spark, incPath, batch,
-        batchFrames = Some(bf))
-      val rbAdmitted = Dedup.nearDupIngestFromPath(spark, rbPath, batch,
-        batchFrames = Some(bf))
-      bf._2.unpersist()
-      val identical = multisetEq(tombAdmitted, rbAdmitted)
-      // driver-side local relation (the probes above are eager), so
-      // nothing lazy still reads the index files after cleanup
-      Seq((batch.count(), identical)).toDF("n_batch", "identical")
-    } finally deleteTempTree(tmpRoot)
-  }
+  def streamIndexDelete(spark: SparkSession, dir: String): DataFrame =
+    Audit.removal(spark, dir, MinhashAudit, "s18")(Audit.streamDelete)
+
 
   /** m7: REAL image decode over the corpus — every document gets a
     * deterministic synthetic PNG payload
@@ -1197,34 +1047,17 @@ object ExtPipelines {
       graft.functions.QDigest.clampToUniverse(
         graft.ops.Viewing.cents, m).as("v"))
     val qd = udaf(new graft.functions.QDigestAggregator(k, m))
-    // the build side: ONE events scan producing the tiny daily rows
     val daily = ev.groupBy("source", "day").agg(qd(col("v")).as("digest"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_t37")
-    try {
-      val days = daily.select("day").distinct()
-        .collect().map(_.getString(0)).sorted // O(days) driver rows
-      val store = s"$tmpRoot/store"
-      graft.ext.SketchStore.save(daily.filter(col("day") < days.last),
-        store, QdigestStoreKind)
-      graft.ext.SketchStore.appendDays(
-        daily.filter(col("day") === days.last), store, QdigestStoreKind)
-      // SERVE from the stored frames alone — the merged weekly digests
-      // are materialized driver-side (|weeks| rows × ≤3k-entry maps)
-      // before the temp store goes away: the returned frame must not
-      // lazily re-scan a deleted path
-      import spark.implicits._
-      val weekly = qdigestStoreWeekly(spark, store, days.head, days.last)
-        .as[(String, Map[Long, Long])].collect().toSeq
-        .toDF("source", "digest")
-      quantileFacts(spark, weekly, ev.select("source", "v"), k, m)
-        .withColumnRenamed("source", "week")
-        .withColumn("n_days_stored", lit(days.length.toLong))
-    } finally {
-      daily.unpersist(blocking = false)
-      org.apache.commons.io.FileUtils.deleteQuietly(tmpRoot.toFile)
+    Audit.withDailyStore("graft_t37", daily, QdigestStoreKind) {
+      (days, store) =>
+        // SERVE from the stored frames alone
+        quantileFacts(spark, qdigestStoreWeekly(spark, store, days.head,
+            days.last), ev.select("source", "v"), k, m)
+          .withColumnRenamed("source", "week")
+          .withColumn("n_days_stored", lit(days.length.toLong))
     }
   }
+
 
   /** s20: the STREAMING distribution monitor
     * ([[graft.streaming.Streaming.sourceLengthDigests]]) — t35's
@@ -1800,46 +1633,9 @@ object ExtPipelines {
     * SAME-QUANTIZER rebuild over the survivors — streaming the
     * deletes changes nothing about what deletion means. Emits
     * `n_queries` and `identical` (v12's oracle form). */
-  def streamIvfDelete(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-    val b = graft.ext.DataSplit.bucket(col("vec_id"))
-    val standing = emb.filter(b < 52428)
-    val doomed = standing.filter(b >= 39321)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_s19")
-    try {
-      val incPath = tmpRoot.toString + "/idx"
-      Similarity.saveIvfIndex(standing, incPath, nList = 8, nIters = 1)
-      val in = tmpRoot.toString + "/in"
-      doomed.select("vec_id").repartition(3).write.parquet(in)
-      val src = spark.readStream
-        .schema(spark.read.parquet(in).schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      val q = graft.streaming.Streaming.ivfDeleteStream(
-        src, incPath, tmpRoot.toString + "/ck")
-      q.awaitTermination()
-      val queries = emb.filter(col("vec_id") < 10)
-      // the tombstoned serve (k-bounded, pinned eagerly) and the
-      // rebuild twin's build are independent jobs — overlapped
-      // (guide §2.6); no later mutation, so the pin is for overlap
-      // only, not ordering
-      val rbPath = tmpRoot.toString + "/rebuild"
-      var fromTomb: DataFrame = null
-      graft.ext.IndexLayout.inParallel[Unit](Seq(
-        () => fromTomb = graft.ext.Checkpoints.ckptLocal(
-          Similarity.ivfTopKFromIndex(spark, incPath, queries,
-            k = 5, nProbe = 4)),
-        () => Similarity.saveIvfIndexWithCentroids(
-          standing.filter(b < 39321),
-          Similarity.loadIvfCentroids(spark, incPath), rbPath)))
-      val fromRebuild = Similarity.ivfTopKFromIndex(spark, rbPath, queries,
-        k = 5, nProbe = 4)
-      val identical = multisetEq(fromTomb, fromRebuild)
-      // driver-side local relation (the probes above are eager), so
-      // nothing lazy still reads the index files after cleanup
-      Seq((queries.count(), identical)).toDF("n_queries", "identical")
-    } finally deleteTempTree(tmpRoot)
-  }
+  def streamIvfDelete(spark: SparkSession, dir: String): DataFrame =
+    Audit.removal(spark, dir, IvfAudit, "s19")(Audit.streamDelete)
+
 
   /** v21: int8-STORED persisted IVF index — the storage variant the
     * manifest exists for: `storage = "int8"` is a stored build
@@ -1854,36 +1650,9 @@ object ExtPipelines {
     * ranks — [[graft.ext.Similarity.quantizedTopK]]'s argument inside
     * the probed lists). Emits `n_queries` and `identical` (v12's
     * oracle form). */
-  def ivfIndexQuantized(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_v21")
-    try {
-      val fpPath = tmpRoot.toString + "/fp"
-      val qPath = tmpRoot.toString + "/int8"
-      // the quantizer is trained ONCE and handed to both builds (the
-      // old form trained it in the fp build and read it back for the
-      // int8 one — double-precision parquet round-trips bit-stably, so
-      // the handed-in frame IS what loadIvfCentroids returned); with
-      // the training hoisted the two builds are independent jobs on
-      // disjoint directories — overlapped (guide §2.4/§2.6)
-      val cent = graft.ext.Checkpoints.ckptLocal(
-        Similarity.ivfCentroids(emb, nList = 8, nIters = 1))
-      graft.ext.IndexLayout.inParallel[Unit](Seq(
-        () => Similarity.saveIvfIndexWithCentroids(emb, cent, fpPath),
-        () => Similarity.saveIvfIndexWithCentroids(emb, cent, qPath,
-          storage = "int8")))
-      val queries = emb.filter(col("vec_id") < 10)
-      val fromFp = Similarity.ivfTopKFromIndex(spark, fpPath, queries,
-        k = 5, nProbe = 4)
-      val fromQ = Similarity.ivfTopKFromIndex(spark, qPath, queries,
-        k = 5, nProbe = 4)
-      val identical = multisetEq(fromQ, fromFp)
-      // driver-side local relation (the probes above are eager), so
-      // nothing lazy still reads the index files after cleanup
-      Seq((queries.count(), identical)).toDF("n_queries", "identical")
-    } finally deleteTempTree(tmpRoot)
-  }
+  def ivfIndexQuantized(spark: SparkSession, dir: String): DataFrame =
+    storedLikeFp(spark, dir, "v21", "int8", overFetch = 4)
+
 
   /** v22: the `storage = "pq"` persisted IVF index (packed one-long
     * RESIDUAL PQ codes in the probe frame — ~32× below fp bytes, the
@@ -1895,83 +1664,70 @@ object ExtPipelines {
     * at sf0.1 and recovers fp ranks exactly on this corpus at all
     * three SFs (measured; the honest scale statement is v22b's recall
     * floor at the default overFetch). Emits v12's oracle form. */
-  def ivfIndexPq(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_v22")
-    try {
-      val fpPath = tmpRoot.toString + "/fp"
-      val qPath = tmpRoot.toString + "/pq"
-      // one training, two overlapped builds — v21's rationale verbatim
-      val cent = graft.ext.Checkpoints.ckptLocal(
+  def ivfIndexPq(spark: SparkSession, dir: String): DataFrame =
+    storedLikeFp(spark, dir, "v22", "pq", overFetch = 32)
+
+  /** v21/v22's shared body: one quantizer, trained ONCE and handed to
+    * two builds — full precision and `storage` — that run overlapped on
+    * disjoint directories; the `storage` serve at `overFetch` must equal
+    * the full-precision serve. Emits v12's oracle form. */
+  private def storedLikeFp(spark: SparkSession, dir: String, row: String,
+      storage: String, overFetch: Int): DataFrame =
+    Audit.withScratch(s"graft_$row") { root =>
+      import spark.implicits._
+      val emb = IvfAudit.corpus(spark, dir)
+      val (fpPath, qPath) = (s"$root/fp", s"$root/$storage")
+      val cent = Checkpoints.ckptLocal(
         Similarity.ivfCentroids(emb, nList = 8, nIters = 1))
-      graft.ext.IndexLayout.inParallel[Unit](Seq(
+      IndexLayout.inParallel[Unit](Seq(
         () => Similarity.saveIvfIndexWithCentroids(emb, cent, fpPath),
         () => Similarity.saveIvfIndexWithCentroids(emb, cent, qPath,
-          storage = "pq")))
-      val queries = emb.filter(col("vec_id") < 10)
-      val fromFp = Similarity.ivfTopKFromIndex(spark, fpPath, queries,
-        k = 5, nProbe = 4)
-      val fromQ = Similarity.ivfTopKFromIndex(spark, qPath, queries,
-        k = 5, nProbe = 4, overFetch = 32)
-      val identical = multisetEq(fromQ, fromFp)
-      // driver-side local relation (the probes above are eager), so
-      // nothing lazy still reads the index files after cleanup
+          storage = storage)))
+      val queries = IvfAudit.queries(emb)
+      val identical = multisetEq(
+        IvfAudit.topK(qPath, queries, overFetch = overFetch),
+        IvfAudit.topK(fpPath, queries))
       Seq((queries.count(), identical)).toDF("n_queries", "identical")
-    } finally deleteTempTree(tmpRoot)
-  }
+    }
+
 
   /** v22b: recall@5 floor for the pq-stored index at the DEFAULT
     * overFetch — the honest at-scale statement (v14b's form): even
     * with the coarse prune × residual PQ stack on RANDOM vectors (both
     * approximations' worst case) the served top-5 must contain ≥ 2 of
     * the true brute-force top-5 per query. */
-  def ivfIndexPqRecallBounded(spark: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.register(spark)
-    val emb = Tables.embeddings(spark, dir)
-    val q = queryVecs(spark, dir)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_v22b")
-    try {
-      val qPath = tmpRoot.toString + "/pq"
-      Similarity.saveIvfIndex(emb, qPath, nList = 8, nIters = 1,
+  def ivfIndexPqRecallBounded(spark: SparkSession, dir: String): DataFrame =
+    Audit.withScratch("graft_v22b") { root =>
+      VectorFunctions.register(spark)
+      val emb = IvfAudit.corpus(spark, dir)
+      val q = IvfAudit.queries(emb)
+      Similarity.saveIvfIndex(emb, s"$root/pq", nList = 8, nIters = 1,
         storage = "pq")
       val exact = Similarity.bruteForceTopK(emb, q, k = 5)
         .select(col("query_id"), col("neighbor_id"))
-      val served = Similarity.ivfTopKFromIndex(spark, qPath, q,
-          k = 5, nProbe = 4)
+      val served = IvfAudit.topK(s"$root/pq", q)
         .select(col("query_id"), col("neighbor_id"))
       val hits = served.join(exact, Seq("query_id", "neighbor_id"))
         .groupBy("query_id").agg(count(lit(1)).as("hits"))
-      val out = exact.select("query_id").distinct()
+      exact.select("query_id").distinct()
         .join(hits, Seq("query_id"), "left")
         .select(col("query_id"),
           (coalesce(col("hits"), lit(0L)) >= 2).as("recall_ok"))
-        .collect().toSeq
-      // materialized before cleanup deletes the index files
-      import spark.implicits._
-      out.map(r => (r.getLong(0), r.getBoolean(1)))
-        .toDF("query_id", "recall_ok")
-    } finally deleteTempTree(tmpRoot)
-  }
+    }
 
-  def ivfIndexPersist(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_ivf_idx")
-    val path = tmpRoot.toString + "/idx"
-    try {
-      Similarity.saveIvfIndex(emb, path, nList = 8, nIters = 1)
-      val queries = emb.filter(col("vec_id") < 10)
+
+  def ivfIndexPersist(spark: SparkSession, dir: String): DataFrame =
+    Audit.withScratch("graft_v12") { root =>
+      import spark.implicits._
+      val emb = IvfAudit.corpus(spark, dir)
+      IvfAudit.build(emb, s"$root/idx")
+      val queries = IvfAudit.queries(emb)
       val mem = Similarity.ivfTopK(emb, queries, k = 5,
         nList = 8, nProbe = 4, nIters = 1)
-      val idx = Similarity.ivfTopKFromIndex(spark, path, queries,
-        k = 5, nProbe = 4)
-      val identical = multisetEq(mem, idx)
-      // the result is a driver-side local relation (the identity probes
-      // above are eager), so nothing lazy still reads the index files
+      val identical = multisetEq(mem, IvfAudit.topK(s"$root/idx", queries))
       Seq((queries.count(), identical)).toDF("n_queries", "identical")
-    } finally deleteTempTree(tmpRoot)
-  }
+    }
+
 
   /** v18: persisted IVF index APPEND — the daily-maintenance pin for
     * the vector index (x26c's discipline applied to embeddings). The
@@ -1985,33 +1741,25 @@ object ExtPipelines {
     * assignment is per-row independent of everything but the fixed
     * quantizer and float vectors round-trip parquet bit-stably. Emits
     * (n_queries, identical) — v12's oracle form. */
-  def ivfIndexAppend(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-    val b = graft.ext.DataSplit.bucket(col("vec_id"))
-    val standing = emb.filter(b < 52428)
-    val batch = emb.filter(b >= 52428)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_ivf_append")
-    try {
-      val incPath = tmpRoot.toString + "/inc"
-      Similarity.saveIvfIndex(standing, incPath, nList = 8, nIters = 1)
+  def ivfIndexAppend(spark: SparkSession, dir: String): DataFrame =
+    Audit.withScratch("graft_v18") { root =>
+      import spark.implicits._
+      val s = IvfAudit.split
+      val emb = IvfAudit.corpus(spark, dir)
+      val (standing, batch) = (emb.filter(s.standing), emb.filter(s.batch))
+      val (incPath, rbPath) = (s"$root/inc", s"$root/rebuild")
+      IvfAudit.build(standing, incPath)
       Similarity.appendToIvfIndex(spark, incPath, batch)
-      val queries = emb.filter(col("vec_id") < 10)
-      val fromAppended = Similarity.ivfTopKFromIndex(spark, incPath, queries,
-        k = 5, nProbe = 4)
       // rebuild twin: SAME stored quantizer, lists re-assigned over the
       // full union in one pass — the form the append must be equal to
-      val rbPath = tmpRoot.toString + "/rebuild"
       Similarity.saveIvfIndexWithCentroids(standing.unionByName(batch),
         Similarity.loadIvfCentroids(spark, incPath), rbPath)
-      val fromRebuild = Similarity.ivfTopKFromIndex(spark, rbPath, queries,
-        k = 5, nProbe = 4)
-      val identical = multisetEq(fromAppended, fromRebuild)
-      // driver-side local relation (the probes above are eager), so
-      // nothing lazy still reads the index files after cleanup
+      val queries = IvfAudit.queries(emb)
+      val identical = multisetEq(IvfAudit.topK(incPath, queries),
+        IvfAudit.topK(rbPath, queries))
       Seq((queries.count(), identical)).toDF("n_queries", "identical")
-    } finally deleteTempTree(tmpRoot)
-  }
+    }
+
 
   /** v19: persisted IVF index DELETE — x26d's removal discipline
     * applied to the vector index, completing its CRUD lifecycle (build
@@ -2028,47 +1776,9 @@ object ExtPipelines {
     * maintenance, so rebuild must reuse it for the identity to be
     * meaningful). Identity pin: all three served top-k sets are
     * exactly equal. Emits (n_queries, identical). */
-  def ivfIndexDelete(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-    val b = graft.ext.DataSplit.bucket(col("vec_id"))
-    val standing = emb.filter(b < 52428)
-    val doomed = standing.filter(b >= 39321)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_ivf_delete")
-    try {
-      val incPath = tmpRoot.toString + "/inc"
-      Similarity.saveIvfIndex(standing, incPath, nList = 8, nIters = 1)
-      Similarity.deleteFromIvfIndex(doomed.select("vec_id"), incPath)
-      val queries = emb.filter(col("vec_id") < 10)
-      // pinned EAGERLY (delta-sized): the compaction below deletes the
-      // tombstone files and swaps list dirs this plan reads
-      val fromTomb = graft.ext.Checkpoints.ckptLocal(
-        Similarity.ivfTopKFromIndex(spark, incPath, queries,
-          k = 5, nProbe = 4))
-      // the compaction and the rebuild twin are independent jobs on
-      // disjoint directories (the centroids the rebuild reuses are
-      // carried UNTOUCHED through every flip, and retired dirs outlive
-      // one full compaction interval by the grace contract) —
-      // overlapped (guide §2.6). rebuild twin: SAME stored quantizer,
-      // lists re-assigned over the surviving vectors in one pass
-      val rbPath = tmpRoot.toString + "/rebuild"
-      graft.ext.IndexLayout.inParallel(Seq(
-        () => Similarity.compactIvfTombstones(spark, incPath),
-        () => Similarity.saveIvfIndexWithCentroids(
-          standing.filter(b < 39321),
-          Similarity.loadIvfCentroids(spark, incPath), rbPath)))
-      val fromCompacted = Similarity.ivfTopKFromIndex(spark, incPath, queries,
-        k = 5, nProbe = 4)
-      val fromRebuild = Similarity.ivfTopKFromIndex(spark, rbPath, queries,
-        k = 5, nProbe = 4)
-      val identical =
-        multisetEq(fromTomb, fromRebuild) &&
-          multisetEq(fromCompacted, fromRebuild)
-      // driver-side local relation (the probes above are eager), so
-      // nothing lazy still reads the index files after cleanup
-      Seq((queries.count(), identical)).toDF("n_queries", "identical")
-    } finally deleteTempTree(tmpRoot)
-  }
+  def ivfIndexDelete(spark: SparkSession, dir: String): DataFrame =
+    Audit.removal(spark, dir, IvfAudit, "v19")(Audit.batchDelete)
+
 
   /** x33: minhash index AS-OF (snapshot-pinned) serve — the read-side
     * dividend of manifest-committed appends: every append/delete/flip
@@ -2087,49 +1797,9 @@ object ExtPipelines {
     * deleted docs' dups). Emits `n_batch` (oracle recomputes the
     * md5-bucket rule) with `pinned_pre_append` / `future_delete_invisible`
     * (both TRUE). */
-  def minhashIndexAsOf(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, dir).select("doc_id", "text")
-    val bk = graft.ext.DataSplit.bucket(col("doc_id"))
-    val standing = docs.filter(bk < 52428)
-    val batch = docs.filter(bk >= 52428)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_mh_asof")
-    try {
-      val path = tmpRoot.toString + "/idx"
-      Dedup.saveMinhashIndex(standing, path, idBuckets = 48) // seq 0
-      // the pins need the early seqs retained; the default keeps only
-      // 2 — widen THIS index's retention as a stored layout parameter
-      // (a leased commit, seq 1) instead of mutating the session-global
-      // conf, which would leak into every concurrent commit
-      graft.ext.IndexLayout.setManifestKeep(spark, path, 8) // seq 1
-      // the probe batch is signed ONCE for its four serves (§2.4) —
-      // frames are text-derived, so index mutations between serves
-      // cannot affect them
-      val bf = Dedup.minhashIndexFrames(batch)
-      def serve(asOf: Option[Int]): DataFrame =
-        Dedup.nearDupIngestFromPath(spark, path, batch, asOfSeq = asOf,
-          batchFrames = Some(bf))
-      // eager delta-sized pins: later maintenance swaps files under a
-      // lazy plan, and the comparisons below interleave with commits
-      val r0 = graft.ext.Checkpoints.ckptLocal(serve(None))
-      // the append re-uses the batch's frames (the admitted slice of
-      // per-doc rows, semi-joined on the eagerly-pinned r0) instead of
-      // re-shingling the admitted docs from text (§2.4)
-      def adm(df: DataFrame): DataFrame =
-        df.join(r0, Seq("doc_id"), "left_semi")
-      Dedup.appendToMinhashIndexFromFrames(spark, path,
-        adm(bf._1), adm(bf._2), adm(bf._3)) // seq 2
-      val r1 = graft.ext.Checkpoints.ckptLocal(serve(None))
-      def eq(a: DataFrame, b: DataFrame): Boolean = multisetEq(a, b)
-      val pinnedPreAppend = eq(serve(Some(1)), r0)
-      Dedup.deleteFromMinhashIndex(
-        standing.filter(bk >= 39321).select("doc_id"), path) // seq 3
-      val futureDeleteInvisible = eq(serve(Some(2)), r1)
-      bf._2.unpersist()
-      Seq((batch.count(), pinnedPreAppend, futureDeleteInvisible))
-        .toDF("n_batch", "pinned_pre_append", "future_delete_invisible")
-    } finally deleteTempTree(tmpRoot)
-  }
+  def minhashIndexAsOf(spark: SparkSession, dir: String): DataFrame =
+    Audit.asOf(spark, dir, MinhashAudit, "x33")
+
 
   /** x34: index COMMIT DIFF ([[graft.ext.IndexLayout.diffManifests]])
     * — the audit-trail verb the monotonic commit log enables: each
@@ -2163,54 +1833,47 @@ object ExtPipelines {
     * ([[graft.ext.IndexLayout.setManifestKeep]], one leased commit) —
     * never from mutating the session-global conf, which would leak
     * into concurrent commits on the shared session. */
-  def indexDiff(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, dir).select("doc_id", "text")
-    val bk = graft.ext.DataSplit.bucket(col("doc_id"))
-    val standing = docs.filter(bk < 52428)
-    val batch = docs.filter(bk >= 52428)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_x34")
-    try {
-      val p = tmpRoot.toString + "/idx"
+  def indexDiff(spark: SparkSession, dir: String): DataFrame =
+    Audit.withScratch("graft_x34") { root =>
+      import spark.implicits._
+      val s = MinhashAudit.split
+      val docs = MinhashAudit.corpus(spark, dir)
+      val p = s"$root/idx"
       // the build and the append draw on ONE signing pass over the
-      // corpus (guide §2.4; per-doc bucket filters of shared frames —
-      // the x35 discipline); the verbs' commit-log effects, which are
-      // what x34 diffs, are untouched
+      // corpus (per-doc bucket filters of shared frames); the verbs'
+      // commit-log effects, which are what x34 diffs, are untouched
       val (db, dsh, dsz) = Dedup.minhashIndexFrames(docs)
-      Dedup.saveMinhashIndexFromFrames(db.filter(bk < 52428),
-        dsh.filter(bk < 52428), dsz.filter(bk < 52428), p,
-        idBuckets = 48) // seq 0
-      graft.ext.IndexLayout.setManifestKeep(spark, p, 16) // seq 1
-      Dedup.appendToMinhashIndexFromFrames(spark, p,
-        db.filter(bk >= 52428), dsh.filter(bk >= 52428),
-        dsz.filter(bk >= 52428)) // seq 2
+      Dedup.saveMinhashIndexFromFrames(db.filter(s.standing),
+        dsh.filter(s.standing), dsz.filter(s.standing), p,
+        idBuckets = MinhashAudit.Buckets) // seq 0
+      IndexLayout.setManifestKeep(spark, p, 16) // seq 1
+      Dedup.appendToMinhashIndexFromFrames(spark, p, db.filter(s.batch),
+        dsh.filter(s.batch), dsz.filter(s.batch)) // seq 2
       dsh.unpersist()
-      Dedup.deleteFromMinhashIndex(
-        standing.filter(bk >= 39321).select("doc_id"), p) // seq 3
+      Dedup.deleteFromMinhashIndex(docs.filter(s.doomed).select("doc_id"),
+        p) // seq 3
       Dedup.compactMinhashTombstones(spark, p) // seq 4, gen 1
       Dedup.rebucketMinhashIndex(spark, p, 96) // seq 5, gen 2
-      def m(s: Int) = graft.ext.IndexLayout.readManifestAt(spark, p, s)
+      def m(s: Int) = IndexLayout.readManifestAt(spark, p, s)
       val legs = Seq(("append", 1, 2), ("delete", 2, 3),
         ("compact", 3, 4), ("rebucket", 4, 5),
         ("window", 1, 5)).map { case (leg, a, b) =>
         val (gd, sd, perFrame, changed) =
-          graft.ext.IndexLayout.diffManifests(m(a), m(b))
+          IndexLayout.diffManifests(m(a), m(b))
         val fm = perFrame.map(x => x._1 -> ((x._2, x._3))).toMap
         val mB = m(b)
-        val bkts = graft.ext.IndexLayout.intParam(mB, p, "buckets")
+        val bkts = IndexLayout.intParam(mB, p, "buckets")
         val bounded = Seq("shingles", "sizes").forall(f =>
-          graft.ext.IndexLayout.frameEntries(mB, f).size <= bkts + 1)
+          IndexLayout.frameEntries(mB, f).size <= bkts + 1)
         (leg, gd, sd, fm("bands")._1, fm("bands")._2,
           fm("tombstones")._1, fm("tombstones")._2,
           changed.mkString(","), bounded)
       }
-      // driver-side local relation (manifests already read eagerly),
-      // so nothing lazy reads the index files after cleanup
       legs.toDF("leg", "gen_delta", "seq_delta", "bands_added",
         "bands_removed", "tomb_added", "tomb_removed", "params_changed",
         "composition_bounded")
-    } finally deleteTempTree(tmpRoot)
-  }
+    }
+
 
   /** v26: IVF index AS-OF serve — x33's discipline on the vector
     * index: build on the standing split (seq 0, retention widened at
@@ -2220,35 +1883,9 @@ object ExtPipelines {
     * serve@seq2 ≡ R1 (append visible, FUTURE delete not — the head
     * serve meanwhile re-fills the freed top-k slots). Emits
     * `n_queries` + the two TRUE pins. */
-  def ivfIndexAsOf(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-    val b = graft.ext.DataSplit.bucket(col("vec_id"))
-    val standing = emb.filter(b < 52428)
-    val batch = emb.filter(b >= 52428)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_ivf_asof")
-    try {
-      val path = tmpRoot.toString + "/idx"
-      Similarity.saveIvfIndex(standing, path, nList = 8, nIters = 1) // seq 0
-      // widen THIS index's retention as a stored layout parameter (one
-      // leased commit) — not the session-global conf (x33's note)
-      graft.ext.IndexLayout.setManifestKeep(spark, path, 8) // seq 1
-      val queries = emb.filter(col("vec_id") < 10)
-      def serve(asOf: Option[Int]): DataFrame =
-        Similarity.ivfTopKFromIndex(spark, path, queries, k = 5, nProbe = 4,
-          asOfSeq = asOf)
-      val r0 = graft.ext.Checkpoints.ckptLocal(serve(None))
-      Similarity.appendToIvfIndex(spark, path, batch) // seq 2
-      val r1 = graft.ext.Checkpoints.ckptLocal(serve(None))
-      def eq(a: DataFrame, b: DataFrame): Boolean = multisetEq(a, b)
-      val pinnedPreAppend = eq(serve(Some(1)), r0)
-      Similarity.deleteFromIvfIndex(
-        standing.filter(b >= 39321).select("vec_id"), path) // seq 3
-      val futureDeleteInvisible = eq(serve(Some(2)), r1)
-      Seq((queries.count(), pinnedPreAppend, futureDeleteInvisible))
-        .toDF("n_queries", "pinned_pre_append", "future_delete_invisible")
-    } finally deleteTempTree(tmpRoot)
-  }
+  def ivfIndexAsOf(spark: SparkSession, dir: String): DataFrame =
+    Audit.asOf(spark, dir, IvfAudit, "v26")
+
 
   /** v23: persisted IVF index RETRAIN — the quantizer-replacement verb
     * ([[graft.ext.Similarity.retrainIvfIndex]]) that completes the
@@ -2267,43 +1904,35 @@ object ExtPipelines {
     * survivor multiset. Emits `n_queries`, `n_list_after` (the flipped
     * manifest's stored nList, read back by the serve path) and
     * `identical` (TRUE). */
-  def ivfIndexRetrain(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-    val b = graft.ext.DataSplit.bucket(col("vec_id"))
-    val standing = emb.filter(b < 52428)
-    val doomed = standing.filter(b >= 39321)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_ivf_retrain")
-    try {
-      val incPath = tmpRoot.toString + "/inc"
-      val rbPath = tmpRoot.toString + "/rebuild"
+  def ivfIndexRetrain(spark: SparkSession, dir: String): DataFrame =
+    Audit.withScratch("graft_v23") { root =>
+      import spark.implicits._
+      val s = IvfAudit.split
+      val emb = IvfAudit.corpus(spark, dir)
+      val (incPath, rbPath) = (s"$root/inc", s"$root/rebuild")
       // the two legs are fully independent — the fresh twin trains its
       // OWN deterministic quantizer over the survivors, touching only
-      // its own directory — so they run overlapped (guide §2.6)
-      graft.ext.IndexLayout.inParallel(Seq(
+      // its own directory — so they run overlapped
+      IndexLayout.inParallel(Seq(
         () => {
-          Similarity.saveIvfIndex(standing, incPath, nList = 8, nIters = 1)
-          Similarity.deleteFromIvfIndex(doomed.select("vec_id"), incPath)
+          IvfAudit.build(emb.filter(s.standing), incPath)
+          Similarity.deleteFromIvfIndex(
+            emb.filter(s.doomed).select("vec_id"), incPath)
           Similarity.retrainIvfIndex(spark, incPath, nList = 12, nIters = 1)
         },
         // fresh twin: the SAME deterministic training over the
         // identical survivor multiset — the form the retrain must be
         // equal to
-        () => Similarity.saveIvfIndex(standing.filter(b < 39321), rbPath,
+        () => Similarity.saveIvfIndex(emb.filter(s.survivors), rbPath,
           nList = 12, nIters = 1)))
       val nListAfter = Similarity.ivfIndexParams(spark, incPath)("nList")
-      val queries = emb.filter(col("vec_id") < 10)
-      val fromRetrained = Similarity.ivfTopKFromIndex(spark, incPath, queries,
-        k = 5, nProbe = 4)
-      val fromFresh = Similarity.ivfTopKFromIndex(spark, rbPath, queries,
-        k = 5, nProbe = 4)
-      val identical = multisetEq(fromRetrained, fromFresh)
-      // driver-side local relation (the probes above are eager), so
-      // nothing lazy still reads the index files after cleanup
+      val queries = IvfAudit.queries(emb)
+      val identical = multisetEq(IvfAudit.topK(incPath, queries),
+        IvfAudit.topK(rbPath, queries))
       Seq((queries.count(), nListAfter.toLong, identical))
         .toDF("n_queries", "n_list_after", "identical")
-    } finally deleteTempTree(tmpRoot)
-  }
+    }
+
 
   /** x31: index DESCRIBE ([[graft.ext.IndexLayout.describeIndex]]) —
     * the read-only ops-dashboard row for both index families. The
@@ -2323,45 +1952,41 @@ object ExtPipelines {
     * Describe itself is manifest + one delta-sized tombstone scan —
     * never a corpus-scale read — and takes no lease (lock-free like
     * the serves). */
-  def indexDescribe(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, dir)
-    val emb = Tables.embeddings(spark, dir)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_x31")
-    try {
-      val mhPath = s"$tmpRoot/mh"
-      val ivfPath = s"$tmpRoot/ivf"
+  def indexDescribe(spark: SparkSession, dir: String): DataFrame =
+    Audit.withScratch("graft_x31") { root =>
+      import spark.implicits._
+      val docs = Tables.documents(spark, dir)
+      val emb = IvfAudit.corpus(spark, dir)
+      val (mhPath, ivfPath) = (s"$root/mh", s"$root/ivf")
       // the two families' build+delete fixtures are independent jobs —
-      // disjoint directories, per-path leases — overlapped (guide §2.6)
-      graft.ext.IndexLayout.inParallel(Seq(
+      // disjoint directories, per-path leases — overlapped
+      IndexLayout.inParallel(Seq(
         () => {
           Dedup.saveMinhashIndex(docs, mhPath)
           Dedup.deleteFromMinhashIndex(
-            docs.filter(graft.ext.DataSplit.bucket(col("doc_id")) >= 58982)
-              .select("doc_id"), mhPath)
+            docs.filter(MinhashAudit.split.range(58982)).select("doc_id"),
+            mhPath)
         },
         () => {
           Similarity.saveIvfIndexWithCentroids(emb,
             Similarity.ivfSeedCentroids(emb, nList = 8)
               .select(col("seed_id").as("list_id"), col("cvec")), ivfPath)
           Similarity.deleteFromIvfIndex(
-            emb.filter(graft.ext.DataSplit.bucket(col("vec_id")) >= 58982)
-              .select("vec_id"), ivfPath)
+            emb.filter(IvfAudit.split.range(58982)).select("vec_id"),
+            ivfPath)
         }))
       val legs = Seq("minhash" -> mhPath, "ivf" -> ivfPath).map {
         case (leg, p) =>
           val (m, frames, nTomb, held, nRetired) =
-            graft.ext.IndexLayout.describeIndex(spark, p)
+            IndexLayout.describeIndex(spark, p)
           (leg, m("format"), m("schemaVersion").toLong, m("gen").toLong,
             frames.size.toLong, frames.map(_.nEntries).sum.toLong,
             nTomb, !held, nRetired.toLong)
       }
-      // driver-side local relation (describe is eager), so nothing lazy
-      // still reads the index files after cleanup
       legs.toDF("leg", "format", "schema_version", "gen", "n_frames",
         "n_entries", "n_tombstones", "lease_free", "n_retired")
-    } finally deleteTempTree(tmpRoot)
-  }
+    }
+
 
   /** x32: the MinHash-family maintenance AUTOPILOT
     * ([[graft.ext.Dedup.maintainMinhashIndex]]) — the policy verb a
@@ -2382,10 +2007,8 @@ object ExtPipelines {
     * leg ends with zero backlog. */
   def minhashIndexMaintain(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val docs = Tables.documents(spark, dir)
-    val doomed = docs
-      .filter(graft.ext.DataSplit.bucket(col("doc_id")) >= 52428)
-      .select("doc_id")
+    val docs = MinhashAudit.corpus(spark, dir)
+    val doomed = docs.filter(MinhashAudit.split.range(52428)).select("doc_id")
     val target = 50L
     val nTotal = docs.count()
     val nLive = nTotal - doomed.count()
@@ -2399,16 +2022,14 @@ object ExtPipelines {
       s"x32 fixture needs ≥ ${2 * target} live docs (got $nLive): the " +
         "outgrown leg cannot fire on a one-bucket corpus")
     val smallCount = math.max(1L, desired / 4).toInt
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_x32")
-    try {
+    Audit.withScratch("graft_x32") { root =>
       // ONE signing pass over the corpus feeds all three legs' builds
-      // (guide §2.4 — the legs previously re-shingled and re-signed the
-      // full corpus each; the bucket count is applied at write time, so
-      // one frames triple serves both build counts), and the legs —
-      // disjoint directories, per-path leases, no shared mutable state
-      // — run overlapped (guide §2.6): the verb costs ~the slowest leg,
-      // not the sum of three. All three frames are pinned hot because
-      // every leg's build scans each of them once.
+      // (the bucket count is applied at write time, so one frames triple
+      // serves both build counts), and the legs — disjoint directories,
+      // per-path leases, no shared mutable state — run overlapped: the
+      // verb costs ~the slowest leg, not the sum of three. All three
+      // frames are pinned hot because every leg's build scans each of
+      // them once.
       import org.apache.spark.storage.StorageLevel
       val (db0, dsh, dsz0) = Dedup.minhashIndexFrames(docs)
       val db = db0.persist(StorageLevel.MEMORY_AND_DISK)
@@ -2420,33 +2041,29 @@ object ExtPipelines {
       // phase 1: the three builds (the only consumers of the pinned
       // frames), overlapped; the caches free BEFORE the maintain phase
       // so its rewrites don't run against three pinned corpus frames
-      graft.ext.IndexLayout.inParallel[Unit](legSpecs.map {
+      IndexLayout.inParallel[Unit](legSpecs.map {
         case (leg, buildBuckets, _) => () =>
-          Dedup.saveMinhashIndexFromFrames(db, dsh, dsz, s"$tmpRoot/$leg",
+          Dedup.saveMinhashIndexFromFrames(db, dsh, dsz, s"$root/$leg",
             idBuckets = buildBuckets)
       })
-      db.unpersist()
-      dsh.unpersist()
-      dsz.unpersist()
+      Seq(db, dsh, dsz).foreach(_.unpersist())
       // phase 2: delete + autopilot + describe per leg, overlapped
-      val legs = graft.ext.IndexLayout.inParallel(legSpecs.map {
+      val legs = IndexLayout.inParallel(legSpecs.map {
         case (leg, _, del) => () => {
-          val p = s"$tmpRoot/$leg"
+          val p = s"$root/$leg"
           if (del) Dedup.deleteFromMinhashIndex(doomed, p)
           val (compacted, rebucketed) = Dedup.maintainMinhashIndex(spark, p,
             maxTombstonePct = 10, targetDocsPerBucket = target)
-          val (m, _, nTombAfter, _, _) =
-            graft.ext.IndexLayout.describeIndex(spark, p)
+          val (m, _, nTombAfter, _, _) = IndexLayout.describeIndex(spark, p)
           (leg, compacted, rebucketed, m("buckets").toLong,
             m("gen").toLong, nTombAfter)
         }
       })
-      // driver-side local relation (describe is eager), so nothing lazy
-      // still reads the index files after cleanup
       legs.toDF("leg", "compacted", "rebucketed", "buckets_after",
         "gen_after", "n_tombstones_after")
-    } finally deleteTempTree(tmpRoot)
+    }
   }
+
 
   /** x35: the autopilot's COMPOSITION-LENGTH (fold) trigger
     * ([[graft.ext.Dedup.maintainMinhashIndex]]'s third leg) on an
@@ -2479,104 +2096,21 @@ object ExtPipelines {
     * instead of a second full build. */
   def minhashIndexFold(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val docs = Tables.documents(spark, dir).select("doc_id", "text")
-    val bk = graft.ext.DataSplit.bucket(col("doc_id"))
-    val base = docs.filter(bk < 32768)
-    // the base build and all four appends draw on ONE signing pass over
-    // the corpus (guide §2.4): each slice is a per-doc bucket filter of
-    // the shared frames (frames(docs.filter(p)) = frames(docs).filter(p)
-    // exactly), so the fixture shingles/signs the corpus once instead
-    // of five times. The verb under audit — the autopilot's fold of
-    // committed batch roots — is untouched.
-    val batchPreds = Seq(
-      bk >= 32768 && bk < 40960,
-      bk >= 40960 && bk < 49152,
-      bk >= 49152 && bk < 57344,
-      bk >= 57344)
-    // sizing-cold build count: the rule's own count over the FULL
-    // corpus (after every append desired == stored, never 2× outgrown)
-    val target = 50L
-    val rightCount = ((docs.count() + target - 1) / target).toInt
     // probe batch: half standing dups (must reject), half novel docs
-    // (must admit) — the serve whose result the fold must not change.
-    // Eagerly pinned ONCE (ckptLocal): both serves must probe the same
+    // (must admit). Eagerly pinned ONCE: both serves must probe the same
     // rows, and an unordered limit re-evaluated per job could not
     // guarantee that
-    val probes = graft.ext.Checkpoints.ckptLocal(
-      base.orderBy("doc_id").limit(5).select(
-        (col("doc_id") + 9000000L).as("doc_id"), col("text"))
+    val probes = Checkpoints.ckptLocal(
+      MinhashAudit.corpus(spark, dir).filter(MinhashAudit.split.foldBase)
+        .orderBy("doc_id").limit(5).select(
+          (col("doc_id") + 9000000L).as("doc_id"), col("text"))
       .unionAll(Seq.tabulate(5)(i =>
         (9100000L + i, s"qq${i}a qq${i}b qq${i}c qq${i}d qq${i}e qq${i}f"))
         .toDF("doc_id", "text")))
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_x35")
-    try {
-      def leg(p: String, name: String, serveCheck: Boolean) = {
-        def mNow() = graft.ext.IndexLayout
-          .requireManifest(spark, p, Dedup.MinhashIndexFormat)
-        val mBefore = mNow()
-        val batchesBefore = graft.ext.IndexLayout.maxBatchRootCount(mBefore)
-        // the OVER leg pins serve identity by observation (the fold
-        // swaps files under the plan — the claim worth paying two
-        // serves for); the UNDER leg's autopilot is a manifest-level
-        // no-op, where manifest equality is the STRONGER pin (an
-        // unchanged composition over immutable committed files cannot
-        // serve differently) at zero serve cost
-        val served0 = if (serveCheck) Some(graft.ext.Checkpoints.ckptLocal(
-          Dedup.nearDupIngestFromPath(spark, p, probes))) else None
-        val (compacted, rebucketed) = Dedup.maintainMinhashIndex(spark, p,
-          maxTombstonePct = 10, targetDocsPerBucket = target,
-          maxAppendBatches = 3)
-        val serveIdentical = served0 match {
-          case Some(s0) =>
-            val served1 = Dedup.nearDupIngestFromPath(spark, p, probes)
-            multisetEq(s0, served1)
-          case None => mNow() == mBefore
-        }
-        val (m, _, nTombAfter, _, _) =
-          graft.ext.IndexLayout.describeIndex(spark, p)
-        (name, compacted, rebucketed, batchesBefore.toLong,
-          graft.ext.IndexLayout.maxBatchRootCount(m).toLong,
-          m("gen").toLong, nTombAfter, serveIdentical)
-      }
-      // the base index is built ONCE: the under leg IS the over leg's
-      // prefix (its autopilot fires nothing by construction — gen 0,
-      // both roots standing — so the post-autopilot directory is
-      // bit-identical to a fresh build + 2 appends), and the over leg
-      // resumes from a copy instead of paying a second full build
-      import org.apache.spark.storage.StorageLevel
-      val (fb0, fsh, fsz0) = Dedup.minhashIndexFrames(docs)
-      val fb = fb0.persist(StorageLevel.MEMORY_AND_DISK)
-      val fsz = fsz0.persist(StorageLevel.MEMORY_AND_DISK)
-      def appendSlice(path: String, pred: org.apache.spark.sql.Column): Unit =
-        Dedup.appendToMinhashIndexFromFrames(spark, path,
-          fb.filter(pred), fsh.filter(pred), fsz.filter(pred))
-      val underPath = s"$tmpRoot/under"
-      Dedup.saveMinhashIndexFromFrames(fb.filter(bk < 32768),
-        fsh.filter(bk < 32768), fsz.filter(bk < 32768), underPath,
-        idBuckets = rightCount)
-      batchPreds.take(2).foreach(p => appendSlice(underPath, p))
-      val under = leg(underPath, "under", serveCheck = false)
-      require(!under._2 && !under._3 && under._6 == 0L,
-        s"x35 under-leg autopilot must be a no-op (got $under): the " +
-          "over leg resumes from this directory")
-      val overPath = s"$tmpRoot/over"
-      org.apache.commons.io.FileUtils.copyDirectory(
-        new java.io.File(underPath), new java.io.File(overPath))
-      batchPreds.drop(2).foreach(p => appendSlice(overPath, p))
-      fb.unpersist()
-      fsh.unpersist()
-      fsz.unpersist()
-      val over = leg(overPath, "over", serveCheck = true)
-      // driver-side local relation (describe/serve pins are eager), so
-      // nothing lazy still reads the index files after cleanup
-      Seq(under, over).toDF("leg", "compacted", "rebucketed",
-        "batches_before", "batches_after", "gen_after",
-        "n_tombstones_after", "serve_identical")
-    } finally {
-      graft.ext.Checkpoints.free(probes)
-      deleteTempTree(tmpRoot)
-    }
+    try Audit.fold(spark, dir, MinhashAudit, "x35", probes)
+    finally Checkpoints.free(probes)
   }
+
 
   /** v24: drift-GATED index maintenance
     * ([[graft.ext.Similarity.driftGateIvfIndex]]) — the decision layer
@@ -2600,40 +2134,38 @@ object ExtPipelines {
     * tombstones) is recomputed by SQL as the full embeddings count. */
   def ivfIndexDriftGate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-    val b = graft.ext.DataSplit.bucket(col("vec_id"))
-    val standing = emb.filter(b < 52428)
-    val heldOut = emb.filter(b >= 52428)
+    val s = IvfAudit.split
+    val emb = IvfAudit.corpus(spark, dir)
+    val standing = emb.filter(s.standing)
+    val heldOut = emb.filter(s.batch)
     val collapsed = heldOut.select(col("vec_id"),
       transform(col("embedding").cast("array<double>"),
         (x, i) => when(i === 0, lit(1.0)).otherwise(x / lit(100.0)))
         .cast("array<float>").as("embedding"))
     val seeds = Similarity.ivfSeedCentroids(standing, nList = 8)
       .select(col("seed_id").as("list_id"), col("cvec"))
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_ivf_gate")
-    try {
+    Audit.withScratch("graft_v24") { root =>
       // independent legs — disjoint directories, per-path leases, no
-      // shared mutable state — overlapped (guide §2.6): the verb costs
-      // ~the slower leg, not the sum
-      val legs = graft.ext.IndexLayout.inParallel(
+      // shared mutable state — overlapped: the verb costs ~the slower
+      // leg, not the sum
+      val legs = IndexLayout.inParallel(
         Seq("stable" -> heldOut, "drifted" -> collapsed).map {
           case (name, batch) => () => {
-            val path = s"$tmpRoot/$name"
+            val path = s"$root/$name"
             Similarity.saveIvfIndexWithCentroids(standing, seeds, path)
             val (_, retrained) = Similarity.driftGateIvfIndex(spark, path,
               batch, tvThresholdMu = 500000L, retrainNList = 12, nIters = 1)
             val m = Similarity.ivfIndexParams(spark, path)
             val nListAfter = m("nList").toLong
-            val nIndexed = graft.ext.IndexLayout
-              .readFrame(spark, path, m, "lists").count()
+            val nIndexed = IndexLayout.readFrame(spark, path, m, "lists")
+              .count()
             (name, nIndexed, retrained, nListAfter)
           }
         })
-      // driver-side local relation (every index read above is eager),
-      // so nothing lazy still reads the index files after cleanup
       legs.toDF("leg", "n_indexed", "retrained", "n_list_after")
-    } finally deleteTempTree(tmpRoot)
+    }
   }
+
 
   /** v25: the IVF-family maintenance autopilot
     * ([[graft.ext.Similarity.maintainIvfIndex]]) — three legs, every
@@ -2663,10 +2195,8 @@ object ExtPipelines {
     *    `n_live_after` = the SQL-recomputed class-0 count. */
   def ivfIndexMaintain(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-    val doomed = emb
-      .filter(graft.ext.DataSplit.bucket(col("vec_id")) >= 52428)
-      .select("vec_id")
+    val emb = IvfAudit.corpus(spark, dir)
+    val doomed = emb.filter(IvfAudit.split.range(52428)).select("vec_id")
     val seeds = Similarity.ivfSeedCentroids(emb, nList = 8)
       .select(col("seed_id").as("list_id"), col("cvec"))
     // the imbalanced leg's crafted embedding: one-hot on the md5 class
@@ -2684,34 +2214,30 @@ object ExtPipelines {
       (d.toLong, Seq.tabulate(9)(i => if (i == d) 1.0 else 0.0)))
       .toDF("list_id", "cvec")
     val craftedDoomed = crafted.filter(cls =!= 0).select("vec_id")
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_v25")
-    try {
+    Audit.withScratch("graft_v25") { root =>
       // independent legs — disjoint directories, per-path leases, no
-      // shared mutable state — overlapped (guide §2.6): the verb costs
-      // ~the slowest leg, not the sum of three
-      val legs = graft.ext.IndexLayout.inParallel(Seq(
+      // shared mutable state — overlapped: the verb costs ~the slowest
+      // leg, not the sum of three
+      val legs = IndexLayout.inParallel(Seq(
         ("idle", emb, seeds, None),
         ("backlog", emb, seeds, Some(doomed)),
         ("imbalanced", crafted, craftedCents, Some(craftedDoomed))).map {
         case (leg, corpus, cents, del) => () => {
-          val p = s"$tmpRoot/$leg"
+          val p = s"$root/$leg"
           Similarity.saveIvfIndexWithCentroids(corpus, cents, p)
           del.foreach(d => Similarity.deleteFromIvfIndex(d, p))
           val (retrained, compacted) = Similarity.maintainIvfIndex(spark, p,
             maxTombstonePct = 10)
-          val (m, _, nTombAfter, _, _) =
-            graft.ext.IndexLayout.describeIndex(spark, p)
-          val nLive = graft.ext.IndexLayout
-            .readFrame(spark, p, m, "lists").count()
+          val (m, _, nTombAfter, _, _) = IndexLayout.describeIndex(spark, p)
+          val nLive = IndexLayout.readFrame(spark, p, m, "lists").count()
           (leg, retrained, compacted, m("gen").toLong, nTombAfter, nLive)
         }
       })
-      // driver-side local relation (describe is eager), so nothing lazy
-      // still reads the index files after cleanup
       legs.toDF("leg", "retrained", "compacted", "gen_after",
         "n_tombstones_after", "n_live_after")
-    } finally deleteTempTree(tmpRoot)
+    }
   }
+
 
   /** v27: the IVF autopilot's COMPOSITION-LENGTH (fold) trigger
     * ([[graft.ext.Similarity.maintainIvfIndex]]'s third leg) on an
@@ -2724,68 +2250,17 @@ object ExtPipelines {
     * distance is ≤ 1,000,000 by definition, so the retrain comparison
     * is arithmetic-false whatever the occupancies (stronger than the
     * measured-noise argument v25's idle leg rests on).
-    * `serve_identical` pins the fold's read-side no-op: the same
-    * query batch's exact top-k before and after, eagerly pinned
-    * before the fold swaps files under the lazy plan. Fixture cost:
+    * `serve_identical` pins the fold's read-side no-op: on the over
+    * leg the v12 query set's top-k before and after, eagerly pinned
+    * before the fold swaps files under the lazy plan; on the under leg
+    * (no verb fires) manifest equality, x35's stronger pin. Fixture cost:
     * x35's shared-prefix discipline — one base build, the over leg
     * resumes from a copy of the under leg's (no-op-autopiloted)
     * directory. */
-  def ivfIndexFold(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-    val b = graft.ext.DataSplit.bucket(col("vec_id"))
-    val base = emb.filter(b < 32768)
-    val batches = Seq(
-      emb.filter(b >= 32768 && b < 40960),
-      emb.filter(b >= 40960 && b < 49152),
-      emb.filter(b >= 49152 && b < 57344),
-      emb.filter(b >= 57344))
-    val queries = emb.filter(col("vec_id") < 5)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_v27")
-    try {
-      def leg(p: String, name: String) = {
-        def mNow() = graft.ext.IndexLayout
-          .requireManifest(spark, p, Similarity.IvfIndexFormat)
-        val batchesBefore = graft.ext.IndexLayout.maxBatchRootCount(mNow())
-        val served0 = graft.ext.Checkpoints.ckptLocal(
-          Similarity.ivfTopKFromIndex(spark, p, queries, k = 5, nProbe = 4))
-        val (retrained, compacted) = Similarity.maintainIvfIndex(spark, p,
-          maxTombstonePct = 10, imbalanceTvThresholdMu = 1000000L,
-          maxAppendBatches = 3)
-        val served1 =
-          Similarity.ivfTopKFromIndex(spark, p, queries, k = 5, nProbe = 4)
-        val serveIdentical = multisetEq(served0, served1)
-        val (m, _, nTombAfter, _, _) =
-          graft.ext.IndexLayout.describeIndex(spark, p)
-        (name, compacted, retrained, batchesBefore.toLong,
-          graft.ext.IndexLayout.maxBatchRootCount(m).toLong,
-          m("gen").toLong, nTombAfter, serveIdentical)
-      }
-      // x35's shared-prefix discipline: one base build; the under
-      // leg's autopilot is a no-op by construction, so the over leg
-      // resumes from a copy of its directory (bit-identical to a
-      // fresh build + 2 appends) and pays only its own 2 extra appends
-      val underPath = s"$tmpRoot/under"
-      Similarity.saveIvfIndex(base, underPath, nList = 8, nIters = 1)
-      batches.take(2).foreach(bt =>
-        Similarity.appendToIvfIndex(spark, underPath, bt))
-      val under = leg(underPath, "under")
-      require(!under._2 && !under._3 && under._6 == 0L,
-        s"v27 under-leg autopilot must be a no-op (got $under): the " +
-          "over leg resumes from this directory")
-      val overPath = s"$tmpRoot/over"
-      org.apache.commons.io.FileUtils.copyDirectory(
-        new java.io.File(underPath), new java.io.File(overPath))
-      batches.drop(2).foreach(bt =>
-        Similarity.appendToIvfIndex(spark, overPath, bt))
-      val over = leg(overPath, "over")
-      // driver-side local relation (describe/serve pins are eager), so
-      // nothing lazy still reads the index files after cleanup
-      Seq(under, over).toDF("leg", "compacted", "retrained",
-        "batches_before", "batches_after", "gen_after",
-        "n_tombstones_after", "serve_identical")
-    } finally deleteTempTree(tmpRoot)
-  }
+  def ivfIndexFold(spark: SparkSession, dir: String): DataFrame =
+    Audit.fold(spark, dir, IvfAudit, "v27",
+      IvfAudit.queries(IvfAudit.corpus(spark, dir)))
+
 
   /** v11: per-source centroid drift
     * ([[graft.ext.Similarity.snapshotCentroidDrift]]) between the x19
@@ -2830,30 +2305,24 @@ object ExtPipelines {
     * drained union equals the one-shot batch assignment bit-for-bit —
     * v9's oracle SQL covers this run verbatim (the s9 ≡ x16 pattern). */
   def streamIvfIngest(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-    val b = graft.ext.DataSplit.bucket(col("vec_id"))
+    val s = IvfAudit.split
     // nList=8 seed rows, pinned eagerly so the standing corpus is
     // scanned exactly once for the whole stream (ckptLocal — the
     // non-recomputable-checkpoint discipline's 2-replica level)
-    val seeds = graft.ext.Checkpoints.ckptLocal(
-      Similarity.ivfSeedCentroids(emb.filter(b < 52428), nList = 8))
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_s16")
-    try {
+    val seeds = Checkpoints.ckptLocal(Similarity.ivfSeedCentroids(
+      IvfAudit.corpus(spark, dir).filter(s.standing), nList = 8))
+    Audit.withScratch("graft_s16") { root =>
       val stream = graft.streaming.Streaming.embeddingsStream(spark, dir)
-        .filter(graft.ext.DataSplit.bucket(col("vec_id")) >= 52428)
+        .filter(s.batch)
       val q = graft.streaming.Streaming.ivfIngestStream(stream, seeds,
-        s"$tmpRoot/out", s"$tmpRoot/ck")
+        s"$root/out", s"$root/ck")
       q.awaitTermination()
-      // driver-side local relation: the sink dirs are deleted below.
-      // Bounded at the TEST batch split's row count (delta-sized ids,
-      // two longs per row), the x26/v18 harness-row exception class.
-      val rows = spark.read.parquet(s"$tmpRoot/out")
+      // bounded at the batch split's row count (two longs per row)
+      spark.read.parquet(s"$root/out")
         .select(col("vec_id").cast("long"), col("list_id").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      rows.toDF("vec_id", "list_id")
-    } finally deleteTempTree(tmpRoot)
+    }
   }
+
 
   /** Memoized per-JVM IVF index store for [[streamIvfServe]] (s17) —
     * the x26bIndex pattern on the vector side: one FIXED path per
@@ -2874,33 +2343,25 @@ object ExtPipelines {
     * (identical flag) and oracle-covered by v12's SQL form verbatim. */
   def streamIvfServe(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-    val path = s17Index(dir) {
-      val p = sys.props("java.io.tmpdir") +
-        s"/graft_s17_idx_${dirKey(dir)}"
-      Similarity.saveIvfIndex(emb, p, nList = 8, nIters = 1)
-      p
-    }
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_s17")
-    try {
-      val stream = graft.streaming.Streaming.embeddingsStream(spark, dir)
-        .filter(col("vec_id") < 10)
-      val q = graft.streaming.Streaming.ivfServeStream(stream, path,
-        s"$tmpRoot/out", s"$tmpRoot/ck")
+    val emb = IvfAudit.corpus(spark, dir)
+    val path = memoPath(s17Index, dir, "s17_idx")(IvfAudit.build(emb, _))
+    Audit.withScratch("graft_s17") { root =>
+      val queries = IvfAudit.queries(emb)
+      val q = graft.streaming.Streaming.ivfServeStream(
+        graft.streaming.Streaming.embeddingsStream(spark, dir)
+          .filter(col("vec_id") < 10),
+        path, s"$root/out", s"$root/ck")
       q.awaitTermination()
-      val queries = emb.filter(col("vec_id") < 10)
       // default stream vs default batch serve (the wrapper's defaults
       // are pinned to ivfTopKFromIndex's)
       val batchServed = Similarity.ivfTopKFromIndex(spark, path, queries)
-      val streamServed = spark.read.parquet(s"$tmpRoot/out")
+      val streamServed = spark.read.parquet(s"$root/out")
         .select("query_id", "neighbor_id", "rk")
-      val identical =
-        multisetEq(streamServed, batchServed)
-      // driver-side local relation (the probes above are eager), so
-      // nothing lazy still reads the per-run output after cleanup
-      Seq((queries.count(), identical)).toDF("n_queries", "identical")
-    } finally deleteTempTree(tmpRoot)
+      Seq((queries.count(), multisetEq(streamServed, batchServed)))
+        .toDF("n_queries", "identical")
+    }
   }
+
 
   /** Memoized per-JVM IVF index store for [[ivfIndexServe]] (v20) —
     * shares [[s17Index]]'s rationale: one FIXED path per input dir,
@@ -2923,12 +2384,7 @@ object ExtPipelines {
     * the probe join's guard). */
   def ivfIndexServe(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val path = v20Index(dir) {
-      val p = sys.props("java.io.tmpdir") +
-        s"/graft_v20_idx_${dirKey(dir)}"
-      Similarity.saveIvfIndex(emb, p, nList = 8, nIters = 1)
-      p
-    }
+    val path = memoPath(v20Index, dir, "v20_idx")(IvfAudit.build(emb, _))
     val served = Similarity.ivfTopKFromIndex(spark, path,
       emb.filter(col("vec_id") < 10), k = 5, nProbe = 4)
     served.agg(

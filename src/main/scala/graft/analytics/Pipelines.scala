@@ -1395,42 +1395,13 @@ object Pipelines {
       date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"),
       col("user_id"))
     val th = udaf(new graft.functions.ThetaSketchAggregator(k))
-    val tm = udaf(new graft.functions.ThetaMergeAggregator(k))
-    // the build side: ONE events scan producing the tiny daily rows
     val daily = ev.groupBy("week", "day").agg(th(xxhash64(col("user_id"))).as("sk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_g38")
-    try {
-      val days = daily.select("day").distinct()
-        .collect().map(_.getString(0)).sorted // O(days) driver rows
-      val store = s"$tmpRoot/store"
-      // nightly-pipeline shape: bulk build, then the newest day lands
-      // as its own manifest-committed append
-      graft.ext.SketchStore.save(daily.filter(col("day") < days.last),
-        store, ThetaStoreKind)
-      graft.ext.SketchStore.appendDays(
-        daily.filter(col("day") === days.last), store, ThetaStoreKind)
-      // SERVE from the stored frames alone
-      val weekly = thetaStoreWeekly(spark, store, days.head, days.last)
-      // audit: the stored-and-merged sketches must be bit-identical to
-      // the in-query build's (g37's weekly stage) — both maps are
-      // |weeks|-bounded driver collects
-      val fromStore = weekly.collect()
-        .map(r => r.getString(0) -> r.getSeq[Long](1).toSeq).toMap
-      val direct = daily.groupBy("week").agg(tm(col("sk")).as("sk"))
-        .collect().map(r => r.getString(0) -> r.getSeq[Long](1).toSeq).toMap
-      val storeMatchesDirect = fromStore == direct
-      val nDays = days.length.toLong
-      thetaPairFacts(spark, weekly, ev.select("week", "user_id"), k,
-        "week", "next_week", adjacentOnly = true)
-        .select(col("week"), col("next_week"),
-          col("exact_inter").as("exact_returning"),
-          col("inter_ok").as("returning_ok"),
-          lit(nDays).as("n_days_stored"),
-          lit(storeMatchesDirect).as("store_matches_direct"))
-    } finally {
-      daily.unpersist(blocking = false)
-      org.apache.commons.io.FileUtils.deleteQuietly(tmpRoot.toFile)
+    Audit.withDailyStore("graft_g38", daily, ThetaStoreKind) { (days, store) =>
+      // SERVE from the stored frames alone, audited against the
+      // in-query build (g37's weekly stage)
+      thetaStoreFacts(spark,
+        thetaStoreWeekly(spark, store, days.head, days.last), daily, ev, k,
+        days.length.toLong)
     }
   }
 
@@ -1462,17 +1433,8 @@ object Pipelines {
       col("user_id"))
     val th = udaf(new graft.functions.ThetaSketchAggregator(k))
     val daily = ev.groupBy("week", "day").agg(th(xxhash64(col("user_id"))).as("sk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_g40")
-    try {
-      val days = daily.select("day").distinct()
-        .collect().map(_.getString(0)).sorted // O(days) driver rows
-      val store = s"$tmpRoot/store"
-      graft.ext.SketchStore.save(daily.filter(col("day") < days.last),
-        store, ThetaStoreKind)                                        // seq 0
-      graft.ext.IndexLayout.setManifestKeep(spark, store, 10)         // seq 1
-      graft.ext.SketchStore.appendDays(
-        daily.filter(col("day") === days.last), store, ThetaStoreKind) // seq 2
+    Audit.withDailyStore("graft_g40", daily, ThetaStoreKind) { (days, store) =>
+      graft.ext.IndexLayout.setManifestKeep(spark, store, 10)         // seq 2
       def rows() = graft.ext.SketchStore
         .readAll(spark, store, ThetaStoreKind).collect()
         .map(r => r.getString(1) -> r.getSeq[Long](2).toSeq).toMap
@@ -1492,9 +1454,6 @@ object Pipelines {
         survivorsIdentical, asOf == before))
         .toDF("days_total", "days_after_retention", "horizon_day",
           "survivors_identical", "asof_sees_all")
-    } finally {
-      daily.unpersist(blocking = false)
-      org.apache.commons.io.FileUtils.deleteQuietly(tmpRoot.toFile)
     }
   }
 
@@ -1538,22 +1497,10 @@ object Pipelines {
       date_format(date_trunc("week", col("ts")), "yyyy-MM-dd").as("week"),
       date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"),
       col("user_id"))
-    // the build side: ONE events scan producing the tiny daily rows
     val daily = ev.groupBy("week", "day")
       .agg(expr("hll_sketch_agg(user_id, 12)").as("sk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_g39")
-    try {
-      val days = daily.select("day").distinct()
-        .collect().map(_.getString(0)).sorted // O(days) driver rows
-      val store = s"$tmpRoot/store"
-      graft.ext.SketchStore.save(daily.filter(col("day") < days.last),
-        store, HllStoreKind)
-      graft.ext.SketchStore.appendDays(
-        daily.filter(col("day") === days.last), store, HllStoreKind)
-      // SERVE from the stored frames alone — materialized driver-side
-      // (|weeks|-bounded) before the temp store goes away: the
-      // returned frame must not lazily re-scan a deleted path
+    Audit.withDailyStore("graft_g39", daily, HllStoreKind) { (days, store) =>
+      // SERVE from the stored frames alone (|weeks|-bounded)
       import spark.implicits._
       val served = hllStoreWeekly(spark, store, days.head, days.last)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -1580,9 +1527,6 @@ object Pipelines {
             nDays, estMerged == inQuery(week))
         }.toSeq.toDF("week", "exact_users", "hll_ok", "merge_ok",
           "n_days_stored", "store_matches_inquery")
-    } finally {
-      daily.unpersist(blocking = false)
-      org.apache.commons.io.FileUtils.deleteQuietly(tmpRoot.toFile)
     }
   }
 
@@ -1610,10 +1554,8 @@ object Pipelines {
       date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"),
       col("user_id"))
     val th = udaf(new graft.functions.ThetaSketchAggregator(k))
-    val tm = udaf(new graft.functions.ThetaMergeAggregator(k))
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_s23")
-    try {
-      val store = s"$tmpRoot/store"
+    Audit.withScratch("graft_s23") { root =>
+      val store = s"$root/store"
       // the store starts empty — the arc is streaming end to end
       graft.ext.SketchStore.save(
         spark.createDataFrame(
@@ -1623,32 +1565,41 @@ object Pipelines {
         store, ThetaStoreKind)
       val q = graft.streaming.Streaming.sketchDeltaStream(
         graft.streaming.Streaming.eventsStream(spark, dir),
-        s"$tmpRoot/delta", s"$tmpRoot/ck", k)
+        s"$root/delta", s"$root/ck", k)
       q.awaitTermination()
       // the static corpus has fully drained: every day has closed
       graft.streaming.Streaming.closeDaysIntoStore(spark,
-        s"$tmpRoot/delta", store, ThetaStoreKind, k,
+        s"$root/delta", store, ThetaStoreKind, k,
         closedDay = "9999-12-31")
-      // SERVE from the stored frames alone (g38's serve path)
-      val weekly = thetaStoreWeekly(spark, store, "0000-01-01", "9999-12-31")
-      // audit: the streamed store's weekly sketches must be
-      // bit-identical to a direct batch build — |weeks|-bounded collects
-      val fromStore = weekly.collect()
-        .map(r => r.getString(0) -> r.getSeq[Long](1).toSeq).toMap
-      val direct = ev.groupBy("week", "day")
-        .agg(th(xxhash64(col("user_id"))).as("sk"))
-        .groupBy("week").agg(tm(col("sk")).as("sk"))
-        .collect().map(r => r.getString(0) -> r.getSeq[Long](1).toSeq).toMap
-      val storeMatchesDirect = fromStore == direct
-      val nDays = graft.ext.SketchStore.readAll(spark, store, ThetaStoreKind)
-        .select("day").distinct().count() // O(days)
-      thetaPairFacts(spark, weekly, ev.select("week", "user_id"), k,
-        "week", "next_week", adjacentOnly = true)
-        .select(col("week"), col("next_week"),
-          col("exact_inter").as("exact_returning"),
-          col("inter_ok").as("returning_ok"),
-          lit(nDays).as("n_days_stored"),
-          lit(storeMatchesDirect).as("store_matches_direct"))
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmpRoot.toFile)
+      // SERVE from the stored frames alone (g38's serve path), audited
+      // against a direct batch build
+      thetaStoreFacts(spark,
+        thetaStoreWeekly(spark, store, "0000-01-01", "9999-12-31"),
+        ev.groupBy("week", "day").agg(th(xxhash64(col("user_id"))).as("sk")),
+        ev, k, graft.ext.SketchStore.readAll(spark, store, ThetaStoreKind)
+          .select("day").distinct().count()) // O(days)
+    }
+  }
+
+  /** g38/s23's facts over the store-served weekly sketches `weekly`:
+    * g37's exact returning-user counts and 10σ pin, `n_days_stored`
+    * and `store_matches_direct` — the served sketches equal the weekly
+    * merge of `directDaily`'s in-query daily sketches bit for bit
+    * (|weeks|-bounded collects). */
+  private def thetaStoreFacts(spark: SparkSession, weekly: DataFrame,
+      directDaily: DataFrame, ev: DataFrame, k: Int,
+      nDays: Long): DataFrame = {
+    val tm = udaf(new graft.functions.ThetaMergeAggregator(k))
+    def sketches(df: DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.getSeq[Long](1).toSeq).toMap
+    val storeMatchesDirect = sketches(weekly) ==
+      sketches(directDaily.groupBy("week").agg(tm(col("sk")).as("sk")))
+    thetaPairFacts(spark, weekly, ev.select("week", "user_id"), k,
+      "week", "next_week", adjacentOnly = true)
+      .select(col("week"), col("next_week"),
+        col("exact_inter").as("exact_returning"),
+        col("inter_ok").as("returning_ok"),
+        lit(nDays).as("n_days_stored"),
+        lit(storeMatchesDirect).as("store_matches_direct"))
   }
 }

@@ -594,6 +594,20 @@ object Dedup {
     finally sh.unpersist()
   }
 
+  /** The gate of every verb handed PRE-COMPUTED frames: refuse an index
+    * whose stored family (n, numHashes, bands, rows) differs from the
+    * one the frames were signed under, naming the first differing key —
+    * mixing families would mis-sign every later probe, and a serve
+    * would return a silently wrong admitted set. */
+  private def requireSignedUnder(m: Map[String, String], path: String,
+      verb: String, n: Int, numHashes: Int, bands: Int, rows: Int): Unit =
+    Seq("n" -> n, "numHashes" -> numHashes, "bands" -> bands, "rows" -> rows)
+      .foreach { case (k, v) =>
+        val s = IndexLayout.intParam(m, path, k)
+        require(s == v, s"$verb: frames were computed under $k=$v but " +
+          s"$path stores $k=$s — using them would mis-sign every later probe")
+      }
+
   /** [[appendToMinhashIndex]] from PRE-COMPUTED index frames — the
     * [[saveMinhashIndexFromFrames]] dividend on the append path: a
     * harness that drives several appends over known slices of one
@@ -615,14 +629,8 @@ object Dedup {
     // the composition); under the lease the second writer fails loudly
     IndexLayout.withMaintenanceLease(spark, path) { _ =>
       val m = IndexLayout.requireManifest(spark, path, MinhashIndexFormat)
-      val stored = Seq("n" -> n, "numHashes" -> numHashes,
-        "bands" -> bands, "rows" -> rows)
-      stored.foreach { case (k, v) =>
-        val s = IndexLayout.intParam(m, path, k)
-        require(s == v, s"appendToMinhashIndexFromFrames: frames were " +
-          s"computed under $k=$v but $path stores $k=$s — appending " +
-          "them would mis-sign every later probe")
-      }
+      requireSignedUnder(m, path, "appendToMinhashIndexFromFrames", n,
+        numHashes, bands, rows)
       val buckets = IndexLayout.intParam(m, path, "buckets")
       IndexLayout.appendFrames(spark, path, m, Seq(
         ("bands", banded, Some("band")),
@@ -1115,23 +1123,21 @@ object Dedup {
     * `batchFrames` optionally hands in the batch's PRE-COMPUTED index
     * frames (the [[minhashIndexFrames]] triple over `batch`): an audit
     * harness that serves the SAME batch against several index states
-    * signs it once instead of once per serve (guide §2.4). CALLER
-    * CONTRACT: the frames must have been computed under the index's
-    * STORED family (n, numHashes, bands, rows) — the default family
-    * for every index this repo builds — and the caller owns the
-    * shingle frame's persist lifetime. Production serves pass None and
-    * keep the manifest as the sole parameter authority. */
+    * signs it once instead of once per serve (guide §2.4). The frames
+    * must be [[minhashIndexFrames]]' default family (n = 3,
+    * numHashes = 16, bands = 8, rows = 2): an index storing any other
+    * family is REFUSED, naming the differing key, instead of serving a
+    * silently wrong admitted set. The caller owns the shingle frame's
+    * persist lifetime. Production serves pass None and keep the
+    * manifest as the sole parameter authority. */
   def nearDupIngestFromPath(spark: org.apache.spark.sql.SparkSession,
       path: String, batch: DataFrame, threshold: Double = 0.5,
       textCol: String = "text", idCol: String = "doc_id",
       asOfSeq: Option[Int] = None,
       batchFrames: Option[(DataFrame, DataFrame, DataFrame)] = None)
       : DataFrame = {
-    val m = asOfSeq match {
-      case Some(s) =>
-        IndexLayout.requireManifestAt(spark, path, MinhashIndexFormat, s)
-      case None => IndexLayout.requireManifest(spark, path, MinhashIndexFormat)
-    }
+    val m = IndexLayout.requireManifest(spark, path, MinhashIndexFormat,
+      asOfSeq)
     // frames, tombstones AND parameters all come from this ONE manifest
     // resolution: a second read (the old loadMinhashIndex call) could
     // land after a concurrent rebucket's flip, pruning the new count's
@@ -1144,6 +1150,8 @@ object Dedup {
     val buckets = IndexLayout.intParam(m, path, "buckets")
     batchFrames match {
       case Some((bban, bsh, bsizes)) =>
+        requireSignedUnder(m, path, "nearDupIngestFromPath", n = 3,
+          numHashes = 16, bands = 8, rows = 2)
         nearDupIngestFromFrames(sb, ssh, ssz, batch.select(col(idCol)),
           bban, bsh, bsizes, threshold, idCol, tombstones, buckets)
       case None =>

@@ -321,21 +321,19 @@ private[graft] object IndexLayout {
     * Loud failures, each naming the path: no manifest (not an index
     * built by this layer, or a pre-manifest layout needing a rebuild),
     * foreign format (an IVF verb pointed at a MinHash index), or a
-    * schemaVersion from newer code. */
+    * schemaVersion from newer code. `asOfSeq` resolves the retained
+    * historical commit instead of the head ([[readManifestAt]]) — the
+    * gate of every as-of serve, with the same validation. */
   def requireManifest(spark: SparkSession, path: String,
-      format: String): Map[String, String] =
-    validated(readManifest(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"$path has no $ManifestFile: not a persisted index of this " +
-          "layout (or a pre-manifest layout — rebuild it with the save " +
-          "verb)")), path, format)
-
-  /** [[requireManifest]] pinned at commit `seq` — the gate of every
-    * as-of serve: same format/schemaVersion validation, resolved
-    * against the retained historical commit instead of the head. */
-  def requireManifestAt(spark: SparkSession, path: String,
-      format: String, seq: Int): Map[String, String] =
-    validated(readManifestAt(spark, path, seq), path, format)
+      format: String, asOfSeq: Option[Int] = None): Map[String, String] =
+    validated(asOfSeq match {
+      case Some(seq) => readManifestAt(spark, path, seq)
+      case None => readManifest(spark, path).getOrElse(
+        throw new IllegalStateException(
+          s"$path has no $ManifestFile: not a persisted index of this " +
+            "layout (or a pre-manifest layout — rebuild it with the save " +
+            "verb)"))
+    }, path, format)
 
   private def validated(m: Map[String, String], path: String,
       format: String): Map[String, String] = {

@@ -723,11 +723,7 @@ object Similarity {
       path: String, queries: DataFrame, k: Int = 5, nProbe: Int = 8,
       vecCol: String = "embedding", idCol: String = "vec_id",
       overFetch: Int = 4, asOfSeq: Option[Int] = None): DataFrame = {
-    val m = asOfSeq match {
-      case Some(s) =>
-        IndexLayout.requireManifestAt(spark, path, IvfIndexFormat, s)
-      case None => IndexLayout.requireManifest(spark, path, IvfIndexFormat)
-    }
+    val m = IndexLayout.requireManifest(spark, path, IvfIndexFormat, asOfSeq)
     val metric = IndexLayout.param(m, path, "metric")
     if (metric != "cosine") throw new IllegalStateException(
       s"$path was built for metric '$metric'; this serve scores cosine")

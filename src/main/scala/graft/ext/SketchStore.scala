@@ -120,8 +120,8 @@ object SketchStore {
     * window). Same format/kind gates as the head serve. */
   def readRangeAt(spark: SparkSession, path: String, kind: String,
       fromDay: String, toDay: String, seq: Int): DataFrame = {
-    val m = validateKind(IndexLayout.requireManifestAt(
-      spark, path, SketchStoreFormat, seq), path, kind)
+    val m = validateKind(IndexLayout.requireManifest(
+      spark, path, SketchStoreFormat, Some(seq)), path, kind)
     val dayCol = IndexLayout.param(m, path, "dayCol")
     IndexLayout.readFrame(spark, path, m, "sketches")
       .filter(col(dayCol) >= fromDay && col(dayCol) <= toDay)

@@ -857,6 +857,19 @@ class ExtSpec extends SparkSpec {
       assert(rows.values.forall(r =>
         r.getLong(6) == 0L && r.getBoolean(7)))
     }
+    // the as-of audits (x33/v26) and the streamed IVF takedown (s19):
+    // one row each, a positive probe count, every pin TRUE
+    Seq(graft.analytics.ExtPipelines.minhashIndexAsOf(spark, sf()),
+      graft.analytics.ExtPipelines.ivfIndexAsOf(spark, sf()),
+      graft.analytics.ExtPipelines.streamIvfDelete(spark, sf())).foreach { df =>
+      val Array(r) = df.collect()
+      assert(r.getLong(0) > 0L, r.toString)
+      val pins = df.schema.fields.zipWithIndex.collect {
+        case (f, i) if f.dataType == org.apache.spark.sql.types.BooleanType =>
+          f.name -> r.getBoolean(i)
+      }
+      assert(pins.nonEmpty && pins.forall(_._2), s"${df.columns.mkString(",")}: $r")
+    }
   }
 
   test("g38 store: sketch-store lifecycle — save, manifest-committed day appends, range serve, fold; foreign kind refused") {
@@ -2791,6 +2804,26 @@ class ExtSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
+  test("nearDupIngestFromPath refuses batch frames signed under another family than the index stores") {
+    val standing = docs.select("doc_id", "text").filter(col("doc_id") < 150)
+    val batch = docs.select("doc_id", "text").filter(col("doc_id") >= 150)
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-mh-servefam").toString
+    try {
+      val path = s"$root/idx"
+      Dedup.saveMinhashIndex(standing, path, numHashes = 8, bands = 4)
+      // default-family frames: (n, numHashes, bands, rows) = (3, 16, 8, 2)
+      val bf = Dedup.minhashIndexFrames(batch)
+      val err = intercept[IllegalArgumentException] {
+        Dedup.nearDupIngestFromPath(spark, path, batch,
+          batchFrames = Some(bf))
+      }
+      bf._2.unpersist()
+      assert(err.getMessage.contains("numHashes"), err.getMessage)
+      assert(err.getMessage.contains("mis-sign"), err.getMessage)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+  }
+
   test("inParallel: every closure completes before the first failure propagates, in argument order") {
     import graft.ext.IndexLayout
     val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -3741,8 +3774,32 @@ class ExtSpec extends SparkSpec {
     // /tmp across Verify dumps and bench reps
     val tmp = new java.io.File(sys.props("java.io.tmpdir"))
     val leftover = Option(tmp.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("graft_ivf_idx"))
+      .filter(_.getName.startsWith("graft_v12"))
     assert(leftover.isEmpty, s"leaked: ${leftover.mkString(", ")}")
+  }
+
+  test("withScratch: the root is gone after a return and after a throw; the result still collects") {
+    import graft.analytics.Audit
+    var root = ""
+    val out = Audit.withScratch("graft_scratch_spec") { r =>
+      root = r
+      spark.range(3).write.parquet(s"$r/t")
+      spark.read.parquet(s"$r/t")
+    }
+    assert(root.nonEmpty && !new java.io.File(root).exists(),
+      s"scratch root $root survived a normal return")
+    assert(out.collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 2L))
+    var failedRoot = ""
+    val err = intercept[IllegalStateException] {
+      Audit.withScratch("graft_scratch_spec") { r =>
+        failedRoot = r
+        spark.range(1).write.parquet(s"$r/t")
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(err.getMessage == "body failed")
+    assert(failedRoot.nonEmpty && !new java.io.File(failedRoot).exists(),
+      s"scratch root $failedRoot survived a failing body")
   }
 
   test("x23: edit-distance near-dups match a driver-side Levenshtein recompute") {
