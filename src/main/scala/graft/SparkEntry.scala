@@ -260,8 +260,6 @@ object SparkEntry {
       |    CAST(COALESCE(SUM(CASE WHEN Type = 'SignupDuration' THEN value_cents END), 0) AS BIGINT) AS SignupDuration,
       |    CAST(COALESCE(SUM(CASE WHEN Type = 'ViewDuration' THEN value_cents END), 0) AS BIGINT) AS ViewDuration""".stripMargin
 
-  /** Shared jaccard-pairs oracle (x3 exact and x4 MinHash-LSH must agree:
-    * LSH recall at jaccard≥0.5-with-verification is ~1 for this banding). */
   /** Shared by x23 (exact all-pairs) and x23b (PassJoin-blocked twin,
     * zero recall loss by pigeonhole — same result set by theorem). */
   private val editDistOracle: String =
@@ -303,6 +301,8 @@ object SparkEntry {
       |JOIN part b ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
       |WHERE jaro_winkler_similarity(a.p_name, b.p_name) >= 0.9""".stripMargin
 
+  /** Shared jaccard-pairs oracle (x3 exact and x4 MinHash-LSH must agree:
+    * LSH recall at jaccard≥0.5-with-verification is ~1 for this banding). */
   private val jaccardOracle: String =
     """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
       |sh AS (SELECT doc_id,
@@ -516,13 +516,6 @@ object SparkEntry {
       |       TRUE AS found_ok, TRUE AS err_ok
       |FROM c, tot WHERE cnt * 100 >= n""".stripMargin
 
-  /** g36/s22: exact pairwise distinct-set cardinalities per event-type
-    * segment pair — every ordered pair present (left join, coalesce 0)
-    * so the engine's all-pairs emission and the SQL side can never
-    * disagree on row sets; the sketch estimates surface only as the
-    * pinned booleans. Shared verbatim by the streamed run: a bottom-k
-    * sketch is a pure function of the set, so stream ≡ batch
-    * bit-for-bit. */
   /** g38/s23: the persisted theta store's serve facts — g37's exact
     * retention counts plus the stored-day count and the bit-identity
     * pin. Shared verbatim by the STREAMED store run (s23): bottomK(S)
@@ -548,6 +541,13 @@ object SparkEntry {
       |FROM wk LEFT JOIN r ON r.wa = wk.week AND r.wb = wk.next_week
       |WHERE wk.next_week IS NOT NULL""".stripMargin
 
+  /** g36/s22: exact pairwise distinct-set cardinalities per event-type
+    * segment pair — every ordered pair present (left join, coalesce 0)
+    * so the engine's all-pairs emission and the SQL side can never
+    * disagree on row sets; the sketch estimates surface only as the
+    * pinned booleans. Shared verbatim by the streamed run: a bottom-k
+    * sketch is a pure function of the set, so stream ≡ batch
+    * bit-for-bit. */
   private val thetaSegmentsOracle: String =
     """WITH d AS (SELECT DISTINCT event_type AS seg, user_id FROM events),
       |c AS (SELECT seg, count(*) AS n FROM d GROUP BY seg),

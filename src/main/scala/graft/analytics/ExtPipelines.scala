@@ -201,6 +201,14 @@ object ExtPipelines {
     * calls must not both run it. */
   private val x24bLabels = new graft.ext.BuildOnce[String, String]
 
+  /** The persisted x9 cluster-label artifact, built once per JVM and
+    * read by every downstream consumer (x24b's apply, x28's audit). */
+  private def clusterLabels(spark: SparkSession, dir: String): DataFrame = {
+    val path = memoPath(x24bLabels, dir, "x24b_labels")(p =>
+      dedupClusters(spark, dir).write.mode("overwrite").parquet(p))
+    spark.read.parquet(path)
+  }
+
   /** x24b: the PRODUCTION dedup-apply — x9's cluster labels persisted
     * to parquet once, then the corpus cleaned by a label read + a
     * delta-sized left-anti join. Same result and oracle as x24; the
@@ -210,14 +218,6 @@ object ExtPipelines {
     * (x24's self-contained shape) multiplies the most expensive stage
     * of the pipeline by its fan-out; reading a doc_id-only parquet
     * multiplies a metadata-scale scan. */
-  /** The persisted x9 cluster-label artifact, built once per JVM and
-    * read by every downstream consumer (x24b's apply, x28's audit). */
-  private def clusterLabels(spark: SparkSession, dir: String): DataFrame = {
-    val path = memoPath(x24bLabels, dir, "x24b_labels")(p =>
-      dedupClusters(spark, dir).write.mode("overwrite").parquet(p))
-    spark.read.parquet(path)
-  }
-
   def dedupApplyPersisted(spark: SparkSession, dir: String): DataFrame = {
     val losers = clusterLabels(spark, dir)
       .filter(col("doc_id") =!= col("cluster_id")).select("doc_id")
@@ -1564,31 +1564,22 @@ object ExtPipelines {
     Similarity.centroidOutliers(emb.join(src, "vec_id"))
   }
 
-  /** v12: persisted-IVF-index round trip
-    * ([[graft.ext.Similarity.saveIvfIndex]] / `ivfTopKFromIndex`) —
-    * build the index under a temp dir, answer the v3 query batch from
-    * storage, and pin result identity with the in-memory build (the
-    * probe/re-rank stage is shared code; float/double vectors
-    * round-trip parquet bit-exactly). The serving form of the ANN
-    * family: at scale the partitioned lists give every query batch a
-    * dynamic-partition-pruned scan (ExtSpec pins the pruning filter).
-    * Driver-checkable bounded output: (n_queries, identical=TRUE). */
   /** v13: 2-round Lloyd k-means over the embeddings, k = 8 —
     * see [[graft.ext.Similarity.kmeansLloyd]] for the quantized-
     * centroid cross-engine determinism argument. */
   def kmeansLloyd(spark: SparkSession, dir: String): DataFrame =
     Similarity.kmeansLloyd(Tables.embeddings(spark, dir), k = 8, iters = 2)
 
-  /** v16: MMR-diversified retrieval over the first 10 query vectors —
-    * see [[graft.ext.Similarity.mmrTopK]] for the fixed-point
-    * engine-exactness argument (the whole greedy trajectory is
-    * oracle-checked, not just a recall bound). */
   /** v17: cosine radius search over the embeddings table — see
     * [[graft.ext.Similarity.rangeSearch]] for the µ-cosine
     * bit-stability and zero-shuffle arguments. */
   def rangeSearch(spark: SparkSession, dir: String): DataFrame =
     graft.ext.Similarity.rangeSearch(Tables.embeddings(spark, dir))
 
+  /** v16: MMR-diversified retrieval over the first 10 query vectors —
+    * see [[graft.ext.Similarity.mmrTopK]] for the fixed-point
+    * engine-exactness argument (the whole greedy trajectory is
+    * oracle-checked, not just a recall bound). */
   def mmrTopK(spark: SparkSession, dir: String): DataFrame =
     Similarity.mmrTopK(Tables.embeddings(spark, dir),
       nQueries = 10, nCand = 20, k = 5)
@@ -1716,6 +1707,15 @@ object ExtPipelines {
     }
 
 
+  /** v12: persisted-IVF-index round trip
+    * ([[graft.ext.Similarity.saveIvfIndex]] / `ivfTopKFromIndex`) —
+    * build the index under a temp dir, answer the v3 query batch from
+    * storage, and pin result identity with the in-memory build (the
+    * probe/re-rank stage is shared code; float/double vectors
+    * round-trip parquet bit-exactly). The serving form of the ANN
+    * family: at scale the partitioned lists give every query batch a
+    * dynamic-partition-pruned scan (ExtSpec pins the pruning filter).
+    * Driver-checkable bounded output: (n_queries, identical=TRUE). */
   def ivfIndexPersist(spark: SparkSession, dir: String): DataFrame =
     Audit.withScratch("graft_v12") { root =>
       import spark.implicits._
@@ -2618,10 +2618,6 @@ object ExtPipelines {
       .select(col("doc_id"), col("media_meta.byte_len").as("byte_len"),
         col("media_meta.mime").as("mime"))
 
-  /** Batched per-partition feature extraction over the binary column
-    * (decode step stubbed — see Multimodal scaladoc). The 16-bin
-    * histogram is exploded into scalar columns h00..h15 so the driver's
-    * oracle compare can sort/hash the rows. */
   /** m4: perceptual media near-dup — feature-space pairs within L1
     * 0.001 (catches the planted exact dups plus tight near-encodes). */
   def mediaNearDups(spark: SparkSession, dir: String): DataFrame =
@@ -2668,6 +2664,10 @@ object ExtPipelines {
           .otherwise(lit("review")))
   }
 
+  /** Batched per-partition feature extraction over the binary column
+    * (decode step stubbed — see Multimodal scaladoc). The 16-bin
+    * histogram is exploded into scalar columns h00..h15 so the driver's
+    * oracle compare can sort/hash the rows. */
   def mediaFeatures(spark: SparkSession, dir: String): DataFrame = {
     val feats = graft.ext.Multimodal.featurize(Tables.documents(spark, dir))
     val hcols = (0 until 16).map(i => col("histogram")(i).as(f"h$i%02d"))
@@ -2686,13 +2686,6 @@ object ExtPipelines {
       nList = 16, nProbe = 8, nIters = 1)
   }
 
-  /** Driver-checkable bound for v3: recall@5 of the IVF index against
-    * the exact brute-force top-5, per query. The oracle enumerates the
-    * query ids and pins `recall_ok = TRUE`; a quantizer regression that
-    * drops recall below 3/5 hash-fails the row. The floor is
-    * deliberately below the ~0.8 observed on these near-random test
-    * embeddings (the IVF worst case — no cluster signal): the bound
-    * catches breakage, the ExtSpec equality pin catches drift. */
   /** v8: product-quantization ANN (packed one-long codes + ADC scan +
     * exact re-rank) — the ~32× memory-scale path; see
     * [[graft.ext.Similarity.pqTopK]]. Engine-specific (trained
@@ -2751,6 +2744,13 @@ object ExtPipelines {
         (coalesce(col("hits"), lit(0L)) >= 2).as("recall_ok"))
   }
 
+  /** Driver-checkable bound for v3: recall@5 of the IVF index against
+    * the exact brute-force top-5, per query. The oracle enumerates the
+    * query ids and pins `recall_ok = TRUE`; a quantizer regression that
+    * drops recall below 3/5 hash-fails the row. The floor is
+    * deliberately below the ~0.8 observed on these near-random test
+    * embeddings (the IVF worst case — no cluster signal): the bound
+    * catches breakage, the ExtSpec equality pin catches drift. */
   def annIvfRecallBounded(spark: SparkSession, dir: String): DataFrame = {
     VectorFunctions.register(spark)
     val emb = Tables.embeddings(spark, dir)

@@ -641,27 +641,6 @@ object Dedup {
     }
   }
 
-  /** Fold a [[graft.streaming.Streaming.nearDupIngestStream]] DELTA
-    * layout into the standing [[saveMinhashIndex]] index and CLEAR it
-    * — the scheduled compaction that closes the streaming ingest
-    * lifecycle (without it, delta batch directories accumulate and
-    * every micro-batch's standing union grows a file-listing term).
-    * The delta dirs already HOLD the admitted docs' index rows, so
-    * compaction moves rows, never re-derives them from text: each
-    * frame is read (minus its `batch` partition column), repartitioned
-    * on its partition key, and appended into the standing layout —
-    * O(deltas), standing data untouched. Afterwards the delta dirs are
-    * deleted so the next stream epoch starts empty.
-    *
-    * PRECONDITION — single-writer, drained stream: run only while the
-    * ingest stream is STOPPED after a clean drain (an AvailableNow
-    * `awaitTermination`, the nightly-compaction window). A delta dir
-    * from a killed, UNCOMMITTED batch would be folded into the
-    * standing index here, and the batch's replay would then find its
-    * own docs standing and reject them all. Kill-safety of the
-    * compaction itself follows [[appendToMinhashIndex]]'s contract:
-    * the append job is not atomic, so a failed compaction is re-run
-    * against a restored index. */
   /** The delta layout's bucket-count marker
     * (`<deltaPath>/_delta_buckets`): the stored count the epoch's
     * delta rows were bucketed under. [[graft.streaming.Streaming
@@ -721,6 +700,27 @@ object Dedup {
     }
   }
 
+  /** Fold a [[graft.streaming.Streaming.nearDupIngestStream]] DELTA
+    * layout into the standing [[saveMinhashIndex]] index and CLEAR it
+    * — the scheduled compaction that closes the streaming ingest
+    * lifecycle (without it, delta batch directories accumulate and
+    * every micro-batch's standing union grows a file-listing term).
+    * The delta dirs already HOLD the admitted docs' index rows, so
+    * compaction moves rows, never re-derives them from text: each
+    * frame is read (minus its `batch` partition column), repartitioned
+    * on its partition key, and appended into the standing layout —
+    * O(deltas), standing data untouched. Afterwards the delta dirs are
+    * deleted so the next stream epoch starts empty.
+    *
+    * PRECONDITION — single-writer, drained stream: run only while the
+    * ingest stream is STOPPED after a clean drain (an AvailableNow
+    * `awaitTermination`, the nightly-compaction window). A delta dir
+    * from a killed, UNCOMMITTED batch would be folded into the
+    * standing index here, and the batch's replay would then find its
+    * own docs standing and reject them all. Kill-safety of the
+    * compaction itself follows [[appendToMinhashIndex]]'s contract:
+    * the append job is not atomic, so a failed compaction is re-run
+    * against a restored index. */
   def compactMinhashDeltas(spark: org.apache.spark.sql.SparkSession,
       deltaPath: String, path: String): Unit = {
     // leased: this verb commits an append into the standing layout —
@@ -1164,30 +1164,6 @@ object Dedup {
     }
   }
 
-  /** Near-dup ingest against a standing corpus's MinHash index frames
-    * (in-memory from [[minhashIndexFrames]] or loaded from a
-    * [[saveMinhashIndex]] path — same code, so the two are identical
-    * by construction): admit the batch docs that are NOT Jaccard-≥
-    * `threshold` near-dups of any standing doc, and keep-first within
-    * the batch (the HIGHER id of any verified intra-batch pair is
-    * rejected, x2's rule). Candidates come from (band, sig) equi-joins
-    * — batch-signature-sized build sides, never all-pairs — and every
-    * rejection is VERIFIED with exact Jaccard over the shingle frames,
-    * so precision is exact and only candidate recall is probabilistic
-    * (1-(1-j^rows)^bands; identical docs always collide, so a true
-    * exact duplicate can never be admitted). Docs with fewer than n
-    * tokens carry no shingles and are admitted (no Jaccard evidence
-    * against them — mirrored by both paths).
-    *
-    * EAGER at the rejected-id set: the batch's shingle frame feeds
-    * four consumers (bands, sizes, both intersection joins), so it is
-    * persisted for the duration of the call — and the only way to
-    * release that cache deterministically instead of leaking one copy
-    * per invocation (the g33/x9 hygiene rule) is to materialize the
-    * DELTA-SIZED rejected-id set first (one [[Checkpoints.ckptLocal]],
-    * ≤ batch rows) and hand back a plan that reads only the batch and
-    * that checkpoint. The bounded eager action is the documented
-    * exception class (x26/g33). */
   /** Restrict a standing index frame to a candidate-id set (column
     * `b_id`), best available strategy first — factored out of
     * [[nearDupIngest]] so the plan shape is spec-pinnable:
@@ -1216,6 +1192,30 @@ object Dedup {
     base.join(probe, Seq("b_id"), "left_semi")
   }
 
+  /** Near-dup ingest against a standing corpus's MinHash index frames
+    * (in-memory from [[minhashIndexFrames]] or loaded from a
+    * [[saveMinhashIndex]] path — same code, so the two are identical
+    * by construction): admit the batch docs that are NOT Jaccard-≥
+    * `threshold` near-dups of any standing doc, and keep-first within
+    * the batch (the HIGHER id of any verified intra-batch pair is
+    * rejected, x2's rule). Candidates come from (band, sig) equi-joins
+    * — batch-signature-sized build sides, never all-pairs — and every
+    * rejection is VERIFIED with exact Jaccard over the shingle frames,
+    * so precision is exact and only candidate recall is probabilistic
+    * (1-(1-j^rows)^bands; identical docs always collide, so a true
+    * exact duplicate can never be admitted). Docs with fewer than n
+    * tokens carry no shingles and are admitted (no Jaccard evidence
+    * against them — mirrored by both paths).
+    *
+    * EAGER at the rejected-id set: the batch's shingle frame feeds
+    * four consumers (bands, sizes, both intersection joins), so it is
+    * persisted for the duration of the call — and the only way to
+    * release that cache deterministically instead of leaking one copy
+    * per invocation (the g33/x9 hygiene rule) is to materialize the
+    * DELTA-SIZED rejected-id set first (one [[Checkpoints.ckptLocal]],
+    * ≤ batch rows) and hand back a plan that reads only the batch and
+    * that checkpoint. The bounded eager action is the documented
+    * exception class (x26/g33). */
   def nearDupIngest(standingBands: DataFrame, standingShingles: DataFrame,
       standingSizes: DataFrame, batch: DataFrame, n: Int = 3,
       threshold: Double = 0.5, numHashes: Int = 16, bands: Int = 8,

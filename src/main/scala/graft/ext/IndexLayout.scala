@@ -235,29 +235,31 @@ private[graft] object IndexLayout {
     * — retired dirs survive one compaction interval plus the
     * configured time grace). */
   def readManifestAt(spark: SparkSession, path: String, seq: Int)
-      : Map[String, String] = {
-    val f = IndexFs.fs(spark, path)
-    val p = new Path(s"$path/${manifestGenFile(seq)}")
-    val bytes = try {
+      : Map[String, String] =
+    readManifestFile(IndexFs.fs(spark, path),
+        new Path(s"$path/${manifestGenFile(seq)}"))
+      .getOrElse(throw new IllegalStateException(
+        s"$path has no manifest commit $seq (available: " +
+          s"${availableManifestSeqs(spark, path).mkString(",")}) — " +
+          s"never committed, or aged past the $ManifestKeepConfKey " +
+          "retention window"))
+
+  /** One manifest file's bytes, parsed — None when the file is absent. */
+  private def readManifestFile(f: org.apache.hadoop.fs.FileSystem, p: Path)
+      : Option[Map[String, String]] =
+    (try {
       val in = f.open(p)
       try {
         val buf = new java.io.ByteArrayOutputStream()
         org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 65536, false)
-        buf.toByteArray
+        Some(buf.toByteArray)
       } finally in.close()
-    } catch {
-      case _: java.io.FileNotFoundException =>
-        throw new IllegalStateException(
-          s"$path has no manifest commit $seq (available: " +
-            s"${availableManifestSeqs(spark, path).mkString(",")}) — " +
-            s"never committed, or aged past the $ManifestKeepConfKey " +
-            "retention window")
+    } catch { case _: java.io.FileNotFoundException => None }).map { bytes =>
+      val m = mapper.readValue(bytes, classOf[java.util.Map[String, String]])
+      val b = Map.newBuilder[String, String]
+      m.forEach((k, v) => b += (k -> v))
+      b.result()
     }
-    val m = mapper.readValue(bytes, classOf[java.util.Map[String, String]])
-    val b = Map.newBuilder[String, String]
-    m.forEach((k, v) => b += (k -> v))
-    b.result()
-  }
 
   /** Resolve the current manifest: the HIGHEST-N `_manifest-N.json`
     * wins (a torn commit that left both N and N−1 behind — or a crash
@@ -280,28 +282,14 @@ private[graft] object IndexLayout {
   def readManifest(spark: SparkSession, path: String)
       : Option[Map[String, String]] = {
     val f = IndexFs.fs(spark, path)
-    def readBytes(p: Path): Option[Array[Byte]] =
-      try {
-        val in = f.open(p)
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 65536, false)
-          Some(buf.toByteArray)
-        } finally in.close()
-      } catch { case _: java.io.FileNotFoundException => None }
-    def parse(bytes: Array[Byte]): Map[String, String] = {
-      val m = mapper.readValue(bytes, classOf[java.util.Map[String, String]])
-      val b = Map.newBuilder[String, String]
-      m.forEach((k, v) => b += (k -> v))
-      b.result()
-    }
+    def legacy = readManifestFile(f, new Path(s"$path/$ManifestFile"))
     def attempt(retries: Int): Option[Map[String, String]] = {
       val gens = listManifestGens(f, path)
-      if (gens.isEmpty) {
-        // legacy / pre-monotonic layout (or no index at all)
-        readBytes(new Path(s"$path/$ManifestFile")).map(parse)
-      } else readBytes(new Path(s"$path/${manifestGenFile(gens.max)}")) match {
-        case Some(bytes) => Some(parse(bytes))
+      // legacy / pre-monotonic layout (or no index at all)
+      if (gens.isEmpty) legacy
+      else readManifestFile(f,
+          new Path(s"$path/${manifestGenFile(gens.max)}")) match {
+        case found @ Some(_) => found
         // the listed newest file vanished: only possible when two+
         // flips completed inside the list→open window — RE-LIST (the
         // newest manifest always exists); open-directly-then-catch, so
@@ -310,7 +298,7 @@ private[graft] object IndexLayout {
         case None if retries > 0 => attempt(retries - 1)
         // pathological flip storm: the co-written pointer is the
         // terminal fallback — always present on any committed layout
-        case None => readBytes(new Path(s"$path/$ManifestFile")).map(parse)
+        case None => legacy
       }
     }
     attempt(retries = 2)
@@ -1391,6 +1379,9 @@ private[graft] object IndexLayout {
     // concurrent append/delete would be silently retired or dropped
     withMaintenanceLease(spark, path) { lease =>
       val m = requireManifest(spark, path, fam.format)
+      // resolved first, so a manifest the family cannot read fails here
+      // whether or not there is anything to compact
+      val partitioned = fam.partitioned(m)
       val tombStanding = loadTombstones(spark, path, m, idCol)
       val tombForFold =
         if (foldEvenClean && tombStanding.isEmpty)
@@ -1411,7 +1402,7 @@ private[graft] object IndexLayout {
           // manifest + the pinned tombstone set — independent jobs,
           // overlapped so the verb costs ~the slowest staging
           val staged = inParallel(
-            fam.partitioned(m).map { case (name, p) => () =>
+            partitioned.map { case (name, p) => () =>
               name -> stageCompactFrame(spark, path, m, name, p, affected,
                 tomb, idCol, newGen) } ++
             fam.rewritten.map { case (name, p) => () =>

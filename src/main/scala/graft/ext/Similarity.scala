@@ -1,8 +1,9 @@
 package graft.ext
 
 import scala.util.Random
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
 import graft.functions.VectorFunctions
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -320,7 +321,9 @@ object Similarity {
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     val cent = ivfCentroids(corpus, nList, nIters, vecCol, idCol)
     val assigned = ivfAssign(corpus, cent, vecCol, idCol)
-    ivfProbeAndRank(cent, Seq(assigned), queries, k, nProbe, vecCol, idCol)
+    // overFetch only sizes a quantized storage's re-rank: unused by fp
+    ivfProbeAndRank(IvfStorage.Fp, None, cent, Map("lists" -> Seq(assigned)),
+      queries, k, nProbe, overFetch = 1, vecCol, idCol, tombstones = None)
   }
 
   /** Each query's nProbe best lists, with the query vector re-attached:
@@ -351,32 +354,36 @@ object Similarity {
         .filter(col("query_id") =!= col(idCol))
     }.reduce(_.unionByName(_))
 
-  /** The probe-and-rank stage shared by the in-memory index (v3) and
-    * the persisted index ([[ivfTopKFromIndex]]): score queries against
-    * the broadcast centroids, keep each query's nProbe best lists
-    * (k-bounded aggregator), then exact-cosine re-rank against only the
-    * probed lists' vectors.
+  /** The probe-and-rank stage of every IVF serve — the in-memory index
+    * (v3) and the persisted index ([[ivfTopKFromIndex]]) under each
+    * storage: score queries against the broadcast centroids, keep each
+    * query's nProbe best lists (k-bounded aggregator), score only the
+    * probed lists' rows the storage's way ([[IvfStorage.scoring]]),
+    * then rank — exactly for `fp`, through [[overFetchExactRerank]]
+    * against the `fp` frame for the quantized storages (`cb` is a pq
+    * storage's codebook).
     *
-    * `listGroups` is the composed list frame as one scan PER
-    * generation group: the broadcast probe join is planted directly
-    * above each scan so dynamic partition pruning fires on every
-    * group (it would not reach scans through a Union). The probe
-    * frame is deliberately RECOMPUTED per group rather than pinned
-    * with a checkpoint: it costs one queries × nList aggregation per
-    * branch (metadata-scale — centroids are broadcast, nList is
-    * small), whereas a ckptLocal here would leave unfreeable
-    * 2x-replicated blocks behind every serve — on a long-running
-    * serve stream that pools executor storage against the hot index
-    * (the returned plan is lazy, so there is no safe point to free
-    * them inside this function). */
-  private def ivfProbeAndRank(cent: DataFrame, listGroups: Seq[DataFrame],
-      queries: DataFrame, k: Int, nProbe: Int,
-      vecCol: String, idCol: String,
-      tombstones: Option[DataFrame] = None): DataFrame = {
+    * `groups(name)` is a composed frame as one scan PER generation
+    * group: the broadcast probe join is planted directly above each
+    * scan so dynamic partition pruning fires on every group (it would
+    * not reach scans through a Union). The probe frame is deliberately
+    * RECOMPUTED per group rather than pinned with a checkpoint: it
+    * costs one queries × nList aggregation per branch (metadata-scale
+    * — centroids are broadcast, nList is small), whereas a ckptLocal
+    * here would leave unfreeable 2x-replicated blocks behind every
+    * serve — on a long-running serve stream that pools executor
+    * storage against the hot index (the returned plan is lazy, so
+    * there is no safe point to free them inside this function). */
+  private def ivfProbeAndRank(st: IvfStorage, cb: Option[PqCodebook],
+      cent: DataFrame, groups: String => Seq[DataFrame], queries: DataFrame,
+      k: Int, nProbe: Int, overFetch: Int, vecCol: String, idCol: String,
+      tombstones: Option[DataFrame]): DataFrame = {
     VectorFunctions.register(queries.sparkSession)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val probes = ivfProbes(cent, q, nProbe)
-    val candRaw = probeJoin(listGroups, probes, idCol)
+    val scoring = st.scoring(cent, cb, vecCol)
+    val candRaw = probeJoin(groups("lists").map(scoring.lists),
+      scoring.probes(probes), idCol)
     // tombstones ([[deleteFromIvfIndex]]) strike candidates HERE —
     // after the probe join (so the scan's dynamic partition pruning is
     // undisturbed: an anti-join between the partitioned scan and the
@@ -388,42 +395,35 @@ object Similarity {
     // build side — anti-join semantics are duplicate-insensitive, and
     // the aggregate would add an exchange to EVERY serve just to trim
     // rows only repeated deletes of one id can produce.
+    // Quantized storages strike at the approximate stage, so freed
+    // slots refill before the over-fetch cut.
     val cands = tombstones.fold(candRaw)(t =>
         candRaw.join(t.select(col(idCol)), Seq(idCol), "left_anti"))
       .select(col("query_id"), col(idCol).as("neighbor_id"),
-        VectorFunctions.cosine(col("qv"), col(vecCol)).as("cos"))
-    topKPerQuery(cands, k)
+        scoring.cos.as("cos"))
+    if (st.quantized)
+      overFetchExactRerank(probes, groups("fp"), cands, k, overFetch,
+        vecCol, idCol)
+    else topKPerQuery(cands, k)
   }
 
-  /** Persist an IVF index to storage: `<path>/centroids` (list_id,
-    * cvec — the trained quantizer) and `<path>/lists` — the inverted
-    * lists PARTITIONED BY list_id. This is the serving form of the
-    * v3/v9 family: build once, answer every later query batch from
-    * storage without touching the raw corpus. The list_id directory
-    * layout is the point — a probe join against the broadcast query
-    * side triggers DYNAMIC PARTITION PRUNING, so each query batch
-    * reads only its probed lists (~nProbe/nList of the index), never
-    * the whole thing; at 100 TB that is the difference between a
-    * bucket-pruned scan and a full-index scan per batch. */
   /** The manifest format tag of a persisted IVF index
     * ([[graft.ext.IndexLayout]]). */
   val IvfIndexFormat = "graft-ivf-index"
 
   /** The IVF family's lifecycle descriptor
-    * ([[graft.ext.IndexLayout.IndexFamily]]): `lists` — plus the
-    * parallel full-precision `fp` frame of a quantized (int8 / pq)
-    * storage, gated on the same stored `storage` parameter serve and
-    * append read — compact per `list_id`; nothing is rewritten whole,
-    * and the quantizers (centroids, pq codebook) carry through every
-    * flip. Lists are partitioned by `list_id`, not by id, so the lists
-    * a tombstone set touches are DISCOVERED with a column-pruned
-    * (id, list_id) semi-join — one slim column plus free partition
-    * metadata, no embedding bytes, ≤ nList rows collected. */
+    * ([[graft.ext.IndexLayout.IndexFamily]]): the stored storage's
+    * list-partitioned frames ([[IvfStorage.partitioned]]) compact per
+    * `list_id`; nothing is rewritten whole, and the quantizers
+    * (centroids, pq codebook) carry through every flip. Lists are
+    * partitioned by `list_id`, not by id, so the lists a tombstone set
+    * touches are DISCOVERED with a column-pruned (id, list_id)
+    * semi-join — one slim column plus free partition metadata, no
+    * embedding bytes, ≤ nList rows collected. */
   private[graft] val IvfFamily = IndexLayout.IndexFamily(
     format = IvfIndexFormat,
-    idFrame = m => if (quantized(m)) "fp" else "lists",
-    partitioned = m => ("lists" -> "list_id") +:
-      (if (quantized(m)) Seq("fp" -> "list_id") else Seq.empty),
+    idFrame = m => IvfStorage.of(m).idFrame,
+    partitioned = m => IvfStorage.of(m).partitioned,
     rewritten = Seq.empty,
     affected = (spark, path, m, tomb, idCol) =>
       IndexLayout.readFrame(spark, path, m, "lists")
@@ -431,11 +431,6 @@ object Similarity {
         .join(tomb, Seq(idCol), "left_semi")
         .select("list_id").distinct()
         .collect().map(_.get(0)).toSeq) // ≤ nList rows: bounded
-
-  /** An int8 or pq storage: a probe frame of codes plus a parallel
-    * full-precision `fp` frame holding the same rows. */
-  private def quantized(m: Map[String, String]): Boolean =
-    m.getOrElse("storage", "fp") != "fp"
 
   /** Loud per-row dimension guard against the index manifest's `dim`:
     * a wrong-dimension vector would otherwise score a silently-wrong
@@ -447,13 +442,6 @@ object Similarity {
       when(size(col(vecCol)) === dim, col(vecCol)),
       raise_error(lit(s"Similarity.$verb: vector dimension does not " +
         s"match the index manifest's dim=$dim"))))
-
-  def saveIvfIndex(corpus: DataFrame, path: String, nList: Int = 16,
-      nIters: Int = 1, vecCol: String = "embedding",
-      idCol: String = "vec_id", storage: String = "fp"): Unit =
-    saveIvfIndexWithCentroids(corpus,
-      ivfCentroids(corpus, nList, nIters, vecCol, idCol), path,
-      vecCol, idCol, storage)
 
   /** The int8 lists frame of a `storage = "int8"` layout: per-vector
     * symmetric scalar quantization ([[quantize]]'s family), keyed and
@@ -497,27 +485,197 @@ object Similarity {
 
   /** The pq lists frame: (id, packed one-long code, true norm,
     * list_id) — the 24-byte/vector probe scan. */
-  private def pqLists(resid: DataFrame, cb: Array[Double],
-      idCol: String, numSub: Int = PqNumSub,
-      numCents: Int = PqNumCents): DataFrame = {
+  private def pqLists(resid: DataFrame, cb: PqCodebook,
+      idCol: String): DataFrame = {
     graft.functions.PqExpressions.register(resid.sparkSession)
-    val cbLit = typedLit(cb.toSeq)
     resid.select(col(idCol),
         graft.functions.PqExpressions.pqEncode(
-          col("_res"), cbLit, numSub, numCents).as("_e"),
+          col("_res"), typedLit(cb.cb.toSeq), cb.numSub, cb.numCents).as("_e"),
         col("vnorm"), col("list_id"))
       .select(col(idCol), col("_e.code").as("code"), col("vnorm"),
         col("list_id"))
   }
 
-  /** The stored residual codebook of a `storage = "pq"` index — one
-    * row holding the flattened `[sub][centroid][dim]` doubles (≈128 KB
-    * at the defaults): metadata-scale, collected to the driver and
-    * re-inlined as the foldable literal the codegen'd kernels want. */
-  private def loadPqCodebook(spark: org.apache.spark.sql.SparkSession,
-      path: String, m: Map[String, String]): Array[Double] =
-    IndexLayout.readFrame(spark, path, m, "codebook")
-      .collect()(0).getSeq[Double](0).toArray
+  /** A pq storage's residual codebook — the flattened
+    * `[sub][centroid][dim]` doubles (≈128 KB at the defaults) — with the
+    * shape it was trained at: metadata-scale, held on the driver and
+    * inlined as the foldable literal the codegen'd kernels want. */
+  private final case class PqCodebook(cb: Array[Double], numSub: Int,
+      numCents: Int)
+
+  /** How a serve scores one storage's probed list rows: `lists`
+    * projects each list scan (a Project directly above the scan, so
+    * dynamic partition pruning still reaches it), `probes` enriches the
+    * broadcast (query_id, list_id, qv) side, and `cos` scores a
+    * candidate. */
+  private final case class IvfScoring(lists: DataFrame => DataFrame,
+      probes: DataFrame => DataFrame, cos: Column)
+
+  /** One IVF storage — everything that differs between `fp`, `int8`
+    * and `pq`, so build, retrain, append, compaction and serve read
+    * the codec instead of branching on the stored name:
+    *  - `frames`: the data frames it stores besides `centroids` and
+    *    `tombstones`. A quantized storage keeps a parallel
+    *    full-precision `fp` frame holding the same rows as its `lists`
+    *    of codes, read only for the bounded exact re-rank;
+    *  - `schemaVersion`: per-index layout versioning — plain layouts
+    *    stay 1, int8 is 2, pq is 3. Each quantized shape must be
+    *    REFUSED loudly by a binary that predates it (appending fp rows
+    *    into a quantized lists frame would serve silent nulls), while
+    *    every layout an older binary CAN read keeps its old version;
+    *  - `encode`: (rows, centroids, codebook, vecCol, idCol) — its
+    *    `lists` rows from full-precision (id, list_id, vec) rows;
+    *  - `scoring`: (centroids, codebook, vecCol) — how a serve scores
+    *    the probed `lists` rows;
+    *  - `buildParams` / `auxSchemas`: its extra manifest parameters,
+    *    and the schemas of its frames that are not list-partitioned;
+    *  - `train` / `stored`: its codebook — trained on the rows of
+    *    (path, params' shape, rows, centroids, gen, vecCol, idCol) and
+    *    staged in generation `gen` at build and retrain time, read
+    *    back from the index at append and serve time. */
+  private final case class IvfStorage(name: String, schemaVersion: Int,
+      frames: Seq[String],
+      encode: (DataFrame, DataFrame, Option[PqCodebook], String, String)
+        => DataFrame,
+      scoring: (DataFrame, Option[PqCodebook], String) => IvfScoring,
+      buildParams: Map[String, String] = Map.empty,
+      auxSchemas: Map[String, StructType] = Map.empty,
+      train: (String, Map[String, String], DataFrame, DataFrame, Int, String,
+        String) => Option[PqCodebook] = (_, _, _, _, _, _, _) => None,
+      stored: (SparkSession, String, Map[String, String])
+        => Option[PqCodebook] = (_, _, _) => None) {
+    val quantized: Boolean = frames.contains("fp")
+    /** The frame holding one full-precision row per indexed id. */
+    def idFrame: String = if (quantized) "fp" else "lists"
+    def partitioned: Seq[(String, String)] =
+      Seq("lists", "fp").filter(frames.contains).map(_ -> "list_id")
+  }
+
+  private object IvfStorage {
+    val Fp = IvfStorage("fp", 1, Seq("lists"),
+      encode = (rows, _, _, _, _) => rows,
+      scoring = (_, _, vecCol) => IvfScoring(identity, identity,
+        VectorFunctions.cosine(col("qv"), col(vecCol))))
+
+    /** The hot probed scan reads int8 codes (~1/4 the bytes) and scores
+      * the dequantized cosine, dequantizing once per PROBED LIST ROW,
+      * not per (query, row) pair. Equal to the fp serve at the same
+      * probes WHEN the true top-k of every probed list sit inside the
+      * approximate top k·overFetch — [[quantizedTopK]]'s argument
+      * (per-element quantization error ≤ maxAbs/254). That is a
+      * CORPUS-DEPENDENT sufficiency condition, not a theorem: a probed
+      * list packed with thousands of near-duplicate vectors inside the
+      * error band can push a true neighbor below the cut, which is the
+      * standard quantized-index recall trade — raise `overFetch` (or
+      * store fp) where the corpus is that degenerate. The v21 oracle
+      * pins exact identity on this corpus at the default. */
+    val Int8 = IvfStorage("int8", 2, Seq("lists", "fp"),
+      encode = (rows, _, _, vecCol, idCol) =>
+        quantizedLists(rows, vecCol, idCol),
+      scoring = (_, _, _) => IvfScoring(
+        _.withColumn("dqv",
+          VectorFunctions.dequantizeVec(col("qvec"), col("qscale"))),
+        identity, VectorFunctions.cosine(col("qv"), col("dqv"))))
+
+    /** FAISS `IndexIVFPQ`'s shape over this layout: the hot probed scan
+      * reads packed one-long RESIDUAL PQ codes (24 bytes/vector — ~16×
+      * below the int8 frame, ~32× below fp) and scores the ADC
+      * approximation cos ≈ (q·c_L + q·r̂)/(|q|·|v|), with q·c_L exact
+      * per probed list (nProbe tiny rows per query on the broadcast
+      * side, next to the query's residual-codebook LUT) and |v| the
+      * TRUE stored norm — precision exact after the re-rank, recall
+      * governed by overFetch (the v22 oracle pins rank-identity to the
+      * fp serve on this corpus at the registered overFetch; v22b floors
+      * recall at defaults). The probe-side math mirrors [[ivfPqTopK]]
+      * (v14), the in-memory twin. The codebook is stored as its own
+      * kept-through-flips frame, and its shape as the
+      * `numSub`/`numCents` parameters, read LOUDLY (absent → error): a
+      * truncated manifest must not silently re-encode at the
+      * compile-time defaults, and every append encodes with the STORED
+      * codebook — retraining or re-shaping per batch would invalidate
+      * every stored code. */
+    val Pq = IvfStorage("pq", 3, Seq("lists", "fp", "codebook"),
+      encode = (rows, cent, cb, vecCol, idCol) =>
+        pqLists(residualized(rows, cent, vecCol, idCol), cb.get, idCol),
+      scoring = (cent, cb, _) => {
+        val PqCodebook(book, numSub, numCents) = cb.get
+        graft.functions.PqExpressions.register(cent.sparkSession)
+        val cbLit = typedLit(book.toSeq)
+        IvfScoring(identity,
+          _.join(broadcast(cent.select(col("list_id"), col("cvec"))),
+              Seq("list_id"))
+            .select(col("query_id"), col("list_id"), col("qv"),
+              expr("aggregate(zip_with(cast(qv as array<double>), cvec, " +
+                "(x, y) -> x * y), 0D, (a, x) -> a + x)").as("qdotc"),
+              graft.functions.PqExpressions.pqLut(
+                col("qv"), cbLit, numSub, numCents).as("_l"))
+            .select(col("query_id"), col("list_id"), col("qv"), col("qdotc"),
+              col("_l.lut").as("lut"), col("_l.qnorm").as("qnorm")),
+          when(col("qnorm") === 0.0 || col("vnorm") === 0.0, lit(0.0))
+            .otherwise((col("qdotc") + graft.functions.PqExpressions.adcDot(
+              col("code"), col("lut"), numSub, numCents)) /
+              (col("qnorm") * col("vnorm"))))
+      },
+      buildParams = Map("numSub" -> PqNumSub.toString,
+        "numCents" -> PqNumCents.toString),
+      auxSchemas = Map("codebook" ->
+        StructType(Seq(StructField("cb", ArrayType(DoubleType))))),
+      train = (path, params, rows, cent, gen, vecCol, idCol) => {
+        val numSub = IndexLayout.intParam(params, path, "numSub")
+        val numCents = IndexLayout.intParam(params, path, "numCents")
+        val cb = pqTrain(
+          residualized(rows, cent, vecCol, idCol).select(col(idCol), col("_res")),
+          PqTrainSample, numSub, numCents, PqIters,
+          vecCol = "_res", idCol = idCol)
+        val spark = rows.sparkSession
+        import spark.implicits._
+        Seq(cb.toSeq).toDF("cb").write.mode("overwrite")
+          .parquet(IndexLayout.genRoot(path, "codebook", gen))
+        Some(PqCodebook(cb, numSub, numCents))
+      },
+      stored = (spark, path, m) => Some(PqCodebook(
+        IndexLayout.readFrame(spark, path, m, "codebook")
+          .collect()(0).getSeq[Double](0).toArray,
+        IndexLayout.intParam(m, path, "numSub"),
+        IndexLayout.intParam(m, path, "numCents"))))
+
+    private val all = Seq(Fp, Int8, Pq)
+
+    def named(name: String): Option[IvfStorage] = all.find(_.name == name)
+
+    /** The storage a manifest records. A manifest with no `storage` key
+      * predates the quantized storages and is `fp`; a name this code
+      * does not know fails LOUDLY — reading its frames as any known
+      * storage would serve or append silently wrong rows. */
+    def of(m: Map[String, String]): IvfStorage = {
+      val name = m.getOrElse("storage", "fp")
+      named(name).getOrElse(throw new IllegalStateException(
+        s"IVF index storage '$name' is unknown to this code (known: " +
+          s"${all.map(_.name).mkString(", ")}): refusing to read it"))
+    }
+  }
+
+  /** Persist an IVF index to storage: `<path>/centroids` (list_id,
+    * cvec — the trained quantizer) and `<path>/lists` — the inverted
+    * lists PARTITIONED BY list_id. This is the serving form of the
+    * v3/v9 family: build once, answer every later query batch from
+    * storage without touching the raw corpus. The list_id directory
+    * layout is the point — a probe join against the broadcast query
+    * side triggers DYNAMIC PARTITION PRUNING, so each query batch
+    * reads only its probed lists (~nProbe/nList of the index), never
+    * the whole thing; at 100 TB that is the difference between a
+    * bucket-pruned scan and a full-index scan per batch.
+    *
+    * `storage = "int8"` stores int8 codes in `lists` (every probed
+    * scan reads ~1/4 the bytes) and `storage = "pq"` packed one-long
+    * residual PQ codes plus the trained codebook; both keep the
+    * full-precision rows in a parallel `fp` frame ([[IvfStorage]]). */
+  def saveIvfIndex(corpus: DataFrame, path: String, nList: Int = 16,
+      nIters: Int = 1, vecCol: String = "embedding",
+      idCol: String = "vec_id", storage: String = "fp"): Unit =
+    saveIvfIndexWithCentroids(corpus,
+      ivfCentroids(corpus, nList, nIters, vecCol, idCol), path,
+      vecCol, idCol, storage)
 
   /** [[saveIvfIndex]] from a GIVEN quantizer (`cent`: list_id, cvec) —
     * the rebuild form maintenance identity checks need (append/delete
@@ -526,8 +684,9 @@ object Similarity {
   def saveIvfIndexWithCentroids(corpus: DataFrame, centGiven: DataFrame,
       path: String, vecCol: String = "embedding",
       idCol: String = "vec_id", storage: String = "fp"): Unit = {
-    require(storage == "fp" || storage == "int8" || storage == "pq",
-      s"storage must be 'fp', 'int8' or 'pq', got '$storage'")
+    val st = IvfStorage.named(storage).getOrElse(
+      throw new IllegalArgumentException(
+        s"storage must be 'fp', 'int8' or 'pq', got '$storage'"))
     val spark = corpus.sparkSession
     // the quantizer is pinned EAGERLY (nList rows) BEFORE the target is
     // wiped: the natural same-path rebuild —
@@ -545,43 +704,9 @@ object Similarity {
     // a rebuild shadowed by the previous index's tombstones would be
     // wrong (same contract as Dedup.saveMinhashIndex)
     IndexFs.delete(spark, path)
-    cent.write.parquet(IndexLayout.genRoot(path, "centroids", 0))
-    val assigned = ivfAssign(corpus, cent, vecCol, idCol)
-    // storage = "int8": the PROBE frame ("lists") holds int8-quantized
-    // vectors — every probed scan reads ~1/4 the bytes — and the
-    // full-precision rows land in a parallel list-partitioned "fp"
-    // frame read only for the bounded exact re-rank of probed
-    // candidates. The quantized frame is derived from a READ-BACK of
-    // the just-written fp rows, not a second corpus-scale assignment.
-    // storage = "pq": like int8, but the probe frame holds packed
-    // one-long RESIDUAL PQ codes (~16× below int8's byte vectors) and
-    // the trained codebook is stored as its own kept-through-flips
-    // frame, so append/serve read it back instead of retraining
-    val probeFrame =
-      if (storage == "int8" || storage == "pq") {
-        assigned.write.partitionBy("list_id")
-          .parquet(IndexLayout.genRoot(path, "fp", 0))
-        val fpBack = spark.read.parquet(IndexLayout.genRoot(path, "fp", 0))
-        val ql =
-          if (storage == "int8") quantizedLists(fpBack, vecCol, idCol)
-          else {
-            val resid = residualized(fpBack, cent, vecCol, idCol)
-            val cb = pqTrain(resid.select(col(idCol), col("_res")),
-              PqTrainSample, PqNumSub, PqNumCents, PqIters,
-              vecCol = "_res", idCol = idCol)
-            import spark.implicits._
-            Seq(cb.toSeq).toDF("cb")
-              .write.parquet(IndexLayout.genRoot(path, "codebook", 0))
-            pqLists(resid, cb, idCol)
-          }
-        ql.write.partitionBy("list_id")
-          .parquet(IndexLayout.genRoot(path, "lists", 0))
-        ql
-      } else {
-        assigned.write.partitionBy("list_id")
-          .parquet(IndexLayout.genRoot(path, "lists", 0))
-        assigned
-      }
+    // assigned rows are written as they come (no repartition)
+    val schemas = stageIvfGeneration(spark, path, st, st.buildParams,
+      corpus, cent, 0, vecCol, idCol, identity)
     // layout parameters travel WITH the index: metric and dim pin what
     // probes may be scored against it (the centroids frame itself stays
     // the stored quantizer); nList and storage document the build. dim
@@ -591,39 +716,55 @@ object Similarity {
     IndexLayout.writeManifest(spark, path, IndexLayout.newManifest(
       IvfIndexFormat,
       Map("metric" -> "cosine", "dim" -> dim.toString,
-        "nList" -> cent.count().toString, "storage" -> storage,
+        "nList" -> cent.count().toString, "storage" -> st.name,
         // train-time occupancy baseline for the autopilot's imbalance
         // trigger (maintainIvfIndex) — nList-bounded, from the footer
         // scan of the just-written lists
         "trainOcc" -> trainOccCsv(spark,
-          IndexLayout.genRoot(path, "lists", 0))) ++
-        (if (storage == "pq") Map("numSub" -> PqNumSub.toString,
-          "numCents" -> PqNumCents.toString) else Map.empty),
-      Map("centroids" -> cent.schema, "lists" -> probeFrame.schema,
-        "tombstones" -> org.apache.spark.sql.types.StructType(
-          Seq(assigned.schema(idCol)))) ++
-        (if (storage == "fp") Map.empty
-         else Map("fp" -> assigned.schema)) ++
-        (if (storage == "pq") Map("codebook" ->
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("cb",
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.DoubleType)))))
-         else Map.empty),
-      // per-index layout versioning: plain layouts stay 1, int8 is 2,
-      // pq is 3 — each quantized shape must be REFUSED loudly by a
-      // binary that predates it (appending fp rows into a quantized
-      // lists frame would serve silent nulls), while every layout an
-      // older binary CAN read keeps its old version
-      schemaVersion = storage match {
-        case "pq" => 3
-        case "int8" => 2
-        case _ => 1
-      }))
+          IndexLayout.genRoot(path, "lists", 0))) ++ st.buildParams,
+      schemas, schemaVersion = st.schemaVersion))
     // every consumer of the pinned quantizer (the centroids write, the
     // assignment's driver collect, dim/nList) has executed — free the
     // checkpoint blocks now instead of waiting for driver GC
     } finally Checkpoints.free(cent)
+  }
+
+  /** Stage generation `gen` of an IVF index — the body the build (gen
+    * 0, committed by a fresh manifest) and the retrain (gen+1,
+    * committed by a flip) share: write the quantizer `cent`, assign
+    * `rows` under it, and write every data frame of `st`. A quantized
+    * storage writes `fp` first and derives its probe frame (and the pq
+    * codebook, trained on the residuals under `params`' shape) from a
+    * READ-BACK of the written rows, so quantization sees exactly what
+    * the re-rank will read, without a second corpus-scale assignment.
+    * `layout` shapes each list-partitioned write. Every write
+    * overwrites, so a staging replay is idempotent.
+    *
+    * @return the manifest schema of every frame, tombstones included */
+  private def stageIvfGeneration(spark: SparkSession, path: String,
+      st: IvfStorage, params: Map[String, String], rows: DataFrame,
+      cent: DataFrame, gen: Int, vecCol: String, idCol: String,
+      layout: DataFrame => DataFrame): Map[String, StructType] = {
+    cent.write.mode("overwrite")
+      .parquet(IndexLayout.genRoot(path, "centroids", gen))
+    val assigned = ivfAssign(rows, cent, vecCol, idCol)
+    def writeLists(name: String, df: DataFrame): Unit =
+      layout(df).write.mode("overwrite").partitionBy("list_id")
+        .parquet(IndexLayout.genRoot(path, name, gen))
+    val probeRows =
+      if (!st.quantized) assigned
+      else {
+        writeLists("fp", assigned)
+        val fpBack = spark.read.parquet(IndexLayout.genRoot(path, "fp", gen))
+        st.encode(fpBack, cent,
+          st.train(path, params, fpBack, cent, gen, vecCol, idCol),
+          vecCol, idCol)
+      }
+    writeLists("lists", probeRows)
+    Map("centroids" -> cent.schema, "lists" -> probeRows.schema,
+      "tombstones" -> StructType(Seq(assigned.schema(idCol)))) ++
+      (if (st.quantized) Map("fp" -> assigned.schema) else Map.empty) ++
+      st.auxSchemas
   }
 
   /** The stored quantizer of a [[saveIvfIndex]] index (list_id, cvec)
@@ -672,6 +813,7 @@ object Similarity {
     // fails loudly
     IndexLayout.withMaintenanceLease(spark, path) { _ =>
     val m = IndexLayout.requireManifest(spark, path, IvfIndexFormat)
+    val st = IvfStorage.of(m)
     val cent = IndexLayout.readFrame(spark, path, m, "centroids")
     // manifest dim guard: a batch embedded by the wrong model (or a
     // schema drift upstream) fails loudly instead of landing
@@ -681,27 +823,18 @@ object Similarity {
     val assigned = ivfAssign(dimChecked(batch, vecCol,
       IndexLayout.intParam(m, path, "dim"), "appendToIvfIndex"),
       cent, vecCol, idCol)
-    if (quantized(m)) {
+    if (st.quantized) {
       // the two frames MUST hold identical rows, and `batch` may not
       // be re-execution-stable (a directory a producer appends to
       // between the writes, a sampled upstream) — one batch-sized
       // ckptLocal pins the assignment for both staged writes, freed
       // once they commit.
       val pinned = Checkpoints.ckptLocal(assigned)
-      try {
-        val encoded =
-          if (m("storage") == "int8") quantizedLists(pinned, vecCol, idCol)
-          else pqLists(residualized(pinned, cent, vecCol, idCol),
-            // encode with the STORED codebook and STORED shape (the pq
-            // analog of the immutable coarse quantizer): retraining or
-            // re-shaping per batch would invalidate every stored code
-            loadPqCodebook(spark, path, m), idCol,
-            IndexLayout.intParam(m, path, "numSub"),
-            IndexLayout.intParam(m, path, "numCents"))
-        IndexLayout.appendFrames(spark, path, m, Seq(
+      try IndexLayout.appendFrames(spark, path, m, Seq(
           ("fp", pinned, Some("list_id")),
-          ("lists", encoded, Some("list_id"))))
-      } finally Checkpoints.free(pinned)
+          ("lists", st.encode(pinned, cent, st.stored(spark, path, m),
+            vecCol, idCol), Some("list_id"))))
+      finally Checkpoints.free(pinned)
     } else
       IndexLayout.appendFrames(spark, path, m,
         Seq(("lists", assigned, Some("list_id"))))
@@ -724,6 +857,7 @@ object Similarity {
       vecCol: String = "embedding", idCol: String = "vec_id",
       overFetch: Int = 4, asOfSeq: Option[Int] = None): DataFrame = {
     val m = IndexLayout.requireManifest(spark, path, IvfIndexFormat, asOfSeq)
+    val st = IvfStorage.of(m)
     val metric = IndexLayout.param(m, path, "metric")
     if (metric != "cosine") throw new IllegalStateException(
       s"$path was built for metric '$metric'; this serve scores cosine")
@@ -745,21 +879,8 @@ object Similarity {
     // vector can never be served, whether or not its rows have been
     // physically compacted away yet
     val tomb = IndexLayout.loadTombstones(spark, path, m, idCol)
-    m.getOrElse("storage", "fp") match {
-      case "int8" =>
-        ivfProbeAndRankQuantized(cent, frameGroups("lists"),
-          frameGroups("fp"), checkedQueries, k, nProbe, vecCol, idCol,
-          tomb, overFetch)
-      case "pq" =>
-        ivfProbeAndRankPq(cent, frameGroups("lists"), frameGroups("fp"),
-          checkedQueries, k, nProbe, vecCol, idCol, tomb, overFetch,
-          loadPqCodebook(spark, path, m),
-          IndexLayout.intParam(m, path, "numSub"),
-          IndexLayout.intParam(m, path, "numCents"))
-      case _ =>
-        ivfProbeAndRank(cent, frameGroups("lists"), checkedQueries,
-          k, nProbe, vecCol, idCol, tomb)
-    }
+    ivfProbeAndRank(st, st.stored(spark, path, m), cent, frameGroups,
+      checkedQueries, k, nProbe, overFetch, vecCol, idCol, tomb)
   }
 
   /** Candidate sets at or below this many (query, neighbor) rows are
@@ -768,53 +889,6 @@ object Similarity {
     * driver-memory guard, the [[graft.ext.Dedup.MaxBroadcastCandidateIds]]
     * philosophy). */
   val MaxInlineRerankCandidates = 10000L
-
-  /** The `storage = "int8"` serve: identical probes, but the hot
-    * probed scan reads the QUANTIZED lists (~1/4 the bytes), scores
-    * the dequantized cosine, keeps an over-fetched approximate top
-    * k·overFetch per query, and exact-re-ranks ONLY those candidates
-    * against the fp frame. The candidate set is bounded
-    * (≤ |queries|·k·overFetch) and already materialized by the
-    * k-bounded aggregate, so one bounded driver collect (the x26
-    * exception class) turns it into a LITERAL id filter the fp scan
-    * pushes into parquet row-group stats — without it the exact stage
-    * would re-read every probed fp row and the int8 variant would
-    * cost ~1.25× a plain fp serve instead of saving bytes. A
-    * candidate set past [[MaxInlineRerankCandidates]] degrades to the
-    * lazy semi-join over the probed scan instead of bloating the plan.
-    *
-    * Equal to the fp serve at the same probes WHEN the true top-k of
-    * every probed list sit inside the approximate top k·overFetch —
-    * [[quantizedTopK]]'s argument (per-element quantization error
-    * ≤ maxAbs/254). That is a CORPUS-DEPENDENT sufficiency condition,
-    * not a theorem: a probed list packed with thousands of
-    * near-duplicate vectors inside the error band can push a true
-    * neighbor below the cut, which is the standard quantized-index
-    * recall trade — raise `overFetch` (or store fp) where the corpus
-    * is that degenerate. The v21 oracle pins exact identity on this
-    * corpus at the default. Tombstones strike at the approximate
-    * stage, so freed slots refill before the cut. */
-  private def ivfProbeAndRankQuantized(cent: DataFrame,
-      qListGroups: Seq[DataFrame], fpGroups: Seq[DataFrame],
-      queries: DataFrame, k: Int, nProbe: Int,
-      vecCol: String, idCol: String,
-      tombstones: Option[DataFrame], overFetch: Int): DataFrame = {
-    val spark = queries.sparkSession
-    VectorFunctions.register(spark)
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val probes = ivfProbes(cent, q, nProbe)
-    // dequantize once per PROBED LIST ROW (a Project above the scan —
-    // DPP still sees the scan), not per (query, row) pair
-    val dq = qListGroups.map(_.withColumn("dqv",
-      VectorFunctions.dequantizeVec(col("qvec"), col("qscale"))))
-    val approxRaw = probeJoin(dq, probes, idCol)
-    val approx = tombstones.fold(approxRaw)(t =>
-        approxRaw.join(t.select(col(idCol)), Seq(idCol), "left_anti"))
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        VectorFunctions.cosine(col("qv"), col("dqv")).as("cos"))
-    overFetchExactRerank(probes, fpGroups, approx, k, overFetch,
-      vecCol, idCol)
-  }
 
   /** The exact-re-rank tail shared by the quantized storages (int8,
     * pq): keep the approximate top k·overFetch per query, exact-cosine
@@ -867,53 +941,6 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"),
         VectorFunctions.cosine(col("qv"), col(vecCol)).as("cos"))
       .groupBy("query_id", "neighbor_id").agg(max(col("cos")).as("cos")), k)
-  }
-
-  /** The `storage = "pq"` serve — FAISS `IndexIVFPQ`'s shape over this
-    * layout: identical probes, but the hot probed scan reads packed
-    * one-long RESIDUAL PQ codes (24 bytes/vector — ~16× below the int8
-    * frame, ~32× below fp), scores the ADC approximation
-    * cos ≈ (q·c_L + q·r̂)/(|q|·|v|) with q·c_L exact per probed list
-    * and |v| the TRUE stored norm, and hands the over-fetched top
-    * k·overFetch to [[overFetchExactRerank]] — precision exact, recall
-    * governed by overFetch (the v22 oracle pins rank-identity to the
-    * fp serve on this corpus at the registered overFetch; v22b floors
-    * recall at defaults). Tombstones strike at the approximate stage,
-    * so freed slots refill before the cut. The probe-side math mirrors
-    * [[ivfPqTopK]] (v14), which remains the in-memory twin. */
-  private def ivfProbeAndRankPq(cent: DataFrame,
-      qListGroups: Seq[DataFrame], fpGroups: Seq[DataFrame],
-      queries: DataFrame, k: Int, nProbe: Int,
-      vecCol: String, idCol: String, tombstones: Option[DataFrame],
-      overFetch: Int, cb: Array[Double], numSub: Int, numCents: Int)
-      : DataFrame = {
-    val spark = queries.sparkSession
-    VectorFunctions.register(spark)
-    graft.functions.PqExpressions.register(spark)
-    val cbLit = typedLit(cb.toSeq)
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val probes = ivfProbes(cent, q, nProbe)
-    // per (query, probed list): the exact q·c_L term plus the query's
-    // residual-codebook LUT — nProbe tiny rows per query, broadcast
-    val probesPq = probes
-      .join(broadcast(cent.select(col("list_id"), col("cvec"))), Seq("list_id"))
-      .select(col("query_id"), col("list_id"), col("qv"),
-        expr("aggregate(zip_with(cast(qv as array<double>), cvec, " +
-          "(x, y) -> x * y), 0D, (a, x) -> a + x)").as("qdotc"),
-        graft.functions.PqExpressions.pqLut(
-          col("qv"), cbLit, numSub, numCents).as("_l"))
-      .select(col("query_id"), col("list_id"), col("qv"), col("qdotc"),
-        col("_l.lut").as("lut"), col("_l.qnorm").as("qnorm"))
-    val approxRaw = probeJoin(qListGroups, probesPq, idCol)
-    val approx = tombstones.fold(approxRaw)(t =>
-        approxRaw.join(t.select(col(idCol)), Seq(idCol), "left_anti"))
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        when(col("qnorm") === 0.0 || col("vnorm") === 0.0, lit(0.0))
-          .otherwise((col("qdotc") + graft.functions.PqExpressions.adcDot(
-            col("code"), col("lut"), numSub, numCents)) /
-            (col("qnorm") * col("vnorm"))).as("cos"))
-    overFetchExactRerank(probes, fpGroups, approx, k, overFetch,
-      vecCol, idCol)
   }
 
   /** DELETE vectors from a [[saveIvfIndex]] layout — the x26d
@@ -1010,52 +1037,6 @@ object Similarity {
     appendToIvfIndex(spark, path, admittedVecs, vecCol, idCol)
   }
 
-  /** RETRAIN a persisted [[saveIvfIndex]] index's coarse quantizer IN
-    * PLACE — the scheduled verb [[refreshIvfIndex]]'s scaladoc defers
-    * to. The append contract keeps the quantizer immutable (FAISS's
-    * `add()`), so months of appends/refreshes degrade list balance as
-    * the corpus drifts away from the centroids it was trained on
-    * ([[snapshotCentroidDrift]] is the monitor that detects exactly
-    * this); eventually the operator schedules a retrain. The naive
-    * spelling — `saveIvfIndex(survivors, path)` — WIPES the path
-    * before rewriting it, so every concurrent serve hits a no-index
-    * window (and reads the survivors through the very files the wipe
-    * deletes). This verb instead retrains WITHOUT downtime, on the
-    * layout's own terms:
-    *
-    *  - survivors (standing rows ∖ tombstones) are read from the
-    *    current composition — the full-precision frame for quantized
-    *    storages, the lists frame for fp;
-    *  - a NEW quantizer is trained on them ([[ivfCentroids]]:
-    *    deterministic seed draw + Lloyd refinement — `nList` may
-    *    differ from the stored value, the usual reason to retrain is
-    *    that the corpus outgrew it);
-    *  - every data frame is re-assigned and STAGED into the next
-    *    generation (for quantized storages the int8/pq probe frames —
-    *    and the pq codebook, retrained on the new residuals — are
-    *    re-derived from a read-back of the staged fp rows, exactly
-    *    like the build);
-    *  - ONE atomic manifest flip replaces the whole composition,
-    *    updates the stored `nList`, and clears the tombstones the
-    *    rewrite resolved. Readers stay lock-free throughout: pre-flip
-    *    plans serve the old quantizer's answer, post-flip plans the
-    *    new one's, never a torn mix of new centroids over old lists
-    *    (which would probe WRONG lists — the exact hazard staging
-    *    exists to prevent). Retired dirs follow the standard grace
-    *    contract.
-    *
-    * Cost: one survivor-scan per staged frame plus the metadata-scale
-    * training collect — O(corpus), the inherent price of retraining,
-    * amortized over however many months the previous quantizer
-    * served. Runs under the maintenance lease (held across staging
-    * AND flip, renewed before the commit), so concurrent
-    * appends/deletes fail loudly instead of being retired unseen.
-    *
-    * Identity contract (the v23 oracle): after this verb, a serve
-    * equals the same serve against a FRESH `saveIvfIndex(survivors,
-    * nList, nIters, storage)` build — both quantizer trainings see the
-    * identical survivor multiset and both are deterministic, so the
-    * layouts agree row-for-row. */
   /** Per-list row counts of a just-written lists directory, as the
     * nList-bounded `trainOcc` manifest CSV ("list:count", sorted) —
     * the TRAIN-TIME occupancy every build/retrain stores so the
@@ -1095,24 +1076,69 @@ object Similarity {
     ((num * 2000000 + den) / (den * 2)).toLong
   }
 
+  /** RETRAIN a persisted [[saveIvfIndex]] index's coarse quantizer IN
+    * PLACE — the scheduled verb [[refreshIvfIndex]]'s scaladoc defers
+    * to. The append contract keeps the quantizer immutable (FAISS's
+    * `add()`), so months of appends/refreshes degrade list balance as
+    * the corpus drifts away from the centroids it was trained on
+    * ([[snapshotCentroidDrift]] is the monitor that detects exactly
+    * this); eventually the operator schedules a retrain. The naive
+    * spelling — `saveIvfIndex(survivors, path)` — WIPES the path
+    * before rewriting it, so every concurrent serve hits a no-index
+    * window (and reads the survivors through the very files the wipe
+    * deletes). This verb instead retrains WITHOUT downtime, on the
+    * layout's own terms:
+    *
+    *  - survivors (standing rows ∖ tombstones) are read from the
+    *    current composition — the full-precision frame for quantized
+    *    storages, the lists frame for fp;
+    *  - a NEW quantizer is trained on them ([[ivfCentroids]]:
+    *    deterministic seed draw + Lloyd refinement — `nList` may
+    *    differ from the stored value, the usual reason to retrain is
+    *    that the corpus outgrew it);
+    *  - every data frame is re-assigned and STAGED into the next
+    *    generation (for quantized storages the int8/pq probe frames —
+    *    and the pq codebook, retrained on the new residuals — are
+    *    re-derived from a read-back of the staged fp rows — the
+    *    build's own staging body, [[stageIvfGeneration]]);
+    *  - ONE atomic manifest flip replaces the whole composition,
+    *    updates the stored `nList`, and clears the tombstones the
+    *    rewrite resolved. Readers stay lock-free throughout: pre-flip
+    *    plans serve the old quantizer's answer, post-flip plans the
+    *    new one's, never a torn mix of new centroids over old lists
+    *    (which would probe WRONG lists — the exact hazard staging
+    *    exists to prevent). Retired dirs follow the standard grace
+    *    contract.
+    *
+    * Cost: one survivor-scan per staged frame plus the metadata-scale
+    * training collect — O(corpus), the inherent price of retraining,
+    * amortized over however many months the previous quantizer
+    * served. Runs under the maintenance lease (held across staging
+    * AND flip, renewed before the commit), so concurrent
+    * appends/deletes fail loudly instead of being retired unseen.
+    *
+    * Identity contract (the v23 oracle): after this verb, a serve
+    * equals the same serve against a FRESH `saveIvfIndex(survivors,
+    * nList, nIters, storage)` build — both quantizer trainings see the
+    * identical survivor multiset and both are deterministic, so the
+    * layouts agree row-for-row. */
   def retrainIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, nList: Int = 16, nIters: Int = 1,
       vecCol: String = "embedding", idCol: String = "vec_id"): Unit = {
     require(nList > 0, s"nList must be positive, got $nList")
     IndexLayout.withMaintenanceLease(spark, path) { lease =>
       val m = IndexLayout.requireManifest(spark, path, IvfIndexFormat)
-      val storage = m.getOrElse("storage", "fp")
+      val st = IvfStorage.of(m)
       val carried = IndexLayout.dropRetired(spark, path, m)
       // full-precision survivors: the frame that still holds real
       // vectors (the quantized storages' lists frame holds codes)
-      val fullFrame = IvfFamily.idFrame(m)
-      val fullSchema = IndexLayout.frameSchema(m, fullFrame)
+      val fullSchema = IndexLayout.frameSchema(m, st.idFrame)
       require(fullSchema.fieldNames.contains(idCol) &&
         fullSchema.fieldNames.contains(vecCol),
-        s"retrainIvfIndex: stored '$fullFrame' frame has columns " +
+        s"retrainIvfIndex: stored '${st.idFrame}' frame has columns " +
           s"${fullSchema.fieldNames.mkString(",")} — expected id '$idCol' " +
           s"and vector '$vecCol' (pass the index's own column names)")
-      val survivors = IndexLayout.liveRows(spark, path, m, fullFrame, idCol)
+      val survivors = IndexLayout.liveRows(spark, path, m, st.idFrame, idCol)
         .select(col(idCol), col(vecCol))
       val newGen = IndexLayout.intParam(m, path, "gen") + 1
       // the new quantizer: ivfCentroids returns a driver-LOCAL relation
@@ -1120,74 +1146,26 @@ object Similarity {
       // materialized, so nothing below can re-read the index files the
       // flip will retire, and no defensive pin is needed
       val cent = ivfCentroids(survivors, nList, nIters, vecCol, idCol)
-      locally {
-        cent.write.mode("overwrite") // staging replay is idempotent
-          .parquet(IndexLayout.genRoot(path, "centroids", newGen))
-        val assigned = ivfAssign(survivors, cent, vecCol, idCol)
-        val staged: Map[String, (Seq[String], Seq[String])] =
-          if (storage == "fp") {
-            assigned.repartition(col("list_id"))
-              .write.mode("overwrite").partitionBy("list_id")
-              .parquet(IndexLayout.genRoot(path, "lists", newGen))
-            Map("lists" ->
-              ((Seq(s"lists/g$newGen"), IndexLayout.frameEntries(m, "lists"))))
-          } else {
-            // the build's discipline: stage fp first, derive the probe
-            // frame (and pq codebook) from a READ-BACK of the staged
-            // rows so quantization sees exactly what the re-rank will
-            assigned.repartition(col("list_id"))
-              .write.mode("overwrite").partitionBy("list_id")
-              .parquet(IndexLayout.genRoot(path, "fp", newGen))
-            val fpBack = spark.read.parquet(
-              IndexLayout.genRoot(path, "fp", newGen))
-            val (ql, cbStaged) =
-              if (storage == "int8")
-                (quantizedLists(fpBack, vecCol, idCol),
-                  Map.empty[String, (Seq[String], Seq[String])])
-              else {
-                val resid = residualized(fpBack, cent, vecCol, idCol)
-                // stored parameters, LOUD on absence (the intParam
-                // discipline every other pq verb follows) — a truncated
-                // manifest must not silently re-encode at the
-                // compile-time defaults
-                val numSub = IndexLayout.intParam(m, path, "numSub")
-                val numCents = IndexLayout.intParam(m, path, "numCents")
-                val cb = pqTrain(resid.select(col(idCol), col("_res")),
-                  PqTrainSample, numSub, numCents, PqIters,
-                  vecCol = "_res", idCol = idCol)
-                import spark.implicits._
-                Seq(cb.toSeq).toDF("cb").write.mode("overwrite")
-                  .parquet(IndexLayout.genRoot(path, "codebook", newGen))
-                (pqLists(resid, cb, idCol, numSub, numCents),
-                  Map("codebook" -> ((Seq(s"codebook/g$newGen"),
-                    IndexLayout.frameEntries(m, "codebook")))))
-              }
-            ql.repartition(col("list_id"))
-              .write.mode("overwrite").partitionBy("list_id")
-              .parquet(IndexLayout.genRoot(path, "lists", newGen))
-            Map(
-              "lists" -> ((Seq(s"lists/g$newGen"),
-                IndexLayout.frameEntries(m, "lists"))),
-              "fp" -> ((Seq(s"fp/g$newGen"),
-                IndexLayout.frameEntries(m, "fp")))) ++ cbStaged
-          }
-        val all = staged ++ Map(
-          "centroids" -> ((Seq(s"centroids/g$newGen"),
-            IndexLayout.frameEntries(m, "centroids"))),
-          "tombstones" -> IndexLayout.stageDropFrame(m, "tombstones", newGen))
-        // nList is re-read from the staged quantizer (ivfCentroids
-        // returns exactly the rows it trained — ≤ nList on a corpus
-        // smaller than nList), dim is unchanged by construction
-        val newNList = cent.count()
-        IndexLayout.renewLease(spark, path, lease)
-        IndexLayout.flip(spark, path,
-          m + ("nList" -> newNList.toString) +
-            // the retrain RESETS the imbalance baseline: the staged
-            // lists are the new train-time occupancy
-            ("trainOcc" -> trainOccCsv(spark,
-              IndexLayout.genRoot(path, "lists", newGen))),
-          newGen, all, carried)
-      }
+      // `m` carries the stored pq shape the retrained codebook keeps
+      stageIvfGeneration(spark, path, st, m, survivors, cent, newGen,
+        vecCol, idCol, _.repartition(col("list_id")))
+      // every frame is replaced whole: its entries retire and the
+      // staged gN root takes over; the tombstones the rewrite resolved
+      // are dropped the same way
+      val staged = (st.frames ++ Seq("centroids", "tombstones"))
+        .map(f => f -> IndexLayout.stageDropFrame(m, f, newGen)).toMap
+      // nList is re-read from the staged quantizer (ivfCentroids
+      // returns exactly the rows it trained — ≤ nList on a corpus
+      // smaller than nList), dim is unchanged by construction
+      val newNList = cent.count()
+      IndexLayout.renewLease(spark, path, lease)
+      IndexLayout.flip(spark, path,
+        m + ("nList" -> newNList.toString) +
+          // the retrain RESETS the imbalance baseline: the staged
+          // lists are the new train-time occupancy
+          ("trainOcc" -> trainOccCsv(spark,
+            IndexLayout.genRoot(path, "lists", newGen))),
+        newGen, staged, carried)
     }
   }
 

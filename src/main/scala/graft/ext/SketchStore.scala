@@ -1,7 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 /** A PERSISTED STORE for mergeable sketch rows — the third family on
   * the [[IndexLayout]] manifest/generation machinery (MinHash dedup,
@@ -141,13 +141,33 @@ object SketchStore {
     * to serve the dropped days until the retired-directory grace
     * window ([[IndexLayout.RetiredGraceConfKey]]) lapses. */
   def retainFrom(spark: SparkSession, path: String, kind: String,
-      minDay: String): Unit = {
+      minDay: String): Unit =
+    compactDays(spark, path, kind, Some(minDay))
+
+  /** FOLD the composition (the autopilots' composition-length
+    * discipline, [[graft.ext.Dedup.foldMinhashComposition]]'s shape):
+    * a store appended daily accumulates one batch root per committed
+    * day, and every serve unions one more scan until this consolidates
+    * them into the next generation — entries return to
+    * ≤ days + 1. No tombstones exist in this family, so the fold is a
+    * retention that drops no day. */
+  def fold(spark: SparkSession, path: String, kind: String): Unit =
+    compactDays(spark, path, kind, None)
+
+  /** The one compaction body of the store: drop the days before
+    * `minDay` (none without one) and fold every batch root into the
+    * next generation, under the lease, with one flip. The dropped days
+    * are the tombstone set `stageCompactFrame` anti-joins on `dayCol`;
+    * a fold's set is a `lit(false)` filter the optimizer turns into an
+    * empty relation, so collecting it runs no job. */
+  private def compactDays(spark: SparkSession, path: String, kind: String,
+      minDay: Option[String]): Unit =
     IndexLayout.withMaintenanceLease(spark, path) { lease =>
       val m = requireStore(spark, path, kind)
       val dayCol = IndexLayout.param(m, path, "dayCol")
       val carried = IndexLayout.dropRetired(spark, path, m)
-      val stored = IndexLayout.readFrame(spark, path, m, "sketches")
-      val tomb = stored.filter(col(dayCol) < minDay)
+      val tomb = IndexLayout.readFrame(spark, path, m, "sketches")
+        .filter(minDay.fold(lit(false))(col(dayCol) < _))
         .select(dayCol).distinct()
       val dropped: Seq[Any] = tomb.collect().map(_.get(0)).toSeq
       val newGen = IndexLayout.intParam(m, path, "gen") + 1
@@ -156,30 +176,4 @@ object SketchStore {
       IndexLayout.renewLease(spark, path, lease)
       IndexLayout.flip(spark, path, m, newGen, staged, carried)
     }
-  }
-
-  /** FOLD the composition (the autopilots' composition-length
-    * discipline, [[graft.ext.Dedup.foldMinhashComposition]]'s shape):
-    * a store appended daily accumulates one batch root per committed
-    * day, and every serve unions one more scan until this consolidates
-    * them into the next generation — entries return to
-    * ≤ days + 1. No tombstones exist in this family, so the compaction
-    * is always the pure fold (an empty anti-join set on `dayCol`). */
-  def fold(spark: SparkSession, path: String, kind: String): Unit = {
-    IndexLayout.withMaintenanceLease(spark, path) { lease =>
-      val m = requireStore(spark, path, kind)
-      val dayCol = IndexLayout.param(m, path, "dayCol")
-      val carried = IndexLayout.dropRetired(spark, path, m)
-      val emptyIds = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(
-          Seq(IndexLayout.frameSchema(m, "sketches")(dayCol))))
-      val newGen = IndexLayout.intParam(m, path, "gen") + 1
-      val staged = Map("sketches" -> IndexLayout.stageCompactFrame(
-        spark, path, m, "sketches", dayCol, Seq.empty, emptyIds, dayCol,
-        newGen))
-      IndexLayout.renewLease(spark, path, lease)
-      IndexLayout.flip(spark, path, m, newGen, staged, carried)
-    }
-  }
 }

@@ -73,21 +73,6 @@ object Streaming {
       .option("basePath", dir)
       .parquet(s"$dir/embeddings.*")
 
-  /** s16 — streaming IVF index ingest: the v9/v18 maintenance path as
-    * a real stream. Arriving vectors are assigned to the standing
-    * index's lists by the PRE-MATERIALIZED quantizer (`seeds` — pass
-    * [[graft.ext.Similarity.ivfSeedCentroids]] pinned with an eager
-    * localCheckpoint, or a loaded `centroids` frame renamed to
-    * (seed_id, cvec); the standing corpus is scanned ZERO times per
-    * micro-batch), and each batch's (vec_id, list_id) delta lands in
-    * `outPath/batch_id=N` with overwrite — the s15 idempotence
-    * discipline, so a replay after a kill rewrites its own directory
-    * and nothing is assigned twice. Assignment is per-row independent,
-    * so the union over micro-batches equals the one-shot batch
-    * assignment bit-for-bit: v9's oracle covers the streaming run
-    * verbatim (the s9 ≡ x16 pattern). Appending the accumulated
-    * deltas into a persisted index is
-    * [[graft.ext.Similarity.appendToIvfIndex]]'s job at epoch close. */
   /** The shared frame of every per-batch-overwrite streaming sink here
     * (s15/s16/s17): `foreachBatch` + per-batch `batch_id=N` overwrite
     * directories, which turn at-least-once batch replays into
@@ -115,6 +100,21 @@ object Streaming {
       .trigger(trigger)
       .start()
 
+  /** s16 — streaming IVF index ingest: the v9/v18 maintenance path as
+    * a real stream. Arriving vectors are assigned to the standing
+    * index's lists by the PRE-MATERIALIZED quantizer (`seeds` — pass
+    * [[graft.ext.Similarity.ivfSeedCentroids]] pinned with an eager
+    * localCheckpoint, or a loaded `centroids` frame renamed to
+    * (seed_id, cvec); the standing corpus is scanned ZERO times per
+    * micro-batch), and each batch's (vec_id, list_id) delta lands in
+    * `outPath/batch_id=N` with overwrite — the s15 idempotence
+    * discipline, so a replay after a kill rewrites its own directory
+    * and nothing is assigned twice. Assignment is per-row independent,
+    * so the union over micro-batches equals the one-shot batch
+    * assignment bit-for-bit: v9's oracle covers the streaming run
+    * verbatim (the s9 ≡ x16 pattern). Appending the accumulated
+    * deltas into a persisted index is
+    * [[graft.ext.Similarity.appendToIvfIndex]]'s job at epoch close. */
   def ivfIngestStream(vecs: DataFrame, seeds: DataFrame, outPath: String,
       checkpoint: String, trigger: Trigger = Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =

@@ -4311,6 +4311,46 @@ class ExtSpec extends SparkSpec {
       row(0).getBoolean(2), row.mkString)
   }
 
+  test("IVF storage lookup: an unknown stored storage fails loudly at serve, append and compaction; a manifest with no storage key serves as fp") {
+    VectorFunctions.register(spark)
+    val root = java.nio.file.Files.createTempDirectory("graft-ivf-storage").toString
+    val standing = emb.filter(col("vec_id") < 200)
+    val queries = emb.filter(col("vec_id") < 5)
+    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    // commit an edited manifest at the next seq — what a binary with a
+    // storage this code does not know (or one that predates the
+    // storage key) leaves behind
+    def recommit(path: String)(
+        edit: Map[String, String] => Map[String, String]): Unit = {
+      val m = graft.ext.IndexLayout.readManifest(spark, path).get
+      graft.ext.IndexLayout.writeManifest(spark, path,
+        edit(m) + ("seq" -> (graft.ext.IndexLayout.seqOf(m) + 1).toString))
+    }
+    val unknown = s"$root/unknown"
+    Similarity.saveIvfIndex(standing, unknown, nList = 4, nIters = 1)
+    recommit(unknown)(_ + ("storage" -> "int4"))
+    val verbs = Seq[(String, () => Any)](
+      "serve" -> (() => Similarity.ivfTopKFromIndex(spark, unknown, queries,
+        k = 5, nProbe = 4).collect()),
+      "append" -> (() => Similarity.appendToIvfIndex(spark, unknown,
+        emb.filter(col("vec_id") >= 200 && col("vec_id") < 210))),
+      "compact" -> (() => Similarity.compactIvfTombstones(spark, unknown)))
+    for ((verb, run) <- verbs) {
+      val e = intercept[IllegalStateException](run())
+      assert(e.getMessage.contains("int4"), s"$verb: ${e.getMessage}")
+    }
+    val legacy = s"$root/legacy"
+    Similarity.saveIvfIndex(standing, legacy, nList = 4, nIters = 1)
+    val want = key(Similarity.ivfTopKFromIndex(spark, legacy, queries,
+      k = 5, nProbe = 4))
+    recommit(legacy)(_ - "storage")
+    assert(!Similarity.ivfIndexParams(spark, legacy).contains("storage"))
+    assert(want.nonEmpty && key(Similarity.ivfTopKFromIndex(spark, legacy,
+      queries, k = 5, nProbe = 4)) == want,
+      "a manifest with no storage key must serve as fp")
+  }
+
   test("x30: rebucketMinhashIndex re-keys the stored frames in place — new count stored and pruning, frames equal a fresh build at the new count") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-mh-rebucket").toString
