@@ -931,37 +931,26 @@ object Dedup {
   def rebucketMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, newBuckets: Int, idCol: String = "doc_id"): Unit = {
     require(newBuckets > 0, s"newBuckets must be positive, got $newBuckets")
-    IndexLayout.withMaintenanceLease(spark, path) { lease =>
-      val m = IndexLayout.requireManifest(spark, path, MinhashIndexFormat)
-      val carried = IndexLayout.dropRetired(spark, path, m)
-      val tombOpt = IndexLayout.loadTombstones(spark, path, m, idCol)
-        .map(t => Checkpoints.ckptLocal(t.distinct()))
-      try {
-        val newGen = IndexLayout.intParam(m, path, "gen") + 1
-        def rebucketFrame(name: String): (Seq[String], Seq[String]) = {
-          val newRoot = s"$name/g$newGen"
-          IndexLayout.liveRows(spark, path, m, name, idCol)
-            .drop("bucket")
-            .withColumn("bucket", idBucket(col(idCol), newBuckets))
-            .repartition(col("bucket"))
-            .write.mode("overwrite") // staging replay is idempotent
-            .partitionBy("bucket").parquet(s"$path/$newRoot")
-          (Seq(newRoot), IndexLayout.frameEntries(m, name))
-        }
-        // bands and tombstones are staged only when tombstones stand;
-        // otherwise the flip carries both through unchanged
-        val staged = Map(
-          "shingles" -> rebucketFrame("shingles"),
-          "sizes" -> rebucketFrame("sizes")) ++
-          tombOpt.map(tomb => Map(
-            "bands" -> IndexLayout.stageRewriteFrame(spark, path, m,
-              "bands", "band", tomb, idCol, newGen),
-            "tombstones" -> IndexLayout.stageDropFrame(m, "tombstones",
-              newGen))).getOrElse(Map.empty)
-        IndexLayout.renewLease(spark, path, lease)
-        IndexLayout.flip(spark, path,
-          m + ("buckets" -> newBuckets.toString), newGen, staged, carried)
-      } finally tombOpt.foreach(Checkpoints.free)
+    IndexLayout.flipGeneration(spark, path, MinhashIndexFormat) { m =>
+      Some { newGen =>
+        val tombOpt = IndexLayout.loadTombstones(spark, path, m, idCol)
+          .map(t => Checkpoints.ckptLocal(t.distinct()))
+        try {
+          val rekey = (rows: DataFrame) =>
+            rows.withColumn("bucket", idBucket(col(idCol), newBuckets))
+          // bands and tombstones are staged only when tombstones stand;
+          // otherwise the flip carries both through unchanged
+          (Map("buckets" -> newBuckets.toString),
+            Seq("shingles", "sizes").map(name => name ->
+              IndexLayout.stageRewriteFrame(spark, path, m, name, "bucket",
+                tombOpt, idCol, newGen, rekey)).toMap ++
+            tombOpt.map(tomb => Map(
+              "bands" -> IndexLayout.stageRewriteFrame(spark, path, m,
+                "bands", "band", Some(tomb), idCol, newGen),
+              "tombstones" -> IndexLayout.stageDropFrame(m, "tombstones",
+                newGen))).getOrElse(Map.empty))
+        } finally tombOpt.foreach(Checkpoints.free)
+      }
     }
   }
 

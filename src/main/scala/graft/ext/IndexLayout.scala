@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.functions.{broadcast, col, lit}
 import org.apache.spark.sql.types.StructType
 
 /** The MANIFEST + GENERATION layout shared by both persisted-index
@@ -684,7 +684,8 @@ private[graft] object IndexLayout {
     * without the lease could lose the new writer's work, so the verb
     * must abort instead. Overwriting our own generation file is safe:
     * no other writer ever targets an existing generation. */
-  def renewLease(spark: SparkSession, path: String, h: LeaseHandle): Unit = {
+  private[graft] def renewLease(spark: SparkSession, path: String,
+      h: LeaseHandle): Unit = {
     val f = IndexFs.fs(spark, path)
     currentLease(f, path, h.ttlMs) match {
       case Some((g, holder, _, _)) if g == h.gen && holder == h.writerId =>
@@ -761,21 +762,6 @@ private[graft] object IndexLayout {
   private def joinEntries(es: Seq[String]): String = es.mkString(",")
   def frameEntries(m: Map[String, String], name: String): Seq[String] =
     m.getOrElse(s"frames.$name", "").split(",").filter(_.nonEmpty).toSeq
-
-  /** The single OPEN generation root of a frame — the LAST composition
-    * entry by convention, always a whole `name/gN` directory: the
-    * compaction's staging target. Appends do NOT land here — they
-    * stage their own batch roots ([[stageAppendBatch]]) spliced into
-    * the composition just before this entry. */
-  def openRoot(m: Map[String, String], name: String): String = {
-    val es = frameEntries(m, name)
-    require(es.nonEmpty && (es.last.split("/") match {
-        case Array(_, g) => g.matches("g\\d+")
-        case _ => false
-      }),
-      s"frame '$name' has no open generation root in ${es.mkString(",")}")
-    es.last
-  }
 
   def frameSchema(m: Map[String, String], name: String): StructType =
     StructType.fromDDL(m.getOrElse(s"schema.$name",
@@ -924,8 +910,8 @@ private[graft] object IndexLayout {
 
   /** The ONE atomic commit closing an append: splice every staged
     * batch entry into its frame's composition (just before the open
-    * generation root, preserving the [[openRoot]] last-entry
-    * convention) and commit the next manifest seq. Batch visibility is
+    * generation root, which by convention stays the frame's last
+    * entry) and commit the next manifest seq. Batch visibility is
     * atomic ACROSS frames — a dual-frame append stages both roots,
     * then becomes visible here or not at all; a kill before this
     * commit leaves only unreferenced staging ([[dropRetired]]'s orphan
@@ -1091,20 +1077,22 @@ private[graft] object IndexLayout {
   }
 
   /** Stage a WHOLE-frame rewrite into `newGen` (frames with no
-    * id-derived partitioning, e.g. the MinHash bands): every current
-    * entry retires, the new root is the entire surviving frame. */
+    * id-derived partitioning, e.g. the MinHash bands, or a frame being
+    * re-keyed): every current entry retires, the new root is the entire
+    * frame minus the `tomb` ids, if any, after `rekey` recomputes its
+    * columns (the rebucket's new `bucket`). */
   def stageRewriteFrame(spark: SparkSession, path: String,
       m: Map[String, String], name: String, partCol: String,
-      tomb: DataFrame, idCol: String, newGen: Int)
+      tomb: Option[DataFrame], idCol: String, newGen: Int,
+      rekey: DataFrame => DataFrame = identity)
       : (Seq[String], Seq[String]) = {
     val newRoot = s"$name/g$newGen"
-    val groups = readFrameGroups(spark, path, m, name)
-    if (groups.nonEmpty)
-      groups.reduce(_.union(_))
-        .join(tomb.select(col(idCol)), Seq(idCol), "left_anti")
+    readFrameGroups(spark, path, m, name).reduceOption(_.union(_))
+      .foreach(rows => rekey(tomb.fold(rows)(t =>
+          rows.join(t.select(col(idCol)), Seq(idCol), "left_anti")))
         .repartition(col(partCol))
         .write.mode("overwrite")
-        .partitionBy(partCol).parquet(s"$path/$newRoot")
+        .partitionBy(partCol).parquet(s"$path/$newRoot"))
     (Seq(newRoot), frameEntries(m, name))
   }
 
@@ -1204,7 +1192,7 @@ private[graft] object IndexLayout {
     *
     * @return the retired entries still inside the grace window, for
     *         the closing flip to carry forward. */
-  def dropRetired(spark: SparkSession, path: String,
+  private[graft] def dropRetired(spark: SparkSession, path: String,
       m: Map[String, String]): Seq[(String, Long)] = {
     val minAge = spark.conf.getOption(RetiredGraceConfKey).map(_.toLong)
       .getOrElse(0L)
@@ -1264,8 +1252,8 @@ private[graft] object IndexLayout {
     * retired directories — stamped with the flip time — plus any
     * grace-retained entries [[dropRetired]] carried forward, for a
     * later compaction's [[dropRetired]]. */
-  def flip(spark: SparkSession, path: String, m: Map[String, String],
-      newGen: Int, staged: Map[String, (Seq[String], Seq[String])],
+  private[graft] def flip(spark: SparkSession, path: String,
+      m: Map[String, String], newGen: Int, staged: Staged,
       carriedRetired: Seq[(String, Long)] = Seq.empty): Unit = {
     val now = System.currentTimeMillis()
     // phantom filter: an open generation root nothing was ever written
@@ -1287,6 +1275,45 @@ private[graft] object IndexLayout {
         "retiredAt" -> joinEntries(allRetired.map(_._2.toString)))
     writeManifest(spark, path, updated)
   }
+
+  /** The frames a generation flip commits: frame name → (its new
+    * composition entries, the entries the flip retires). */
+  type Staged = Map[String, (Seq[String], Seq[String])]
+
+  /** The ONE generation-flip protocol of every verb that rewrites an
+    * index into its next generation: compaction and fold ([[compact]]),
+    * the MinHash rebucket, the IVF retrain and the sketch store's
+    * retention and fold. Under the maintenance lease, in this order:
+    *  1. [[requireManifest]] resolves and validates the head manifest
+    *     `m` of `format`;
+    *  2. `plan(m)` runs the verb's own checks and returns its staging
+    *     step — or None when there is nothing to commit, in which case
+    *     nothing is swept and nothing is committed;
+    *  3. [[dropRetired]] deletes what earlier flips retired (the grace
+    *     contract: retired data outlives one full flip interval);
+    *  4. the staging step writes `newGen = gen + 1` roots nothing
+    *     references yet and returns the manifest parameters it changes
+    *     plus its [[Staged]] frames;
+    *  5. [[renewLease]] — the heartbeat, and the still-the-owner check
+    *     right before the commit;
+    *  6. ONE [[flip]] of `m ++ updates` commits the new generation.
+    * A staging step that throws leaves the manifest unchanged and only
+    * overwrite-idempotent staging behind; the lease is released either
+    * way. */
+  private[graft] def flipGeneration(spark: SparkSession, path: String,
+      format: String)(
+      plan: Map[String, String] => Option[Int => (Map[String, String], Staged)])
+      : Unit =
+    withMaintenanceLease(spark, path) { lease =>
+      val m = requireManifest(spark, path, format)
+      plan(m).foreach { stage =>
+        val carried = dropRetired(spark, path, m)
+        val newGen = intParam(m, path, "gen") + 1
+        val (updates, staged) = stage(newGen)
+        renewLease(spark, path, lease)
+        flip(spark, path, m ++ updates, newGen, staged, carried)
+      }
+    }
 
   // ---------------------------------------------------------------
   // tombstones (shared by both families)
@@ -1342,8 +1369,7 @@ private[graft] object IndexLayout {
     * [[compactOrFold]]) needs to know about an index family:
     *  - `format`: the manifest format tag every verb validates;
     *  - `idFrame`: the frame holding one row per indexed id, under the
-    *    stored manifest (its id column types the empty fold set, and
-    *    the autopilots count rows and dead rows on it);
+    *    stored manifest (the autopilots count rows and dead rows on it);
     *  - `partitioned`: the (frame, partition column) pairs a compaction
     *    rewrites partition by partition, pruned to the affected ones;
     *  - `rewritten`: the (frame, partition column) pairs with no
@@ -1370,26 +1396,25 @@ private[graft] object IndexLayout {
     * the family's `partitioned` frames; its `rewritten` frames are
     * rewritten whole. Readers stay live throughout: every frame is
     * staged into generation roots nothing references yet, then ONE
-    * [[flip]] replaces the compositions and drops the tombstones
-    * together. A kill before the flip leaves the manifest unchanged
-    * and only overwrite-idempotent staging. */
+    * [[flipGeneration]] replaces the compositions and drops the
+    * tombstones together. A kill before the flip leaves the manifest
+    * unchanged and only overwrite-idempotent staging. */
   def compact(spark: SparkSession, fam: IndexFamily, path: String,
       idCol: String, foldEvenClean: Boolean): Unit =
-    // leased across staging AND flip — the whole window in which a
-    // concurrent append/delete would be silently retired or dropped
-    withMaintenanceLease(spark, path) { lease =>
-      val m = requireManifest(spark, path, fam.format)
+    flipGeneration(spark, path, fam.format) { m =>
       // resolved first, so a manifest the family cannot read fails here
       // whether or not there is anything to compact
       val partitioned = fam.partitioned(m)
       val tombStanding = loadTombstones(spark, path, m, idCol)
+      // a fold's tombstone set is empty: the tombstone frame (no
+      // committed data, so no scan) under a lit(false) filter the
+      // optimizer turns into an empty relation of the id column's type
       val tombForFold =
         if (foldEvenClean && tombStanding.isEmpty)
-          Some(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-            StructType(Seq(frameSchema(m, fam.idFrame(m))(idCol)))))
+          Some(readFrame(spark, path, m, "tombstones").select(col(idCol))
+            .filter(lit(false)))
         else tombStanding
-      tombForFold.foreach { tombRaw =>
-        val carried = dropRetired(spark, path, m)
+      tombForFold.map { tombRaw => newGen =>
         // the tombstone set feeds the affected-partition discovery and
         // every staging's anti-join; delta-sized, so one ckptLocal pins
         // it for all of them. try/finally: a compaction that fails
@@ -1397,21 +1422,17 @@ private[graft] object IndexLayout {
         val tomb = Checkpoints.ckptLocal(tombRaw.distinct())
         try {
           val affected = fam.affected(spark, path, m, tomb, idCol)
-          val newGen = intParam(m, path, "gen") + 1
           // every staging writes a disjoint newGen root from one fixed
           // manifest + the pinned tombstone set — independent jobs,
           // overlapped so the verb costs ~the slowest staging
-          val staged = inParallel(
+          (Map.empty, inParallel(
             partitioned.map { case (name, p) => () =>
               name -> stageCompactFrame(spark, path, m, name, p, affected,
                 tomb, idCol, newGen) } ++
             fam.rewritten.map { case (name, p) => () =>
-              name -> stageRewriteFrame(spark, path, m, name, p, tomb,
+              name -> stageRewriteFrame(spark, path, m, name, p, Some(tomb),
                 idCol, newGen) }).toMap +
-            ("tombstones" -> stageDropFrame(m, "tombstones", newGen))
-          // heartbeat + still-the-owner assertion right before the commit
-          renewLease(spark, path, lease)
-          flip(spark, path, m, newGen, staged, carried)
+            ("tombstones" -> stageDropFrame(m, "tombstones", newGen)))
         } finally Checkpoints.free(tomb)
       }
     }

@@ -1126,46 +1126,41 @@ object Similarity {
       path: String, nList: Int = 16, nIters: Int = 1,
       vecCol: String = "embedding", idCol: String = "vec_id"): Unit = {
     require(nList > 0, s"nList must be positive, got $nList")
-    IndexLayout.withMaintenanceLease(spark, path) { lease =>
-      val m = IndexLayout.requireManifest(spark, path, IvfIndexFormat)
+    IndexLayout.flipGeneration(spark, path, IvfIndexFormat) { m =>
       val st = IvfStorage.of(m)
-      val carried = IndexLayout.dropRetired(spark, path, m)
-      // full-precision survivors: the frame that still holds real
-      // vectors (the quantized storages' lists frame holds codes)
-      val fullSchema = IndexLayout.frameSchema(m, st.idFrame)
-      require(fullSchema.fieldNames.contains(idCol) &&
-        fullSchema.fieldNames.contains(vecCol),
-        s"retrainIvfIndex: stored '${st.idFrame}' frame has columns " +
-          s"${fullSchema.fieldNames.mkString(",")} — expected id '$idCol' " +
-          s"and vector '$vecCol' (pass the index's own column names)")
-      val survivors = IndexLayout.liveRows(spark, path, m, st.idFrame, idCol)
-        .select(col(idCol), col(vecCol))
-      val newGen = IndexLayout.intParam(m, path, "gen") + 1
-      // the new quantizer: ivfCentroids returns a driver-LOCAL relation
-      // (seeds collected, Lloyd iterations collected) — already
-      // materialized, so nothing below can re-read the index files the
-      // flip will retire, and no defensive pin is needed
-      val cent = ivfCentroids(survivors, nList, nIters, vecCol, idCol)
-      // `m` carries the stored pq shape the retrained codebook keeps
-      stageIvfGeneration(spark, path, st, m, survivors, cent, newGen,
-        vecCol, idCol, _.repartition(col("list_id")))
-      // every frame is replaced whole: its entries retire and the
-      // staged gN root takes over; the tombstones the rewrite resolved
-      // are dropped the same way
-      val staged = (st.frames ++ Seq("centroids", "tombstones"))
-        .map(f => f -> IndexLayout.stageDropFrame(m, f, newGen)).toMap
-      // nList is re-read from the staged quantizer (ivfCentroids
-      // returns exactly the rows it trained — ≤ nList on a corpus
-      // smaller than nList), dim is unchanged by construction
-      val newNList = cent.count()
-      IndexLayout.renewLease(spark, path, lease)
-      IndexLayout.flip(spark, path,
-        m + ("nList" -> newNList.toString) +
-          // the retrain RESETS the imbalance baseline: the staged
-          // lists are the new train-time occupancy
-          ("trainOcc" -> trainOccCsv(spark,
-            IndexLayout.genRoot(path, "lists", newGen))),
-        newGen, staged, carried)
+      Some { newGen =>
+        // full-precision survivors: the frame that still holds real
+        // vectors (the quantized storages' lists frame holds codes)
+        val fullSchema = IndexLayout.frameSchema(m, st.idFrame)
+        require(fullSchema.fieldNames.contains(idCol) &&
+          fullSchema.fieldNames.contains(vecCol),
+          s"retrainIvfIndex: stored '${st.idFrame}' frame has columns " +
+            s"${fullSchema.fieldNames.mkString(",")} — expected id '$idCol' " +
+            s"and vector '$vecCol' (pass the index's own column names)")
+        val survivors = IndexLayout.liveRows(spark, path, m, st.idFrame, idCol)
+          .select(col(idCol), col(vecCol))
+        // the new quantizer: ivfCentroids returns a driver-LOCAL relation
+        // (seeds collected, Lloyd iterations collected) — already
+        // materialized, so nothing below can re-read the index files the
+        // flip will retire, and no defensive pin is needed
+        val cent = ivfCentroids(survivors, nList, nIters, vecCol, idCol)
+        // `m` carries the stored pq shape the retrained codebook keeps
+        stageIvfGeneration(spark, path, st, m, survivors, cent, newGen,
+          vecCol, idCol, _.repartition(col("list_id")))
+        // nList is re-read from the staged quantizer (ivfCentroids
+        // returns exactly the rows it trained — ≤ nList on a corpus
+        // smaller than nList), dim is unchanged by construction; the
+        // retrain RESETS the imbalance baseline: the staged lists are
+        // the new train-time occupancy
+        (Map("nList" -> cent.count().toString,
+            "trainOcc" -> trainOccCsv(spark,
+              IndexLayout.genRoot(path, "lists", newGen))),
+          // every frame is replaced whole: its entries retire and the
+          // staged gN root takes over; the tombstones the rewrite
+          // resolved are dropped the same way
+          (st.frames ++ Seq("centroids", "tombstones"))
+            .map(f => f -> IndexLayout.stageDropFrame(m, f, newGen)).toMap)
+      }
     }
   }
 

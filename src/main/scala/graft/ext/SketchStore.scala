@@ -162,18 +162,15 @@ object SketchStore {
     * empty relation, so collecting it runs no job. */
   private def compactDays(spark: SparkSession, path: String, kind: String,
       minDay: Option[String]): Unit =
-    IndexLayout.withMaintenanceLease(spark, path) { lease =>
-      val m = requireStore(spark, path, kind)
-      val dayCol = IndexLayout.param(m, path, "dayCol")
-      val carried = IndexLayout.dropRetired(spark, path, m)
-      val tomb = IndexLayout.readFrame(spark, path, m, "sketches")
-        .filter(minDay.fold(lit(false))(col(dayCol) < _))
-        .select(dayCol).distinct()
-      val dropped: Seq[Any] = tomb.collect().map(_.get(0)).toSeq
-      val newGen = IndexLayout.intParam(m, path, "gen") + 1
-      val staged = Map("sketches" -> IndexLayout.stageCompactFrame(
-        spark, path, m, "sketches", dayCol, dropped, tomb, dayCol, newGen))
-      IndexLayout.renewLease(spark, path, lease)
-      IndexLayout.flip(spark, path, m, newGen, staged, carried)
+    IndexLayout.flipGeneration(spark, path, SketchStoreFormat) { m =>
+      val dayCol = IndexLayout.param(validateKind(m, path, kind), path, "dayCol")
+      Some { newGen =>
+        val tomb = IndexLayout.readFrame(spark, path, m, "sketches")
+          .filter(minDay.fold(lit(false))(col(dayCol) < _))
+          .select(dayCol).distinct()
+        val dropped: Seq[Any] = tomb.collect().map(_.get(0)).toSeq
+        (Map.empty, Map("sketches" -> IndexLayout.stageCompactFrame(
+          spark, path, m, "sketches", dayCol, dropped, tomb, dayCol, newGen)))
+      }
     }
 }

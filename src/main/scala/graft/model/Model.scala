@@ -56,12 +56,6 @@ object Schemas {
       StructField("TotalDuration", LongType),
       StructField("AppName", StringType))))))
 
-  val logRow: StructType = StructType(Seq(
-    StructField("Contract", StringType),
-    StructField("Mac", StringType),
-    StructField("TotalDuration", LongType),
-    StructField("AppName", StringType)))
-
   val events: StructType = StructType(Seq(
     StructField("event_id", LongType),
     StructField("ts", TimestampType),

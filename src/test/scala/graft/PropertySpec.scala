@@ -568,6 +568,7 @@ class PropertySpec extends SparkSpec {
       (2, Gen.const('k')), (1, Gen.const('c'))))
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("pv", LongType)))
+    final class CrashBeforeFlip extends RuntimeException("crash before flip")
     check(Prop.forAll(verbGen) { verbsRaw =>
       import scala.jdk.CollectionConverters._
       val verbs = if (verbsRaw.isEmpty) List('a', 'd', 'k') else verbsRaw
@@ -658,25 +659,36 @@ class PropertySpec extends SparkSpec {
                   doomed.toDF("id"), "id")
               }
             case 'k' | 'c' =>
-              val carried = IndexLayout.dropRetired(spark, path, m)
-              val tomb = IndexLayout.loadTombstones(spark, path, m, "id")
-                .map(_.distinct()).getOrElse(spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[Row],
-                  StructType(Seq(StructField("id", LongType)))))
-              val newGen = m("gen").toInt + 1
-              val staged = Map(
-                "data" -> IndexLayout.stageCompactFrame(spark, path, m,
-                  "data", "pv", Seq(0L, 1L, 2L), tomb, "id", newGen),
-                "tombstones" ->
-                  IndexLayout.stageDropFrame(m, "tombstones", newGen))
-              if (v == 'k') {
-                // the compaction resolves the tombstones physically;
-                // the LIVE set is unchanged by construction
-                appended --= tombstoned
-                tombstoned = Set.empty
-                model.put(seq + 1, appended)
-                IndexLayout.flip(spark, path, m, newGen, staged, carried)
-              } // 'c': staged only — crashed before its flip
+              // the production flip body (lease, sweep, stage, renew,
+              // flip); 'c' stages and then crashes before its flip
+              try IndexLayout.flipGeneration(spark, path, "graft-proptest") {
+                mk => Some { newGen =>
+                  val tomb = IndexLayout.loadTombstones(spark, path, mk, "id")
+                    .map(_.distinct()).getOrElse(spark.createDataFrame(
+                      spark.sparkContext.emptyRDD[Row],
+                      StructType(Seq(StructField("id", LongType)))))
+                  val staged = Map(
+                    "data" -> IndexLayout.stageCompactFrame(spark, path, mk,
+                      "data", "pv", Seq(0L, 1L, 2L), tomb, "id", newGen),
+                    "tombstones" ->
+                      IndexLayout.stageDropFrame(mk, "tombstones", newGen))
+                  if (v == 'c') throw new CrashBeforeFlip
+                  // the compaction resolves the tombstones physically;
+                  // the LIVE set is unchanged by construction
+                  appended --= tombstoned
+                  tombstoned = Set.empty
+                  model.put(seq + 1, appended)
+                  (Map.empty, staged)
+                }
+              } catch { case _: CrashBeforeFlip =>
+                // the crash committed nothing and released the lease
+                val after = IndexLayout.seqOf(
+                  IndexLayout.readManifest(spark, path).get)
+                if (after != seq)
+                  violations.add(s"crashed compaction moved seq $seq→$after")
+                IndexLayout.leaseHolder(spark, path).foreach(h =>
+                  violations.add(s"crashed compaction left the lease with $h"))
+              }
           }
         }
         done.set(true)

@@ -8,8 +8,8 @@
 # offline mode; a revision already built there is reused. Then, for
 # every row, N pairs (default 10) of graft.TimeQuery runs alternate the
 # two builds, and alternate which side runs first. One run is one JVM:
-# tables cached, one untimed warmup, 3 timed reps; the run's time is
-# the median of its reps.
+# one untimed warmup that caches the tables the row reads, 3 timed
+# reps; the run's time is the median of its reps.
 #
 # For each row it prints both medians, the parent's interquartile range
 # and how many pairs the change won (ties count for neither side). The
