@@ -6,7 +6,9 @@ package graft
   * Hot-cache like Bench: every base table is marked for caching, but
   * only the tables the query reads are filled — by the one untimed
   * warmup — so the timed reps run hot without paying to load tables
-  * the row never touches. Prints per-rep seconds. */
+  * the row never touches. Prints per-rep seconds, plus the time
+  * outside them: `start_s` from JVM start until the session is up and
+  * the tables are marked, and `warmup_s` for the untimed warmup. */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -27,9 +29,12 @@ object TimeQuery {
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
-    once() // warmup
+    val startS = (System.currentTimeMillis() -
+      java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3
+    val warmupS = once()
     val times = Seq.fill(reps)(once())
     println(f"""{"query":"$name","sf":"$sfDir","cores":$cores,""" +
+      f""""start_s":$startS%.3f,"warmup_s":$warmupS%.3f,""" +
       s""""reps":[${times.map(t => f"$t%.3f").mkString(",")}]}""")
     spark.stop()
   }

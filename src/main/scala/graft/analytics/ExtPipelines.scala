@@ -2679,7 +2679,9 @@ object ExtPipelines {
 
   /** v8: product-quantization ANN (packed one-long codes + ADC scan +
     * exact re-rank) — the ~32× memory-scale path; see
-    * [[graft.ext.Similarity.pqTopK]]. Engine-specific (trained
+    * [[graft.ext.Similarity.pqTopK]], which trains the pq IVF storage's
+    * codec shape over the whole corpus (no coarse quantizer) and shares
+    * int8's (v4) brute-force exact re-rank. Engine-specific (trained
     * codebooks) ⇒ rows-only driver check; v8b bounds its recall. */
   def annPqTopK(spark: SparkSession, dir: String): DataFrame =
     Similarity.pqTopK(Tables.embeddings(spark, dir),
@@ -2699,8 +2701,10 @@ object ExtPipelines {
 
   /** v14: IVF-PQ ANN — coarse-pruned candidate scan over packed
     * residual codes, ADC scoring, exact re-rank; see
-    * [[graft.ext.Similarity.ivfPqTopK]]. Engine-specific (trained
-    * quantizers) ⇒ rows-only driver check; v14b bounds its recall. */
+    * [[graft.ext.Similarity.ivfPqTopK]]: the persisted pq index's own
+    * codec and probe-and-rank serve, run in memory (v22's serve
+    * without the files). Engine-specific (trained quantizers) ⇒
+    * rows-only driver check; v14b bounds its recall. */
   def annIvfPqTopK(spark: SparkSession, dir: String): DataFrame =
     Similarity.ivfPqTopK(Tables.embeddings(spark, dir),
       queryVecs(spark, dir), k = 5)

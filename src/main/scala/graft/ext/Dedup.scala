@@ -2013,6 +2013,7 @@ object Dedup {
   def semanticDedup(df: DataFrame, nClusters: Int = 8, eps: Double = 0.4,
       nIters: Int = 0, vecCol: String = "embedding",
       idCol: String = "vec_id"): DataFrame = {
+    graft.functions.VectorFunctions.register(df.sparkSession)
     val assigned = semanticClusters(df, nClusters, nIters, vecCol, idCol)
     // the assignment feeds THREE consumers (both sides of the pair
     // self-join and the kept output); un-materialized, Spark re-runs the
@@ -2045,31 +2046,14 @@ object Dedup {
     * scan: the k centroids are broadcast and the argmax runs as a
     * map-side partial `max_by` before the only exchange, which carries
     * one (id, seed_id, sim) partial per row group — the corpus vectors
-    * themselves never shuffle. See [[semanticDedup]] for the
-    * `nIters = 0` (oracle-parity, md5-drawn raw-vector seeds) vs
-    * `nIters > 0` (Lloyd-refined, [[Similarity.ivfCentroids]]) split. */
+    * themselves never shuffle. This is [[Similarity.ivfIngest]] with
+    * the corpus as its own standing set and batch; see [[semanticDedup]]
+    * for the `nIters = 0` (oracle-parity, md5-drawn raw-vector seeds)
+    * vs `nIters > 0` (Lloyd-refined, [[Similarity.ivfCentroids]])
+    * split. */
   def semanticClusters(df: DataFrame, nClusters: Int = 8, nIters: Int = 0,
-      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
-    if (nIters == 0) {
-      val seeds = df
-        .select(col(idCol).cast("long").as("seed_id"),
-          col(vecCol).cast("array<double>").as("cvec"))
-        .orderBy(md5(col("seed_id").cast("string")), col("seed_id"))
-        .limit(nClusters)
-      df.select(col(idCol), col(vecCol).cast("array<double>").as("_v"))
-        .crossJoin(broadcast(seeds))
-        .select(col(idCol), col("seed_id"),
-          graft.functions.VectorFunctions.cosineHof(col("_v"), col("cvec")).as("sim"))
-        .groupBy(col(idCol))
-        // max over (sim, -seed_id): highest similarity, then lowest id
-        .agg(max_by(col("seed_id"), struct(col("sim"), -col("seed_id"))).as("list_id"))
-    } else {
-      val cent = Similarity.ivfCentroids(df, nClusters, nIters, vecCol, idCol)
-      Similarity.ivfAssign(df, cent, vecCol, idCol)
-        .select(col(idCol), col("list_id"))
-    }
-  }
+      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame =
+    Similarity.ivfIngest(df, df, nClusters, nIters, vecCol, idCol)
 
   /** t24 — per-document novelty: the fraction of a document's distinct
     * shingles that appear in NO other document. The corpus-level

@@ -248,7 +248,8 @@ object Similarity {
     * re-clustering the full corpus would be a 100 TB job but the batch
     * is metadata-scale by comparison.
     *
-    * Like [[graft.ext.Dedup.semanticClusters]], two centroid regimes:
+    * Two centroid regimes ([[graft.ext.Dedup.semanticClusters]] is
+    * this verb with the corpus as its own standing set and batch):
     *  - `nIters = 0` (oracle parity): centroids are the `nList`
     *    standing vectors with the lowest md5(id) — the deterministic
     *    draw DuckDB reproduces — scored with the double HOF cosine and
@@ -354,10 +355,11 @@ object Similarity {
         .filter(col("query_id") =!= col(idCol))
     }.reduce(_.unionByName(_))
 
-  /** The probe-and-rank stage of every IVF serve — the in-memory index
-    * (v3) and the persisted index ([[ivfTopKFromIndex]]) under each
-    * storage: score queries against the broadcast centroids, keep each
-    * query's nProbe best lists (k-bounded aggregator), score only the
+  /** The probe-and-rank stage of every IVF serve — the in-memory
+    * indexes (v3's fp [[ivfTopK]], v14's pq [[ivfPqTopK]]) and the
+    * persisted index ([[ivfTopKFromIndex]]) under each storage: score
+    * queries against the broadcast centroids, keep each query's nProbe
+    * best lists (k-bounded aggregator), score only the
     * probed lists' rows the storage's way ([[IvfStorage.scoring]]),
     * then rank — exactly for `fp`, through [[overFetchExactRerank]]
     * against the `fp` frame for the quantized storages (`cb` is a pq
@@ -469,10 +471,10 @@ object Similarity {
   private val PqIters = 5
 
   /** (id, list_id, vec, residual, true norm) under the index's pinned
-    * quantizer — the encode input of the pq storage (FAISS residual
-    * discipline: residuals concentrate near the origin, so the 8-bit
-    * budget spends on a tighter distribution than raw vectors; the
-    * same math as [[ivfPqTopK]]). */
+    * quantizer — the codebook-training and encode input of the pq
+    * storage, in memory ([[ivfPqTopK]]) and persisted alike (FAISS
+    * residual discipline: residuals concentrate near the origin, so the
+    * 8-bit budget spends on a tighter distribution than raw vectors). */
   private def residualized(assigned: DataFrame, cent: DataFrame,
       vecCol: String, idCol: String): DataFrame =
     assigned
@@ -530,9 +532,9 @@ object Similarity {
     *  - `buildParams` / `auxSchemas`: its extra manifest parameters,
     *    and the schemas of its frames that are not list-partitioned;
     *  - `train` / `stored`: its codebook — trained on the rows of
-    *    (path, params' shape, rows, centroids, gen, vecCol, idCol) and
-    *    staged in generation `gen` at build and retrain time, read
-    *    back from the index at append and serve time. */
+    *    (path, params' shape, rows, centroids, vecCol, idCol) without
+    *    writing anything (`path` only names the index in a missing-shape
+    *    error), read back from the index at append and serve time. */
   private final case class IvfStorage(name: String, schemaVersion: Int,
       frames: Seq[String],
       encode: (DataFrame, DataFrame, Option[PqCodebook], String, String)
@@ -540,8 +542,8 @@ object Similarity {
       scoring: (DataFrame, Option[PqCodebook], String) => IvfScoring,
       buildParams: Map[String, String] = Map.empty,
       auxSchemas: Map[String, StructType] = Map.empty,
-      train: (String, Map[String, String], DataFrame, DataFrame, Int, String,
-        String) => Option[PqCodebook] = (_, _, _, _, _, _, _) => None,
+      train: (String, Map[String, String], DataFrame, DataFrame, String,
+        String) => Option[PqCodebook] = (_, _, _, _, _, _) => None,
       stored: (SparkSession, String, Map[String, String])
         => Option[PqCodebook] = (_, _, _) => None) {
     val quantized: Boolean = frames.contains("fp")
@@ -586,9 +588,9 @@ object Similarity {
       * TRUE stored norm — precision exact after the re-rank, recall
       * governed by overFetch (the v22 oracle pins rank-identity to the
       * fp serve on this corpus at the registered overFetch; v22b floors
-      * recall at defaults). The probe-side math mirrors [[ivfPqTopK]]
-      * (v14), the in-memory twin. The codebook is stored as its own
-      * kept-through-flips frame, and its shape as the
+      * recall at defaults). The in-memory [[ivfPqTopK]] (v14) runs this
+      * same codec through the same probe-and-rank stage. The codebook is
+      * stored as its own kept-through-flips frame, and its shape as the
       * `numSub`/`numCents` parameters, read LOUDLY (absent → error): a
       * truncated manifest must not silently re-encode at the
       * compile-time defaults, and every append encodes with the STORED
@@ -620,18 +622,13 @@ object Similarity {
         "numCents" -> PqNumCents.toString),
       auxSchemas = Map("codebook" ->
         StructType(Seq(StructField("cb", ArrayType(DoubleType))))),
-      train = (path, params, rows, cent, gen, vecCol, idCol) => {
+      train = (path, params, rows, cent, vecCol, idCol) => {
         val numSub = IndexLayout.intParam(params, path, "numSub")
         val numCents = IndexLayout.intParam(params, path, "numCents")
-        val cb = pqTrain(
+        Some(PqCodebook(pqTrain(
           residualized(rows, cent, vecCol, idCol).select(col(idCol), col("_res")),
           PqTrainSample, numSub, numCents, PqIters,
-          vecCol = "_res", idCol = idCol)
-        val spark = rows.sparkSession
-        import spark.implicits._
-        Seq(cb.toSeq).toDF("cb").write.mode("overwrite")
-          .parquet(IndexLayout.genRoot(path, "codebook", gen))
-        Some(PqCodebook(cb, numSub, numCents))
+          vecCol = "_res", idCol = idCol), numSub, numCents))
       },
       stored = (spark, path, m) => Some(PqCodebook(
         IndexLayout.readFrame(spark, path, m, "codebook")
@@ -734,9 +731,10 @@ object Similarity {
     * committed by a flip) share: write the quantizer `cent`, assign
     * `rows` under it, and write every data frame of `st`. A quantized
     * storage writes `fp` first and derives its probe frame (and the pq
-    * codebook, trained on the residuals under `params`' shape) from a
-    * READ-BACK of the written rows, so quantization sees exactly what
-    * the re-rank will read, without a second corpus-scale assignment.
+    * codebook, trained on the residuals under `params`' shape and
+    * written here as the `codebook` frame) from a READ-BACK of the
+    * written rows, so quantization sees exactly what the re-rank will
+    * read, without a second corpus-scale assignment.
     * `layout` shapes each list-partitioned write. Every write
     * overwrites, so a staging replay is idempotent.
     *
@@ -756,9 +754,13 @@ object Similarity {
       else {
         writeLists("fp", assigned)
         val fpBack = spark.read.parquet(IndexLayout.genRoot(path, "fp", gen))
-        st.encode(fpBack, cent,
-          st.train(path, params, fpBack, cent, gen, vecCol, idCol),
-          vecCol, idCol)
+        val cb = st.train(path, params, fpBack, cent, vecCol, idCol)
+        cb.foreach { c =>
+          import spark.implicits._
+          Seq(c.cb.toSeq).toDF("cb").write.mode("overwrite")
+            .parquet(IndexLayout.genRoot(path, "codebook", gen))
+        }
+        st.encode(fpBack, cent, cb, vecCol, idCol)
       }
     writeLists("lists", probeRows)
     Map("centroids" -> cent.schema, "lists" -> probeRows.schema,
@@ -1396,6 +1398,18 @@ object Similarity {
     val approx = dqz.join(q, col("query_id") =!= col(idCol))
       .select(col("query_id"), col(idCol).as("neighbor_id"),
         VectorFunctions.cosine(col("qv"), col("dqv")).as("cos"))
+    bruteForceExactRerank(corpus, q, approx, k, overFetch, vecCol, idCol)
+  }
+
+  /** The exact re-rank tail of the brute-force quantized scans
+    * ([[quantizedTopK]], [[pqTopK]]): keep the approximate top
+    * k·overFetch per query, re-score ONLY those candidates against the
+    * full-precision corpus (≤ |queries|·k·overFetch rows — AQE
+    * broadcasts the candidate set) and cut to the exact top k. `q` is
+    * the broadcast (query_id, qv) side. */
+  private def bruteForceExactRerank(corpus: DataFrame, q: DataFrame,
+      approx: DataFrame, k: Int, overFetch: Int, vecCol: String,
+      idCol: String): DataFrame = {
     val cand = topKPerQuery(approx, k * overFetch)
       .select("query_id", "neighbor_id")
     val exact = cand
@@ -1492,23 +1506,26 @@ object Similarity {
     * random vectors are PQ's worst case — real corpora cluster and
     * recall rises). Codebooks: [[pqTrain]] (driver, bounded sample);
     * they ride the plan as a small foldable literal, the queries ride
-    * a broadcast — the corpus never shuffles. */
+    * a broadcast — the corpus never shuffles. The codec shape is the
+    * pq storage's (`PqNumSub` × `PqNumCents`, trained on
+    * `PqTrainSample` vectors for `PqIters` Lloyd iterations). */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int = 5,
-      numSub: Int = 8, numCents: Int = 256, overFetch: Int = 8,
-      trainSample: Int = 2048, iters: Int = 5,
-      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
+      overFetch: Int = 8, vecCol: String = "embedding",
+      idCol: String = "vec_id"): DataFrame = {
     VectorFunctions.register(corpus.sparkSession)
     graft.functions.PqExpressions.register(corpus.sparkSession)
-    val cbLit = typedLit(
-      pqTrain(corpus, trainSample, numSub, numCents, iters, vecCol, idCol).toSeq)
+    val cbLit = typedLit(pqTrain(corpus, PqTrainSample, PqNumSub,
+      PqNumCents, PqIters, vecCol, idCol).toSeq)
     val enc = corpus.select(col(idCol).as("neighbor_id"),
         graft.functions.PqExpressions.pqEncode(
-          col(vecCol).cast("array<float>"), cbLit, numSub, numCents).as("_e"))
+          col(vecCol).cast("array<float>"), cbLit, PqNumSub, PqNumCents)
+          .as("_e"))
       .select(col("neighbor_id"), col("_e.code").as("code"),
         col("_e.norm").as("norm"))
     val ql = queries.select(col(idCol).as("query_id"),
         graft.functions.PqExpressions.pqLut(
-          col(vecCol).cast("array<float>"), cbLit, numSub, numCents).as("_l"))
+          col(vecCol).cast("array<float>"), cbLit, PqNumSub, PqNumCents)
+          .as("_l"))
       .select(col("query_id"), col("_l.lut").as("lut"),
         col("_l.qnorm").as("qnorm"))
     val approx = enc.crossJoin(broadcast(ql))
@@ -1516,19 +1533,11 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"),
         when(col("qnorm") === 0.0 || col("norm") === 0.0, lit(0.0))
           .otherwise(graft.functions.PqExpressions.adcDot(
-            col("code"), col("lut"), numSub, numCents) /
+            col("code"), col("lut"), PqNumSub, PqNumCents) /
             (col("qnorm") * col("norm"))).as("cos"))
-    val cand = topKPerQuery(approx, k * overFetch)
-      .select("query_id", "neighbor_id")
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("qv")))
-    val exact = cand
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")),
-        "neighbor_id")
-      .join(q, "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        VectorFunctions.cosine(col("qv"), col("cv")).as("cos"))
-    topKPerQuery(exact, k)
+    bruteForceExactRerank(corpus, broadcast(queries.select(
+        col(idCol).as("query_id"), col(vecCol).as("qv"))),
+      approx, k, overFetch, vecCol, idCol)
   }
 
   /** v14 — IVF-PQ ANN: the two approximations composed the way FAISS's
@@ -1554,81 +1563,28 @@ object Similarity {
     * re-rank exactly against full-precision vectors (v8b-style recall
     * floor certified by v14b).
     *
-    * Plan shape: assignment + residual encode are map-side over the
-    * corpus ([[ivfAssign]] kernel + codegen'd [[graft.functions
-    * .PqExpressions]]); the candidate stage is one broadcast-hash join
-    * on list_id against the (query, probed-list) side; the corpus
-    * never shuffles. The encoded index (list_id, id, code, norm) is
-    * the persistable artifact — write it partitioned by list_id
-    * ([[saveIvfIndex]] layout) and the probe scan partition-prunes. */
+    * This is the pq storage ([[IvfStorage]] `Pq`: its codebook
+    * training, encode and scoring) run in memory through the probe-and-
+    * rank stage every IVF serve shares, so it answers exactly as
+    * [[ivfTopKFromIndex]] over `saveIvfIndex(corpus, …, storage = "pq")`
+    * at the same settings (spec-pinned), including the bounded inline
+    * exact re-rank ([[overFetchExactRerank]]). Plan shape: assignment +
+    * residual encode are map-side over the corpus ([[ivfAssign]] kernel
+    * + codegen'd [[graft.functions.PqExpressions]]); the candidate stage
+    * is one broadcast-hash join on list_id against the (query,
+    * probed-list) side; the corpus never shuffles. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int = 5,
-      nList: Int = 8, nProbe: Int = 4, nIters: Int = 1,
-      numSub: Int = 8, numCents: Int = 256, overFetch: Int = 8,
-      trainSample: Int = 2048, pqIters: Int = 5,
+      nList: Int = 8, nProbe: Int = 4, nIters: Int = 1, overFetch: Int = 8,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val spark = corpus.sparkSession
-    VectorFunctions.register(spark)
-    graft.functions.PqExpressions.register(spark)
+    val st = IvfStorage.Pq
     val cent = ivfCentroids(corpus, nList, nIters, vecCol, idCol)
-    val centB = broadcast(cent.select(col("list_id"), col("cvec")))
-    // residual per corpus vector: one zip_with against the broadcast
-    // centroid of its list; true |v| via a HOF norm (one corpus pass,
-    // fused into the same projection as the encode)
-    val resid = ivfAssign(corpus, cent, vecCol, idCol)
-      .join(centB, Seq("list_id"))
-      .select(col(idCol), col("list_id"),
-        col(vecCol),
-        expr(s"zip_with(cast($vecCol as array<double>), cvec, (x, y) -> x - y)")
-          .cast("array<float>").as("_res"),
-        sqrt(expr(s"aggregate($vecCol, 0D, (a, x) -> a + cast(x as double) * x)"))
-          .as("vnorm"))
-    val cbLit = typedLit(pqTrain(
-      resid.select(col(idCol), col("_res")), trainSample, numSub, numCents,
-      pqIters, vecCol = "_res", idCol = idCol).toSeq)
-    val enc = resid.select(col(idCol).as("neighbor_id"), col("list_id"),
-        col("vnorm"),
-        graft.functions.PqExpressions.pqEncode(
-          col("_res"), cbLit, numSub, numCents).as("_e"))
-      .select(col("neighbor_id"), col("list_id"), col("vnorm"),
-        col("_e.code").as("code"))
-    // query side: rank centroids (float kernel), keep nProbe lists,
-    // carry the EXACT q·c_L per probed list plus the residual LUT
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val centF = cent.select(col("list_id"),
-      col("cvec").cast("array<float>").as("cvecf"), col("cvec"))
-    val topLists = udaf(new graft.functions.TopKAggregator(nProbe))
-    val probes = q.crossJoin(broadcast(centF))
-      .select(col("query_id"), col("list_id"),
-        VectorFunctions.cosine(col("qv"), col("cvecf")).as("cos"))
-      .groupBy("query_id")
-      .agg(topLists(col("cos"), col("list_id")).as("lists"))
-      .select(col("query_id"), explode(col("lists")).as("list_id"))
-      .join(q, "query_id")
-      .join(centF.select(col("list_id"), col("cvec")), Seq("list_id"))
-      .select(col("query_id"), col("list_id"), col("qv"),
-        expr("aggregate(zip_with(cast(qv as array<double>), cvec, " +
-          "(x, y) -> x * y), 0D, (a, x) -> a + x)").as("qdotc"),
-        graft.functions.PqExpressions.pqLut(
-          col("qv"), cbLit, numSub, numCents).as("_l"))
-      .select(col("query_id"), col("list_id"), col("qv"), col("qdotc"),
-        col("_l.lut").as("lut"), col("_l.qnorm").as("qnorm"))
-    val approx = enc.join(broadcast(probes), Seq("list_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        when(col("qnorm") === 0.0 || col("vnorm") === 0.0, lit(0.0))
-          .otherwise((col("qdotc") + graft.functions.PqExpressions.adcDot(
-            col("code"), col("lut"), numSub, numCents)) /
-            (col("qnorm") * col("vnorm"))).as("cos"))
-    val cand = topKPerQuery(approx, k * overFetch)
-      .select("query_id", "neighbor_id")
-    val qB = broadcast(q)
-    val exact = cand
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")),
-        "neighbor_id")
-      .join(qB, "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        VectorFunctions.cosine(col("qv"), col("cv")).as("cos"))
-    topKPerQuery(exact, k)
+    val assigned = ivfAssign(corpus, cent, vecCol, idCol)
+    val cb = st.train("ivfPqTopK", st.buildParams, assigned, cent, vecCol,
+      idCol)
+    val encoded = st.encode(assigned, cent, cb, vecCol, idCol)
+    ivfProbeAndRank(st, cb, cent,
+      Map("lists" -> Seq(encoded), "fp" -> Seq(assigned)),
+      queries, k, nProbe, overFetch, vecCol, idCol, tombstones = None)
   }
 
   /** Exact corpus kNN graph: top-k cosine neighbors for EVERY corpus

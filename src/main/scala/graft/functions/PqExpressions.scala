@@ -8,7 +8,9 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 
-/** Product-quantization kernels for [[graft.ext.Similarity.pqTopK]].
+/** Product-quantization kernels for [[graft.ext.Similarity.pqTopK]]
+  * and the pq IVF storage, whose one codec serves the in-memory
+  * [[graft.ext.Similarity.ivfPqTopK]] and every persisted pq index.
   *
   * The codebook rides the expressions as a FOLDABLE flattened
   * `array<double>` literal laid out `[sub][centroid][dim]` — at the

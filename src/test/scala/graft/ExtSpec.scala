@@ -2321,6 +2321,16 @@ class ExtSpec extends SparkSpec {
     val plan = fromIdx.queryExecution.executedPlan.toString
     assert(plan.toLowerCase.contains("dynamicpruning"),
       s"lists scan must carry a dynamic pruning filter:\n$plan")
+    // the pq storage: the in-memory IVF-PQ serve runs the same codec
+    // (codebook trained on the same residual sample) and the same
+    // probe-and-rank stage as the persisted pq index
+    val pqPath = java.nio.file.Files.createTempDirectory("graft-ivf-pq")
+      .toString + "/idx"
+    Similarity.saveIvfIndex(emb, pqPath, nList = 8, nIters = 1,
+      storage = "pq")
+    val pqMem = key(Similarity.ivfPqTopK(emb, queries, k = 5))
+    assert(key(Similarity.ivfTopKFromIndex(spark, pqPath, queries,
+      k = 5, nProbe = 4, overFetch = 8)) == pqMem && pqMem.nonEmpty)
   }
 
   test("v18: appendToIvfIndex equals a same-centroid rebuild; appended layout still DPPs") {
