@@ -557,10 +557,11 @@ object ScaleBench {
       // SAME fixed-probe serve at 0 / 1 / 8 / 32 committed append
       // batches, fold (the autopilot's verb), and time it once more —
       // the curve shows what each committed batch root adds to a serve
-      // (one more union-ed scan + its job overhead) and that the fold
-      // returns the serve to its baseline. The appended batches are
-      // tiny (250 docs each; ≤ 8K docs total against the tier corpus)
-      // so the growth measured is PLAN fan-out, not data volume.
+      // (one more root of small files to list and open) and that the
+      // fold returns the serve to its baseline. The appended batches
+      // are tiny (250 docs each; ≤ 8K docs total against the tier
+      // corpus) so the growth measured is fragmentation, not data
+      // volume.
       val foldCurve: (Double, Double, Double, Double, Double, Double) = {
         val tmp = java.nio.file.Files
           .createTempDirectory(s"graft_scale_fold_$label")

@@ -7,8 +7,9 @@ package graft
   * only the tables the query reads are filled — by the one untimed
   * warmup — so the timed reps run hot without paying to load tables
   * the row never touches. Prints per-rep seconds, plus the time
-  * outside them: `start_s` from JVM start until the session is up and
-  * the tables are marked, and `warmup_s` for the untimed warmup. */
+  * outside them: `session_s` from JVM start until the session is up,
+  * `start_s` from JVM start until the tables are marked too, and
+  * `warmup_s` for the untimed warmup. */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -16,6 +17,7 @@ object TimeQuery {
     val reps = if (args.length > 2) args(2).toInt else 5
     val cores = GraftSession.defaultCores
     val spark = GraftSession.local(cores, "graft-timequery")
+    val sessionS = sinceJvmStart()
     import org.apache.spark.storage.StorageLevel
     graft.sources.Tables.all.foreach { t =>
       // an input directory may lack a table: it stays uncached
@@ -29,13 +31,16 @@ object TimeQuery {
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
-    val startS = (System.currentTimeMillis() -
-      java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3
+    val startS = sinceJvmStart()
     val warmupS = once()
     val times = Seq.fill(reps)(once())
     println(f"""{"query":"$name","sf":"$sfDir","cores":$cores,""" +
-      f""""start_s":$startS%.3f,"warmup_s":$warmupS%.3f,""" +
+      f""""session_s":$sessionS%.3f,"start_s":$startS%.3f,""" +
+      f""""warmup_s":$warmupS%.3f,""" +
       s""""reps":[${times.map(t => f"$t%.3f").mkString(",")}]}""")
     spark.stop()
   }
+
+  private def sinceJvmStart(): Double = (System.currentTimeMillis() -
+    java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3
 }

@@ -836,12 +836,12 @@ object Dedup {
   /** FOLD the composition of a [[saveMinhashIndex]] index even when no
     * tombstone exists — the maintenance verb for the APPEND-ONLY
     * lifecycle: every committed append splices one batch-root entry
-    * per frame into the composition, and the serve plan unions one
-    * scan per entry until a compaction folds them back (the Delta-log
-    * checkpoint discipline). An index that only ever appends (zero
-    * dead rows, stable sizing) never fires the tombstone compaction,
-    * so its serve fan-out would grow one scan per committed batch
-    * forever; this verb is the same pruned compaction with an empty
+    * per frame into the composition, and every serve lists and opens
+    * that entry's small files until a compaction folds them back (the
+    * Delta-log checkpoint discipline). An index that only ever appends
+    * (zero dead rows, stable sizing) never fires the tombstone
+    * compaction, so its serves would read one more root per committed
+    * batch forever; this verb is the same pruned compaction with an empty
     * tombstone set — batch roots consolidate into the next generation,
     * entries return to ≤ partitions + 1 per frame — fired by
     * [[maintainMinhashIndex]]'s composition-length trigger. */
@@ -985,10 +985,10 @@ object Dedup {
     *    lookup, no read at all): fires [[foldMinhashComposition]].
     *    This is the trigger the APPEND-ONLY lifecycle needs — an index
     *    with few deletes and stable sizing never fires the other two,
-    *    yet every committed append adds one union-ed scan to every
-    *    serve until a compaction folds the batch roots (the Delta-log
-    *    trade needs its checkpoint trigger); without this leg serve
-    *    plans grow linear-in-batches forever. Both heavier verbs
+    *    yet every committed append adds one root of small files to
+    *    every serve until a compaction folds the batch roots (the
+    *    Delta-log trade needs its checkpoint trigger); without this leg
+    *    serve listings grow linear-in-batches forever. Both heavier verbs
     *    SUBSUME it (their compactions fold the batch roots at the same
     *    flip), which is why it is checked last.
     *
@@ -1077,8 +1077,8 @@ object Dedup {
     * under an unconditional hint. 2M ids ≈ tens of MB broadcast. */
   val MaxBroadcastCandidateIds = 2000000L
 
-  /** Load a [[saveMinhashIndex]] index's three frames — each the
-    * manifest-composed union of its generation directories
+  /** Load a [[saveMinhashIndex]] index's three frames — each one
+    * relation over the directories its manifest entry lists
     * ([[graft.ext.IndexLayout.readFrame]]), so a load taken before a
     * concurrent compaction's flip keeps serving the pre-compaction
     * index consistently. A serve over these frames must use the SAME

@@ -51,14 +51,16 @@ private[graft] object IndexFs {
   def hasParquetData(spark: SparkSession, path: String): Boolean = {
     val f = fs(spark, path)
     def walk(p: Path): Boolean = {
-      val entries = f.listStatus(p).filterNot { st =>
-        val n = st.getPath.getName
-        n.startsWith("_") || n.startsWith(".")
-      }
+      val entries = f.listStatus(p).filterNot(st => hidden(st.getPath.getName))
       entries.exists(st => st.isFile && st.getPath.getName.endsWith(".parquet")) ||
         entries.exists(st => st.isDirectory && walk(st.getPath))
     }
     val p = new Path(path)
     f.exists(p) && walk(p)
   }
+
+  /** The names [[hasParquetData]] and every index read skip: commit
+    * markers, checksums and in-flight `_temporary` output. */
+  def hidden(name: String): Boolean =
+    name.startsWith("_") || name.startsWith(".")
 }

@@ -1,9 +1,15 @@
 package graft.ext
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.{FileContext, FileStatus, Options, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+  HadoopFsRelation, InMemoryFileIndex, PartitionPath, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{broadcast, col, lit}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The MANIFEST + GENERATION layout shared by both persisted-index
   * families (MinHash `ext/Dedup.scala`, IVF `ext/Similarity.scala`).
@@ -52,10 +58,11 @@ import org.apache.spark.sql.types.StructType
   * sealed entry per generation a partition received appends in;
   * [[stageCompactFrame]]'s fold consolidates them) — so no matter how
   * many append/delete/compact cycles a long-lived index runs, the
-  * composition stays ≤ partitions + 1 entries and the read path
-  * unions at most min(generations, partitions) + 1 scans — there is
-  * no unbounded manifest or plan growth to schedule around (a full
-  * rebuild via the save verb resets everything to one generation).
+  * composition stays ≤ partitions + 1 entries, which bounds the
+  * directories a read lists — there is no unbounded manifest growth to
+  * schedule around (a full rebuild via the save verb resets everything
+  * to one generation), and a read is one scan whatever the composition
+  * holds ([[readFrame]]).
   * Spec-pinned across repeated cycles, with and without interleaved
   * appends.
   *
@@ -790,47 +797,132 @@ private[graft] object IndexLayout {
   def genRoot(path: String, name: String, gen: Int): String =
     s"$path/$name/g$gen"
 
-  /** Read one frame of the composition as (0..n) per-GENERATION-GROUP
-    * scans, each normalized to the manifest schema (column order and
-    * the partition column's original type — directory inference types
-    * partition values itself, e.g. int where the written column was
-    * long). Callers that need join-per-scan plan shapes (dynamic
-    * partition pruning does not reach scans through a Union) take the
-    * groups; [[readFrame]] unions them. Directories with no committed
-    * parquet footers are skipped — including the open root of a frame
-    * nothing was written to yet. */
-  def readFrameGroups(spark: SparkSession, path: String,
-      m: Map[String, String], name: String): Seq[DataFrame] = {
-    val schema = frameSchema(m, name)
-    val normalize = (df: DataFrame) =>
-      df.select(schema.fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*)
-    frameEntries(m, name)
-      .groupBy(_.split("/").take(2).mkString("/")).toSeq.sortBy(_._1)
-      .flatMap { case (root, es) =>
-        val rootAbs = s"$path/$root"
-        if (es.contains(root)) {
-          if (IndexFs.hasParquetData(spark, rootAbs))
-            Some(spark.read.parquet(rootAbs))
-          else None
-        } else {
-          val present = es.filter(e => IndexFs.hasParquetData(spark, s"$path/$e"))
-          if (present.isEmpty) None
-          else Some(spark.read.option("basePath", rootAbs)
-            .parquet(present.map(e => s"$path/$e"): _*))
-        }
-      }
-      .map(normalize)
+  /** One leaf directory of a frame's committed data: the `col=value`
+    * segments of its path from the frame name down, values still
+    * escaped (a compaction partition entry `name/gN/bucket=K`
+    * contributes its own `bucket=K`), and the parquet files it holds
+    * directly. */
+  private final case class FrameLeaf(rawValues: Map[String, String],
+      files: Seq[FileStatus]) {
+    def dir: Path = files.head.getPath.getParent
   }
 
-  /** One frame as a single DataFrame — the union of its groups, or an
-    * EMPTY frame with the manifest schema when no directory holds
-    * committed data (the manifest-state form of emptiness: no anchor
-    * files, no path-shape lore). */
+  private def segmentValue(segment: String): Map[String, String] = {
+    val i = segment.indexOf('=')
+    if (i <= 0) Map.empty
+    else Map(ExternalCatalogUtils.unescapePathName(segment.take(i)) ->
+      segment.drop(i + 1))
+  }
+
+  /** Every committed entry of frame `name`, listed once on the driver:
+    * (entry directory, its leaves) for each entry holding parquet data.
+    * Hidden names are skipped exactly as [[IndexFs.hasParquetData]]
+    * skips them, so an entry nothing was written to (the open root of a
+    * frame no append reached yet) simply lists no leaves. */
+  private def listFrame(spark: SparkSession, path: String,
+      m: Map[String, String], name: String): Seq[(Path, Seq[FrameLeaf])] = {
+    val f = IndexFs.fs(spark, path)
+    def walk(dir: Path, values: Map[String, String]): Seq[FrameLeaf] = {
+      val (dirs, files) = f.listStatus(dir)
+        .filterNot(st => IndexFs.hidden(st.getPath.getName))
+        .partition(_.isDirectory)
+      val parquet = files.filter(_.getPath.getName.endsWith(".parquet")).toSeq
+      (if (parquet.isEmpty) Seq.empty else Seq(FrameLeaf(values, parquet))) ++
+        dirs.toSeq.flatMap(d =>
+          walk(d.getPath, values ++ segmentValue(d.getPath.getName)))
+    }
+    frameEntries(m, name).flatMap { e =>
+      val dir = f.makeQualified(new Path(s"$path/$e"))
+      val leaves =
+        if (f.exists(dir)) walk(dir, e.split("/").map(segmentValue).reduce(_ ++ _))
+        else Nil
+      if (leaves.isEmpty) None else Some(dir -> leaves)
+    }
+  }
+
+  /** A `col=value` directory value typed by the manifest: unescaped
+    * the way Spark's writer escaped it, Hive's default-partition name
+    * read as null. The result is Catalyst's internal form. */
+  private def partitionValue(spark: SparkSession, raw: String,
+      dt: DataType): Any =
+    if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+    else Cast(Literal(ExternalCatalogUtils.unescapePathName(raw)), dt,
+      Some(spark.sessionState.conf.sessionLocalTimeZone)).eval()
+
+  /** Hands [[readFrame]]'s listing to Spark's file index, so the index
+    * lists nothing itself: no second listing of the entries, and no
+    * listing job however many root paths a composition holds. */
+  private final class ListedFiles(byRoot: Map[Path, Array[FileStatus]])
+      extends FileStatusCache {
+    override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
+      byRoot.get(p)
+    def putLeafFiles(p: Path, files: Array[FileStatus]): Unit = ()
+    def invalidateAll(): Unit = ()
+  }
+
+  /** One frame of the composition as ONE parquet relation over every
+    * committed entry, typed by the manifest schema — or an EMPTY frame
+    * with that schema when no entry holds committed data (the
+    * manifest-state form of emptiness: no anchor files, no path-shape
+    * lore).
+    *
+    * Each leaf directory's partition values are parsed from its path
+    * ([[FrameLeaf.rawValues]], [[partitionValue]]) and handed to Spark
+    * as a user-specified `PartitionSpec`, the mechanism Spark's own
+    * catalog uses for partitions at arbitrary locations. So a read runs
+    * no Spark job — no footer is opened to infer a schema, and the file
+    * index lists nothing itself — and builds no union: however many
+    * generation and batch roots the composition spans, the plan holds
+    * one scan, and a literal partition filter or the dynamic partition
+    * pruning of a probe join planted above it prunes that scan. The
+    * root paths are the entry directories: the listing hands Spark every
+    * file under them, whatever their count. A frame with no partition
+    * column found in its paths (the tombstones; legacy `batch_id=N`
+    * directories inside old open roots) reads every file under its
+    * entries. */
   def readFrame(spark: SparkSession, path: String,
       m: Map[String, String], name: String): DataFrame =
-    readFrameGroups(spark, path, m, name).reduceOption(_.union(_))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], frameSchema(m, name)))
+    readFrameData(spark, path, m, name).getOrElse(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        frameSchema(m, name)))
+
+  /** [[readFrame]], or None when no entry holds committed data. */
+  private def readFrameData(spark: SparkSession, path: String,
+      m: Map[String, String], name: String): Option[DataFrame] =
+    frameRelation(spark, m, name, listFrame(spark, path, m, name))
+
+  /** The one relation of [[readFrame]] over an already-taken
+    * [[listFrame]] listing; None when it lists no leaves. */
+  private def frameRelation(spark: SparkSession, m: Map[String, String],
+      name: String, listed: Seq[(Path, Seq[FrameLeaf])]): Option[DataFrame] =
+    if (listed.isEmpty) None
+    else {
+      val schema = frameSchema(m, name)
+      val leaves = listed.flatMap(_._2)
+      val partSchema = StructType(schema.filter(c =>
+        leaves.exists(_.rawValues.contains(c.name))))
+      val spec = PartitionSpec(partSchema, leaves.map { l =>
+        PartitionPath(InternalRow.fromSeq(partSchema.map { c =>
+          partitionValue(spark, l.rawValues.getOrElse(c.name,
+            throw new IllegalStateException(
+              s"${l.dir} holds '$name' data but no '${c.name}=' directory")),
+            c.dataType)
+        }), l.dir)
+      })
+      val index = new InMemoryFileIndex(spark, listed.map(_._1),
+        if (partSchema.isEmpty) Map("recursiveFileLookup" -> "true")
+        else Map.empty,
+        Some(schema),
+        new ListedFiles(listed.map { case (root, ls) =>
+          root -> ls.flatMap(_.files).toArray }.toMap),
+        Some(spec), None)
+      val df = spark.baseRelationToDataFrame(HadoopFsRelation(index,
+        partSchema, StructType(schema.filterNot(partSchema.contains)),
+        None, new ParquetFileFormat, Map.empty)(spark))
+      // the relation puts partition columns last; keep the manifest order
+      Some(if (df.columns.toSeq == schema.fieldNames.toSeq) df
+        else df.select(schema.fieldNames.toSeq.map(col): _*))
+    }
 
   /** A batch root's directory name under its frame: `a<seq>` for the
     * batch append verbs, `b<seq>_<batchId>` for streaming micro-batch
@@ -844,9 +936,10 @@ private[graft] object IndexLayout {
   private[graft] val BatchRootRe = "[ab]\\d+(_\\d+)?".r
 
   /** Committed batch-root entries (`aN`/`bN_M`) still in frame
-    * `name`'s composition — the serve fan-out appends accumulate: each
-    * committed batch adds one union-ed scan to every serve of this
-    * frame until a compaction folds them back into a generation root.
+    * `name`'s composition — the fragmentation appends accumulate: each
+    * committed batch adds one more root (and its small files) to every
+    * read of this frame until a compaction folds them back into a
+    * generation root.
     * Metadata-only (one manifest map lookup), which is what lets an
     * autopilot poll it nightly for free — the composition-length
     * trigger both family autopilots fire a fold on. */
@@ -854,7 +947,7 @@ private[graft] object IndexLayout {
     // count DISTINCT batch roots by their aN/bN_M segment regardless of
     // entry depth: a 3-segment partition entry under a batch root
     // (retained by stageCompactFrame's formatter-mismatch RETAIN
-    // fallback) still adds serve fan-out, so it must keep pressuring
+    // fallback) still adds a root to every read, so it must keep pressuring
     // the composition-length fold trigger — a depth==2 filter would
     // let it escape the count permanently
     frameEntries(m, name).flatMap { e =>
@@ -989,14 +1082,14 @@ private[graft] object IndexLayout {
     * delete/compact cycles: an append between two compactions lands in
     * the then-open generation root, so a partition untouched by any
     * tombstone can end up with one sealed entry per generation it
-    * received appends in — without the fold, manifest entries and
-    * read-path scan fan-out would grow with generations. Folding every
+    * received appends in — without the fold, manifest entries and the
+    * files every read lists would grow with generations. Folding every
     * >1-entry partition into the new root consolidates them to one
     * entry each, restoring ≤ partitions + 1 at every compaction. The
-    * folded partitions' values are recovered from Spark's own
-    * partition-column inference over the duplicated directories
-    * (bounded: ≤ one distinct value per duplicated dir) — never by
-    * parsing directory names back into values.
+    * folded partitions' values come from the same listing and the same
+    * manifest typing [[readFrame]] gives their rows
+    * ([[partitionValue]]), so the fold's filter selects exactly the
+    * rows those directories hold, and no Spark job runs to find them.
     *
     * Formatting safety of the keep-or-retire split: survivors staged
     * under the new root get their directory names from Spark's own
@@ -1028,7 +1121,7 @@ private[graft] object IndexLayout {
     // (aN/bN) even if nothing duplicates it — batch roots are the
     // transient entries appends splice in, and a compaction must
     // always consolidate them or an append-only partition mix would
-    // keep one scan group per committed batch alive forever (the
+    // keep one root per committed batch in every read forever (the
     // composition-length trigger's whole point)
     val dupNames = expanded.groupBy(_.split("/").last)
       .collect { case (n, es) if es.size > 1 => n }.toSet ++
@@ -1036,30 +1129,21 @@ private[graft] object IndexLayout {
         case e if e.split("/").length == 3 &&
             BatchRootRe.matches(e.split("/")(1)) => e.split("/").last
       }
-    val foldVals: Seq[Any] =
-      if (dupNames.isEmpty) Seq.empty
-      else expanded.filter(e => dupNames.contains(e.split("/").last))
-        .groupBy(_.split("/").take(2).mkString("/")).toSeq.sortBy(_._1)
-        .flatMap { case (root, es) =>
-          val present =
-            es.filter(e => IndexFs.hasParquetData(spark, s"$path/$e"))
-          if (present.isEmpty) None
-          else Some(spark.read.option("basePath", s"$path/$root")
-            .parquet(present.map(e => s"$path/$e"): _*)
-            .select(col(partCol)).distinct())
-        }
-        .reduceOption(_.union(_))
-        .map(_.distinct().collect().map(_.get(0)).toSeq)
-        .getOrElse(Seq.empty)
+    val listed = listFrame(spark, path, m, name)
+    val partType = frameSchema(m, name)(partCol).dataType
+    val foldVals: Seq[Any] = listed.flatMap(_._2)
+      .filter(l => dupNames(l.dir.getName))
+      .flatMap(_.rawValues.get(partCol)).distinct
+      .map(raw => CatalystTypeConverters.convertToScala(
+        partitionValue(spark, raw, partType), partType))
     val allAffected = (affected ++ foldVals).distinct
-    val groups = readFrameGroups(spark, path, m, name)
-    if (groups.nonEmpty && allAffected.nonEmpty)
-      groups.reduce(_.union(_))
+    if (allAffected.nonEmpty)
+      frameRelation(spark, m, name, listed).foreach(_
         .filter(col(partCol).isin(allAffected: _*))
         .join(tomb.select(col(idCol)), Seq(idCol), "left_anti")
         .repartition(col(partCol))
         .write.mode("overwrite") // staging replay after a kill is idempotent
-        .partitionBy(partCol).parquet(s"$path/$newRoot")
+        .partitionBy(partCol).parquet(s"$path/$newRoot"))
     val staged = listPartDirNames(spark, s"$path/$newRoot", partCol).toSet
     // fully-dead partitions (nothing staged) are matched by formatting
     // the affected values through Spark's OWN partition-path escaper —
@@ -1087,7 +1171,7 @@ private[graft] object IndexLayout {
       rekey: DataFrame => DataFrame = identity)
       : (Seq[String], Seq[String]) = {
     val newRoot = s"$name/g$newGen"
-    readFrameGroups(spark, path, m, name).reduceOption(_.union(_))
+    readFrameData(spark, path, m, name)
       .foreach(rows => rekey(tomb.fold(rows)(t =>
           rows.join(t.select(col(idCol)), Seq(idCol), "left_anti")))
         .repartition(col(partCol))
@@ -1348,8 +1432,7 @@ private[graft] object IndexLayout {
     * entirely until the first delete exists. */
   def loadTombstones(spark: SparkSession, path: String,
       m: Map[String, String], idCol: String): Option[DataFrame] =
-    readFrameGroups(spark, path, m, "tombstones").reduceOption(_.union(_))
-      .map(_.select(col(idCol)))
+    readFrameData(spark, path, m, "tombstones").map(_.select(col(idCol)))
 
   /** Frame `name` of the composition minus the rows its standing
     * tombstones strike — the live rows a rebuild-style verb or a
@@ -1462,8 +1545,8 @@ private[graft] object IndexLayout {
     * frame's composition holds more than `maxAppendBatches` committed
     * batch roots ([[maxBatchRootCount]] — a manifest lookup, no read).
     * The fold is the append-only lifecycle's trigger: an index with no
-    * deletes never compacts, yet every committed append adds one
-    * union-ed scan to every serve until a compaction folds the batch
+    * deletes never compacts, yet every committed append adds one root
+    * of small files to every serve until a compaction folds the batch
     * roots; it is checked last because a compaction folds them too.
     * @return whether either fired (a fold IS a compaction, with an
     *         empty tombstone set) */
@@ -1551,8 +1634,8 @@ private[graft] object IndexLayout {
     // policy read and over-report the backlog to the operator
     val nTomb =
       if (m.contains("frames.tombstones"))
-        readFrameGroups(spark, path, m, "tombstones")
-          .reduceOption(_.union(_)).map(_.distinct().count()).getOrElse(0L)
+        readFrameData(spark, path, m, "tombstones")
+          .map(_.distinct().count()).getOrElse(0L)
       else 0L
     val held = readLease(IndexFs.fs(spark, path), path, DefaultLeaseTtlMs)
       .exists { case (_, at, ttl) =>

@@ -323,7 +323,7 @@ object Similarity {
     val cent = ivfCentroids(corpus, nList, nIters, vecCol, idCol)
     val assigned = ivfAssign(corpus, cent, vecCol, idCol)
     // overFetch only sizes a quantized storage's re-rank: unused by fp
-    ivfProbeAndRank(IvfStorage.Fp, None, cent, Map("lists" -> Seq(assigned)),
+    ivfProbeAndRank(IvfStorage.Fp, None, cent, Map("lists" -> assigned),
       queries, k, nProbe, overFetch = 1, vecCol, idCol, tombstones = None)
   }
 
@@ -346,14 +346,13 @@ object Similarity {
       .join(q, "query_id") // re-attach the query vector (tiny side)
   }
 
-  /** One broadcast probe join per generation group, unioned — the
-    * plan shape that keeps dynamic partition pruning on every scan. */
-  private def probeJoin(listGroups: Seq[DataFrame], probes: DataFrame,
+  /** The broadcast probe join planted directly above a list-partitioned
+    * frame's one scan — the plan shape dynamic partition pruning needs
+    * to read only the probed lists. */
+  private def probeJoin(lists: DataFrame, probes: DataFrame,
       idCol: String): DataFrame =
-    listGroups.map { lists =>
-      lists.join(broadcast(probes), Seq("list_id"))
-        .filter(col("query_id") =!= col(idCol))
-    }.reduce(_.unionByName(_))
+    lists.join(broadcast(probes), Seq("list_id"))
+      .filter(col("query_id") =!= col(idCol))
 
   /** The probe-and-rank stage of every IVF serve — the in-memory
     * indexes (v3's fp [[ivfTopK]], v14's pq [[ivfPqTopK]]) and the
@@ -365,26 +364,28 @@ object Similarity {
     * against the `fp` frame for the quantized storages (`cb` is a pq
     * storage's codebook).
     *
-    * `groups(name)` is a composed frame as one scan PER generation
-    * group: the broadcast probe join is planted directly above each
-    * scan so dynamic partition pruning fires on every group (it would
-    * not reach scans through a Union). The probe frame is deliberately
-    * RECOMPUTED per group rather than pinned with a checkpoint: it
-    * costs one queries × nList aggregation per branch (metadata-scale
-    * — centroids are broadcast, nList is small), whereas a ckptLocal
-    * here would leave unfreeable 2x-replicated blocks behind every
-    * serve — on a long-running serve stream that pools executor
-    * storage against the hot index (the returned plan is lazy, so
-    * there is no safe point to free them inside this function). */
+    * `frames(name)` is one list-partitioned frame — for a persisted
+    * index, [[graft.ext.IndexLayout.readFrame]]'s one relation over
+    * every committed entry — and the broadcast probe join sits directly
+    * above its one scan, so dynamic partition pruning reads only the
+    * probed lists however many roots the composition spans. The probe
+    * frame is deliberately RECOMPUTED by each join that uses it rather
+    * than pinned with a checkpoint: it costs one queries × nList
+    * aggregation (metadata-scale — centroids are broadcast, nList is
+    * small), whereas a ckptLocal here would leave unfreeable
+    * 2x-replicated blocks behind every serve — on a long-running serve
+    * stream that pools executor storage against the hot index (the
+    * returned plan is lazy, so there is no safe point to free them
+    * inside this function). */
   private def ivfProbeAndRank(st: IvfStorage, cb: Option[PqCodebook],
-      cent: DataFrame, groups: String => Seq[DataFrame], queries: DataFrame,
+      cent: DataFrame, frames: String => DataFrame, queries: DataFrame,
       k: Int, nProbe: Int, overFetch: Int, vecCol: String, idCol: String,
       tombstones: Option[DataFrame]): DataFrame = {
     VectorFunctions.register(queries.sparkSession)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val probes = ivfProbes(cent, q, nProbe)
     val scoring = st.scoring(cent, cb, vecCol)
-    val candRaw = probeJoin(groups("lists").map(scoring.lists),
+    val candRaw = probeJoin(scoring.lists(frames("lists")),
       scoring.probes(probes), idCol)
     // tombstones ([[deleteFromIvfIndex]]) strike candidates HERE —
     // after the probe join (so the scan's dynamic partition pruning is
@@ -404,7 +405,7 @@ object Similarity {
       .select(col("query_id"), col(idCol).as("neighbor_id"),
         scoring.cos.as("cos"))
     if (st.quantized)
-      overFetchExactRerank(probes, groups("fp"), cands, k, overFetch,
+      overFetchExactRerank(probes, frames("fp"), cands, k, overFetch,
         vecCol, idCol)
     else topKPerQuery(cands, k)
   }
@@ -864,24 +865,19 @@ object Similarity {
     if (metric != "cosine") throw new IllegalStateException(
       s"$path was built for metric '$metric'; this serve scores cosine")
     val cent = IndexLayout.readFrame(spark, path, m, "centroids")
-    // the list composition is served GROUP-WISE (one probe join per
-    // generation group) rather than as one union: dynamic partition
-    // pruning reaches a partitioned scan only when the probe join sits
-    // directly above it, so each group keeps its pruned-scan plan even
-    // after compactions split the composition across generations. An
-    // index whose every list was deleted has zero groups and serves
-    // the empty frame.
-    def frameGroups(name: String): Seq[DataFrame] = {
-      val gs = IndexLayout.readFrameGroups(spark, path, m, name)
-      if (gs.nonEmpty) gs else Seq(IndexLayout.readFrame(spark, path, m, name))
-    }
+    // each frame is one relation over every committed entry, so the
+    // probe join sits directly above one scan and dynamic partition
+    // pruning reaches it however many generation and batch roots the
+    // composition spans. An index whose every list was deleted reads
+    // the empty frame and serves nothing.
     val checkedQueries = dimChecked(queries, vecCol,
       IndexLayout.intParam(m, path, "dim"), "ivfTopKFromIndex")
     // standing tombstones (if any) are honored by default: a deleted
     // vector can never be served, whether or not its rows have been
     // physically compacted away yet
     val tomb = IndexLayout.loadTombstones(spark, path, m, idCol)
-    ivfProbeAndRank(st, st.stored(spark, path, m), cent, frameGroups,
+    ivfProbeAndRank(st, st.stored(spark, path, m), cent,
+      name => IndexLayout.readFrame(spark, path, m, name),
       checkedQueries, k, nProbe, overFetch, vecCol, idCol, tomb)
   }
 
@@ -906,12 +902,12 @@ object Similarity {
     * lazy semi-join over the probed scan instead of bloating the
     * plan. */
   private def overFetchExactRerank(probes: DataFrame,
-      fpGroups: Seq[DataFrame], approx: DataFrame, k: Int, overFetch: Int,
+      fp: DataFrame, approx: DataFrame, k: Int, overFetch: Int,
       vecCol: String, idCol: String): DataFrame = {
     val spark = approx.sparkSession
     val cand = topKPerQuery(approx, k * overFetch)
       .select("query_id", "neighbor_id")
-    val exactBase = probeJoin(fpGroups, probes, idCol)
+    val exactBase = probeJoin(fp, probes, idCol)
       .select(col("query_id"), col(idCol).as("neighbor_id"),
         col("qv"), col(vecCol))
     // the query side is tiny by design (it is broadcast everywhere in
@@ -1278,8 +1274,8 @@ object Similarity {
     *     batch roots ([[graft.ext.IndexLayout.maxBatchRootCount]], a
     *     manifest map lookup — free). The append-only lifecycle's
     *     trigger: without it, an index with no deletes and no drift
-    *     accumulates one union-ed scan per committed append in every
-    *     serve plan, unbounded between compactions. Checked last
+    *     accumulates one root of small files per committed append in
+    *     every serve, unbounded between compactions. Checked last
     *     because both heavier verbs fold the batch roots at their own
     *     flip (subsumption, the trigger-1/2 discipline).
     *
@@ -1583,7 +1579,7 @@ object Similarity {
       idCol)
     val encoded = st.encode(assigned, cent, cb, vecCol, idCol)
     ivfProbeAndRank(st, cb, cent,
-      Map("lists" -> Seq(encoded), "fp" -> Seq(assigned)),
+      Map("lists" -> encoded, "fp" -> assigned),
       queries, k, nProbe, overFetch, vecCol, idCol, tombstones = None)
   }
 

@@ -3067,6 +3067,142 @@ class ExtSpec extends SparkSpec {
     assert(e4.getMessage.contains("newer"), e4.getMessage)
   }
 
+  /** The Spark jobs `body` submits, counted by a listener. A marker job
+    * run afterwards flushes the listener bus: the listener sees jobs in
+    * submission order, so once it sees the marker it has seen them all. */
+  private def jobsSubmitted(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val marker = "jobsSubmitted-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(marker), "the listener never saw the marker job")
+      seen.asScala.count(_ != marker)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("one relation per index frame: the IVF serve plans one lists scan with DPP whatever the composition") {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft-one-rel")
+      .toString + "/idx"
+    Similarity.saveIvfIndex(emb.filter(col("vec_id") < 200), path,
+      nList = 8, nIters = 1)
+    Seq((200, 250), (250, 300), (300, 350)).foreach { case (lo, hi) =>
+      Similarity.appendToIvfIndex(spark, path,
+        emb.filter(col("vec_id") >= lo && col("vec_id") < hi))
+    }
+    Similarity.deleteFromIvfIndex(Seq(3L, 260L).toDF("vec_id"), path)
+    val m = Similarity.ivfIndexParams(spark, path)
+    assert(graft.ext.IndexLayout.batchRootCount(m, "lists") == 3)
+    val queries = emb.filter(col("vec_id") < 5)
+    val served = Similarity.ivfTopKFromIndex(spark, path, queries,
+      k = 5, nProbe = 8)
+    val plan = served.queryExecution.executedPlan.toString
+    val listScans = plan.linesIterator
+      .filter(l => l.contains("FileScan parquet") && l.contains("/lists/"))
+      .toSeq
+    assert(listScans.size == 1,
+      s"expected one lists scan over g0 + 3 batch roots:\n$plan")
+    assert(listScans.head.toLowerCase.contains("dynamicpruning"),
+      s"the lists scan must carry the dynamic pruning filter:\n$plan")
+    // nProbe = nList: the one scan serves exactly brute force over the
+    // live vectors
+    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    assert(key(served) == key(Similarity.bruteForceTopK(
+      emb.filter(col("vec_id") < 350 && !col("vec_id").isin(3L, 260L)),
+      queries, k = 5)))
+  }
+
+  test("one relation per index frame: reading a 64-bucket MinHash index over batch roots submits no Spark job") {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft-no-jobs")
+      .toString + "/idx"
+    val corpus = docs.select("doc_id", "text")
+    Dedup.saveMinhashIndex(corpus.filter(col("doc_id") < 150), path)
+    Seq((150, 170), (170, 190), (190, 210)).foreach { case (lo, hi) =>
+      Dedup.appendToMinhashIndex(
+        corpus.filter(col("doc_id") >= lo && col("doc_id") < hi), path)
+    }
+    Dedup.deleteFromMinhashIndex(Seq(4L).toDF("doc_id"), path)
+    val m = Dedup.minhashIndexParams(spark, path)
+    assert(m("buckets") == "64", m("buckets"))
+    assert(graft.ext.IndexLayout.batchRootCount(m, "shingles") >= 3)
+    // past 32 root paths Spark would list with a job, and a footer read
+    // to infer a schema is a job too: the read must do neither
+    var frames = Seq.empty[org.apache.spark.sql.DataFrame]
+    val jobs = jobsSubmitted {
+      frames = Seq("bands", "shingles", "sizes", "tombstones").map(
+        graft.ext.IndexLayout.readFrame(spark, path, m, _))
+    }
+    assert(jobs == 0, s"reading the index frames submitted $jobs jobs")
+    val nDocs = corpus.filter(col("doc_id") < 210).count()
+    // the counter does count: the first action on a frame submits jobs
+    assert(jobsSubmitted(assert(frames(2).count() == nDocs)) > 0)
+    assert(frames(3).collect().map(_.getLong(0)).toSeq == Seq(4L))
+  }
+
+  test("one relation per index frame: a mixed composition reads exactly its committed rows") {
+    import spark.implicits._
+    import graft.ext.IndexLayout
+    val path = java.nio.file.Files.createTempDirectory("graft-mixed")
+      .toString + "/idx"
+    def write(df: org.apache.spark.sql.DataFrame, dir: String,
+        part: Option[String]): Unit =
+      part.fold(df.write.parquet(s"$path/$dir"))(p =>
+        df.write.partitionBy(p).parquet(s"$path/$dir"))
+    val rows = Seq("g0" -> Seq((1L, "a", 0), (2L, "b", 1)),
+      "a1" -> Seq((3L, "c", 1)),
+      "g1" -> Seq((4L, "d", 2), (5L, "e", 3)))
+    rows.foreach { case (root, rs) =>
+      write(rs.toDF("id", "v", "bucket"), s"t/$root", Some("bucket"))
+    }
+    // a killed write's output under a hidden directory is not committed
+    write(Seq((99L, "z", 0)).toDF("id", "v", "bucket"),
+      "t/g0/_temporary/0", Some("bucket"))
+    // tombstones: a legacy batch_id=N directory inside the old open
+    // root, plus a batch root of bare files
+    write(Seq(7L).toDF("id"), "tombstones/g0/batch_id=0", None)
+    write(Seq(8L).toDF("id"), "tombstones/a2", None)
+    val schemas = Map(
+      "t" -> org.apache.spark.sql.types.StructType.fromDDL(
+        "id BIGINT, v STRING, bucket INT"),
+      "tombstones" -> org.apache.spark.sql.types.StructType.fromDDL(
+        "id BIGINT"))
+    // g1 holds buckets 2 and 3, but only its bucket=2 partition is an
+    // entry (a compaction kept it sealed); g2 is an open root nothing
+    // was written to
+    val m = IndexLayout.newManifest("test-mixed", Map.empty, schemas) ++ Map(
+      "frames.t" -> "t/g0,t/a1,t/g1/bucket=2,t/g2",
+      "frames.tombstones" -> "tombstones/g0,tombstones/a2,tombstones/g1")
+    val t = IndexLayout.readFrame(spark, path, m, "t")
+    assert(t.schema == IndexLayout.frameSchema(m, "t"), t.schema.treeString)
+    assert(t.collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2)))
+      .sortBy(_._1).toSeq ==
+      Seq((1L, "a", 0), (2L, "b", 1), (3L, "c", 1), (4L, "d", 2)))
+    val tomb = IndexLayout.readFrame(spark, path, m, "tombstones")
+    assert(tomb.schema == IndexLayout.frameSchema(m, "tombstones"),
+      tomb.schema.treeString)
+    assert(tomb.collect().map(_.getLong(0)).sorted.toSeq == Seq(7L, 8L))
+    // an entry list with no committed data reads the empty frame
+    val empty = IndexLayout.readFrame(spark, path,
+      m + ("frames.t" -> "t/g2"), "t")
+    assert(empty.schema == IndexLayout.frameSchema(m, "t") && empty.isEmpty)
+  }
+
   test("compaction is lock-free for readers: a plan resolved before the flip serves the pre-flip answer after it") {
     import spark.implicits._
     VectorFunctions.register(spark)
@@ -3116,13 +3252,14 @@ class ExtSpec extends SparkSpec {
     assert(Dedup.nearDupIngestFromPath(spark, mpath, dup)
       .collect().map(_.getLong(0)).toSeq == Seq(9001L),
       "post-flip ingest must serve the compacted index")
-    // the post-compaction composition spans TWO generation groups
-    // (sealed unaffected buckets in g0 + the open g1 — guaranteed
-    // non-empty by appending a fresh doc, the day-after-compaction
-    // shape), and the candidate-bucket literal filter must land in the
-    // PartitionFilters of EVERY group's scan — Catalyst pushes literal
-    // predicates through the Union, so compaction cannot cost the
-    // serve its pruned reads
+    // the post-compaction composition spans several roots (sealed
+    // unaffected buckets in g0, the open g1 when the compaction staged
+    // survivors, and the batch root of a fresh doc appended after the
+    // flip — the day-after-compaction shape), read as ONE relation:
+    // exactly one shingles scan, whose files come from every root that
+    // holds data, and the candidate-bucket literal filter lands in that
+    // scan's PartitionFilters, so compaction cannot cost the serve its
+    // pruned reads
     Dedup.appendToMinhashIndex(
       Seq((9100L, "vvb vvc vvd vve vvf vvg")).toDF("doc_id", "text"), mpath)
     val (_, csh, _) = Dedup.loadMinhashIndex(spark, mpath)
@@ -3137,11 +3274,19 @@ class ExtSpec extends SparkSpec {
     val shingleScans = prunedPlan.linesIterator
       .filter(l => l.contains("FileScan parquet") && l.contains("shingles"))
       .toSeq
-    assert(shingleScans.size >= 2,
-      s"expected one scan per generation group:\n$prunedPlan")
-    shingleScans.foreach(l =>
-      assert(l.matches(""".*PartitionFilters: \[[^\]]*bucket#\d+ (IN|=).*"""),
-        s"bucket filter must prune EVERY group's scan:\n$l"))
+    assert(shingleScans.size == 1,
+      s"expected one shingles scan over the whole composition:\n$prunedPlan")
+    assert(shingleScans.head.matches(
+        """.*PartitionFilters: \[[^\]]*bucket#\d+ (IN|=).*"""),
+      s"bucket filter must prune the shingles scan:\n${shingleScans.head}")
+    val shEntries = graft.ext.IndexLayout.frameEntries(
+        Dedup.minhashIndexParams(spark, mpath), "shingles")
+      .filter(e => graft.ext.IndexFs.hasParquetData(spark, s"$mpath/$e"))
+    assert(shEntries.exists(_.startsWith("shingles/g0/")) &&
+      shEntries.map(_.split("/")(1)).distinct.size >= 2, shEntries)
+    shEntries.foreach(e =>
+      assert(csh.inputFiles.exists(_.contains(s"/$e/")),
+        s"the shingles relation must read $e:\n${csh.inputFiles.mkString("\n")}"))
     // SAME-PATH rebuild under the stored quantizer — the natural
     // scheduled-retrain call shape: the lazily-loaded centroids read
     // the very files the save wipes, so the save must pin them
