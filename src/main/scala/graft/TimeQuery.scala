@@ -9,7 +9,9 @@ package graft
   * the row never touches. Prints per-rep seconds, plus the time
   * outside them: `session_s` from JVM start until the session is up,
   * `start_s` from JVM start until the tables are marked too, and
-  * `warmup_s` for the untimed warmup. */
+  * `warmup_s` for the untimed warmup; `codegen_compiles` and
+  * `codegen_ms` count the classes compiled, and the milliseconds spent
+  * compiling them, in the warmup and in all timed reps together. */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -32,14 +34,26 @@ object TimeQuery {
       (System.nanoTime() - t0) / 1e9
     }
     val startS = sinceJvmStart()
+    val c0 = compiled()
     val warmupS = once()
+    val c1 = compiled()
     val times = Seq.fill(reps)(once())
+    val c2 = compiled()
     println(f"""{"query":"$name","sf":"$sfDir","cores":$cores,""" +
       f""""session_s":$sessionS%.3f,"start_s":$startS%.3f,""" +
       f""""warmup_s":$warmupS%.3f,""" +
+      s""""codegen_compiles":{"warmup":${c1._1 - c0._1},"reps":${c2._1 - c1._1}},""" +
+      f""""codegen_ms":{"warmup":${(c1._2 - c0._2) / 1e6}%.1f,""" +
+      f""""reps":${(c2._2 - c1._2) / 1e6}%.1f},""" +
       s""""reps":[${times.map(t => f"$t%.3f").mkString(",")}]}""")
     spark.stop()
   }
+
+  /** (classes compiled, summed compile nanoseconds) in this JVM so far:
+    * Spark's codegen counters, which count cache misses only. */
+  private def compiled(): (Long, Long) = (
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
 
   private def sinceJvmStart(): Double = (System.currentTimeMillis() -
     java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3

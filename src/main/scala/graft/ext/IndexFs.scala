@@ -1,6 +1,9 @@
 package graft.ext
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 
 /** Hadoop-FileSystem helpers for the persisted-index MAINTENANCE layer
@@ -21,8 +24,8 @@ import org.apache.spark.sql.SparkSession
   * The manifest/generation layout built on these helpers lives in
   * [[IndexLayout]]; this object keeps only the FileSystem-resolution
   * primitives (existence, recursive delete, committed-footer
-  * presence) both index families and the streaming delta lifecycle
-  * share. */
+  * presence, footer row counts) both index families and the streaming
+  * delta lifecycle share. */
 private[graft] object IndexFs {
   def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
@@ -48,15 +51,33 @@ private[graft] object IndexFs {
     * filter — a write hard-killed mid-job leaves task files under
     * `_temporary` that Spark's reader will NOT surface; counting them
     * would wedge every replay on a dir Spark reads as empty. */
-  def hasParquetData(spark: SparkSession, path: String): Boolean = {
-    val f = fs(spark, path)
-    def walk(p: Path): Boolean = {
-      val entries = f.listStatus(p).filterNot(st => hidden(st.getPath.getName))
-      entries.exists(st => st.isFile && st.getPath.getName.endsWith(".parquet")) ||
+  def hasParquetData(spark: SparkSession, path: String): Boolean =
+    anyDataFile(spark, path)((_, _) => true)
+
+  /** True iff some committed parquet data file under `path` (the
+    * [[hasParquetData]] rule) holds at least one row, by its footer's
+    * row count, read on the driver: no Spark job. An UNPARTITIONED
+    * write of an empty frame leaves one zero-row schema-anchor file,
+    * which [[hasParquetData]] would count as data. */
+  def hasRows(spark: SparkSession, path: String): Boolean =
+    anyDataFile(spark, path) { (st, conf) =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try r.getRecordCount > 0 finally r.close()
+    }
+
+  /** Whether `p` holds for some committed parquet data file under
+    * `path`; stops at the first that does. */
+  private def anyDataFile(spark: SparkSession, path: String)(
+      p: (FileStatus, Configuration) => Boolean): Boolean = {
+    val conf = spark.sessionState.newHadoopConf()
+    val f = new Path(path).getFileSystem(conf)
+    def walk(dir: Path): Boolean = {
+      val entries = f.listStatus(dir).filterNot(st => hidden(st.getPath.getName))
+      entries.exists(st => st.isFile && st.getPath.getName.endsWith(".parquet") &&
+        p(st, conf)) ||
         entries.exists(st => st.isDirectory && walk(st.getPath))
     }
-    val p = new Path(path)
-    f.exists(p) && walk(p)
+    f.exists(new Path(path)) && walk(new Path(path))
   }
 
   /** The names [[hasParquetData]] and every index read skip: commit

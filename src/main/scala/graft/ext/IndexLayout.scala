@@ -966,38 +966,28 @@ private[graft] object IndexLayout {
     * `overwrite`, so a replay after a kill rewrites the same root
     * byte-equivalently instead of doubling rows. `partCol` keeps the
     * layout's pruning directories; the batch-sized repartition writes
-    * ≤1 file per partition value instead of tasks × values.
+    * ≤1 file per partition value instead of tasks × values. The write
+    * is the batch's only Spark action: emptiness is decided afterwards
+    * on the driver from the committed footers' row counts
+    * ([[IndexFs.hasRows]]).
     *
     * @return the composition entry to commit, or None when the batch
-    *         wrote no committed footers (an all-empty batch must not
-    *         grow the composition — and for unpartitioned frames an
-    *         empty write would leave a schema-anchor footer that reads
-    *         back as rows-present). */
+    *         wrote no rows (an all-empty batch must not grow the
+    *         composition — and for unpartitioned frames an empty write
+    *         leaves a schema-anchor footer, deleted with its root, that
+    *         would otherwise read back as rows-present). */
   def stageAppendBatch(spark: SparkSession, path: String, name: String,
       tag: String, df: DataFrame, partCol: Option[String])
       : Option[String] = {
     require(BatchRootRe.matches(tag), s"batch root tag '$tag' must be aN/bN")
     val entry = s"$name/$tag"
     val target = s"$path/$entry"
-    val wrote = partCol match {
-      case Some(p) =>
-        // a partitioned empty write emits no partition dirs and no
-        // footers — emptiness is detectable AFTER the write
-        df.repartition(col(p)).write.mode("overwrite")
-          .partitionBy(p).parquet(target)
-        IndexFs.hasParquetData(spark, target)
-      case None =>
-        // an UNPARTITIONED empty write would emit one schema-anchor
-        // footer that reads back as rows-present — probe the batch
-        // first (persisted, so the probe and the write agree even if
-        // the source moves between the two jobs)
-        val d = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (d.take(1).isEmpty) false
-          else { d.write.mode("overwrite").parquet(target); true }
-        } finally d.unpersist(blocking = false)
-    }
-    if (wrote) Some(entry)
+    // one write, then emptiness from the committed footers: a
+    // partitioned empty write leaves no footer, an unpartitioned one a
+    // zero-row schema-anchor footer — neither reads back as rows
+    val w = partCol.fold(df)(p => df.repartition(col(p))).write.mode("overwrite")
+    partCol.fold(w)(w.partitionBy(_)).parquet(target)
+    if (IndexFs.hasRows(spark, target)) Some(entry)
     else { IndexFs.delete(spark, target); None }
   }
 

@@ -952,13 +952,13 @@ object Similarity {
     * tombstone shadows its id even across later appends — compact
     * before re-admitting an id, or mint fresh ids.
     *
-    * An EMPTY ids frame writes nothing: unlike the MinHash tombstones
-    * (whose bucket-PARTITIONED empty write leaves no footer), an
-    * unpartitioned empty write emits one schema-anchor footer, which
+    * An EMPTY ids frame commits nothing: the unpartitioned tombstone
+    * write of an empty frame emits one schema-anchor footer, which
     * would read back as standing-tombstones-present and tax every
     * later serve with a pointless anti-join stage (and every refresh
-    * with a pointless compaction). The emptiness probe is one job over
-    * the delta-sized delete set. */
+    * with a pointless compaction). Emptiness is read from the written
+    * footers' row counts on the driver and such a root is removed, so
+    * a delete costs its one write and no probe job. */
   def deleteFromIvfIndex(ids: DataFrame, path: String,
       idCol: String = "vec_id"): Unit =
     IndexLayout.appendTombstones(ids.sparkSession, path, IvfIndexFormat,

@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.types.{LongType, StructType}
 import graft.ops.Viewing
 
 /** Structured Streaming surface: the daily-file batch loop the reference
@@ -249,6 +250,16 @@ object Streaming {
       .select(col(idCol))
   }
 
+  /** The rows of the delta frame at `dir` (one `batch=N` directory per
+    * micro-batch) that micro-batches before `batchId` committed, read
+    * with a DECLARED schema — the standing frame's `schema` plus the
+    * `batch` partition column — so no footer is opened to infer one and
+    * the read submits no Spark job. */
+  private[graft] def deltaRows(spark: SparkSession, dir: String,
+      schema: StructType, batchId: Long): DataFrame =
+    spark.read.schema(schema.add("batch", LongType)).parquet(dir)
+      .filter(col("batch") < batchId).drop("batch")
+
   /** s15 — streaming MinHash NEAR-dup ingest: the persisted-index
     * serving path (x26b) composed into `foreachBatch`, so a streaming
     * corpus gets the SAME LSH near-dup admission as the batch pipeline
@@ -355,9 +366,9 @@ object Streaming {
         // delta presence is detected by COMMITTED parquet FILES, not
         // batch= dir names: a batch that admitted nothing leaves a
         // footer-less batch=N directory, a hard-killed write leaves
-        // only _temporary task files, and a bare read over an
-        // all-empty tree throws at schema inference — the IndexFs
-        // rule (resolved on the delta path's own FileSystem, so an
+        // only _temporary task files, and a delta with no data must
+        // add no union branch to the plan — the IndexFs rule
+        // (resolved on the delta path's own FileSystem, so an
         // hdfs:/s3a: delta layout replays exactly like a local one)
         def withDeltas(standing: DataFrame, sub: String): DataFrame = {
           val dir = s"$deltaPath/$sub"
@@ -367,8 +378,7 @@ object Streaming {
             })
           if (!present) standing
           else standing.unionByName(
-            spark.read.parquet(dir)
-              .filter(col("batch") < batchId).drop("batch"))
+            deltaRows(spark, dir, standing.schema, batchId))
         }
         val batchDocs = batch.select(col("doc_id"), col("text"))
         // the batch's index frames are derived ONCE and reused for the

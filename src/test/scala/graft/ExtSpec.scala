@@ -3067,33 +3067,6 @@ class ExtSpec extends SparkSpec {
     assert(e4.getMessage.contains("newer"), e4.getMessage)
   }
 
-  /** The Spark jobs `body` submits, counted by a listener. A marker job
-    * run afterwards flushes the listener bus: the listener sees jobs in
-    * submission order, so once it sees the marker it has seen them all. */
-  private def jobsSubmitted(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val marker = "jobsSubmitted-marker"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    sc.addSparkListener(l)
-    try {
-      body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(marker) && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains(marker), "the listener never saw the marker job")
-      seen.asScala.count(_ != marker)
-    } finally sc.removeSparkListener(l)
-  }
-
   test("one relation per index frame: the IVF serve plans one lists scan with DPP whatever the composition") {
     import spark.implicits._
     val path = java.nio.file.Files.createTempDirectory("graft-one-rel")
@@ -3153,6 +3126,74 @@ class ExtSpec extends SparkSpec {
     // the counter does count: the first action on a frame submits jobs
     assert(jobsSubmitted(assert(frames(2).count() == nDocs)) > 0)
     assert(frames(3).collect().map(_.getLong(0)).toSeq == Seq(4L))
+  }
+
+  test("compiled code is reused across index days: the second day's serves compile almost nothing") {
+    import spark.implicits._
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val root = java.nio.file.Files.createTempDirectory("graft-codegen-reuse")
+      .toString
+    val (mh, ivf) = (s"$root/mh", s"$root/ivf")
+    val corpus = docs.select("doc_id", "text")
+    Dedup.saveMinhashIndex(corpus.filter(col("doc_id") < 150), mh)
+    Similarity.saveIvfIndex(emb.filter(col("vec_id") < 150), ivf,
+      nList = 4, nIters = 1)
+    // a day's batch is a local relation: no day's bounds land in
+    // generated code as literals
+    def local(df: org.apache.spark.sql.DataFrame) =
+      spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
+    def batch(lo: Int) = (
+      local(corpus.filter(col("doc_id") >= lo && col("doc_id") < lo + 20)),
+      local(emb.filter(col("vec_id") >= lo && col("vec_id") < lo + 20)))
+    def compiles(body: => Unit): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      body
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    def serve(lo: Int): Seq[Long] = {
+      val (d, v) = batch(lo)
+      Similarity.ivfTopKFromIndex(spark, ivf, v, k = 5, nProbe = 4).collect()
+      Dedup.nearDupIngestFromPath(spark, mh, d).select("doc_id").as[Long]
+        .collect().toSeq
+    }
+    def appendAndDelete(lo: Int, admitted: Seq[Long], gone: Long): Unit = {
+      val (d, v) = batch(lo)
+      Dedup.appendToMinhashIndex(d.filter(col("doc_id").isin(admitted: _*)), mh)
+      Similarity.appendToIvfIndex(spark, ivf,
+        v.filter(col("vec_id").isin(admitted: _*)))
+      Dedup.deleteFromMinhashIndex(Seq(gone).toDF("doc_id"), mh)
+      Similarity.deleteFromIvfIndex(Seq(gone).toDF("vec_id"), ivf)
+    }
+    // tombstones exist before the first serve, so both days serve the
+    // same plan shape
+    appendAndDelete(130, Nil, 0L)
+    appendAndDelete(150, serve(150), 1L)
+    val second = compiles(serve(170))
+    assert(second <= 12, s"the second day's serves compiled $second classes")
+    // the counter does count: a fresh literal is new generated code
+    assert(compiles(spark.range(3).selectExpr(s"id + ${System.nanoTime()}")
+      .collect()) > 0)
+  }
+
+  test("a delete stages its tombstones with one write and no probe job") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-delete-jobs")
+      .toString
+    val (mh, ivf) = (s"$root/mh", s"$root/ivf")
+    Dedup.saveMinhashIndex(docs.select("doc_id", "text")
+      .filter(col("doc_id") < 100), mh)
+    Similarity.saveIvfIndex(emb.filter(col("vec_id") < 100), ivf,
+      nList = 4, nIters = 1)
+    val ids = (1L to 10L).toSeq
+    // the distinct's shuffle and the write: no persist-and-take probe
+    val mhJobs = jobsSubmitted(Dedup.deleteFromMinhashIndex(ids.toDF("doc_id"), mh))
+    val ivfJobs = jobsSubmitted(Similarity.deleteFromIvfIndex(ids.toDF("vec_id"), ivf))
+    assert(mhJobs <= 2 && ivfJobs <= 2,
+      s"deletes took $mhJobs (MinHash) and $ivfJobs (IVF) jobs")
+    assert(Dedup.loadMinhashTombstones(spark, mh).get.as[Long].collect()
+      .toSet == ids.toSet)
+    assert(Similarity.loadIvfTombstones(spark, ivf).get.as[Long].collect()
+      .toSet == ids.toSet)
   }
 
   test("one relation per index frame: a mixed composition reads exactly its committed rows") {

@@ -401,6 +401,54 @@ class StreamingSpec extends SparkSpec {
     Dedup.compactMinhashDeltas(spark, s"$tmp/delta2", idxPath)
   }
 
+  test("s15: a micro-batch reads its stream's deltas with the declared frame schema and submits no footer-inference job") {
+    import java.nio.file.Files
+    import spark.implicits._
+    import graft.ext.{Dedup, IndexLayout}
+    val tmp = Files.createTempDirectory("graft-s15-delta-read").toString
+    val idxPath = s"$tmp/idx"
+    Dedup.saveMinhashIndex(Seq(
+      (1L, "alpha beta gamma delta epsilon"),
+      (2L, "one two three four five six")).toDF("doc_id", "text"), idxPath)
+    val in = s"$tmp/in"
+    Seq((101L, "unique text number one about cats and dogs playing"))
+      .toDF("doc_id", "text").coalesce(1).write.parquet(in)
+    Seq((201L, "another fresh document with its own words entirely"))
+      .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(in)
+    val src = spark.readStream.schema(spark.read.parquet(in).schema)
+      .option("maxFilesPerTrigger", 1).parquet(in)
+    val delta = s"$tmp/delta"
+    Streaming.nearDupIngestStream(src, idxPath, s"$tmp/out", delta,
+      s"$tmp/ck").awaitTermination()
+    // the two micro-batches each left a batch=N root in every delta frame
+    val m = IndexLayout.requireManifest(spark, idxPath, Dedup.MinhashIndexFormat)
+    for (sub <- Seq("bands", "shingles", "sizes")) {
+      val dir = s"$delta/$sub"
+      val standing = IndexLayout.readFrame(spark, idxPath, m, sub)
+      var read: org.apache.spark.sql.DataFrame = null
+      val jobs = jobDescriptions {
+        read = Streaming.deltaRows(spark, dir, standing.schema, 2L)
+      }
+      assert(jobs.isEmpty, s"$sub: reading the deltas submitted jobs $jobs")
+      // the counter does count: the bare read infers the footer with a job
+      assert(jobsSubmitted(spark.read.parquet(dir)) > 0)
+      val inferred = spark.read.parquet(dir)
+      assert(read.columns.toSet == standing.columns.toSet)
+      val cols = standing.columns.toSeq.map(col)
+      assert(read.select(cols: _*).collect().toSet ==
+        inferred.select(cols: _*).collect().toSet)
+      assert(read.select("doc_id").distinct().as[Long].collect().toSet ==
+        Set(101L, 201L), sub)
+      // an earlier micro-batch reads only the batches before it
+      assert(Streaming.deltaRows(spark, dir, standing.schema, 1L)
+        .select("doc_id").distinct().as[Long].collect().toSet ==
+        inferred.filter(col("batch") < 1).select("doc_id").distinct()
+          .as[Long].collect().toSet)
+      assert(standing.unionByName(read).count() ==
+        standing.count() + inferred.count())
+    }
+  }
+
   test("s23: streaming day-close into the sketch store — kill/resume lands each day exactly once, bit-identical to the batch build") {
     import java.nio.file.Files
     import spark.implicits._
