@@ -1259,10 +1259,14 @@ object Dedup {
     // merge-on-read design viable between compactions. No distinct on
     // the build side: anti-join semantics are duplicate-insensitive,
     // and the aggregate would tax every serve just to trim rows only
-    // repeated deletes of one id can produce.
+    // repeated deletes of one id can produce. The select keeps candRaw's
+    // column order (a using-join puts its key first): with tombstones
+    // or without, every plan downstream of the cached candidates has
+    // one shape, so a serve after the first delete reuses the compiled
+    // classes of the serves before it.
     val candS = tombstones.fold(candRaw)(t =>
         candRaw.join(t.select(col(idCol).as("b_id")),
-          Seq("b_id"), "left_anti"))
+          Seq("b_id"), "left_anti").select("a_id", "b_id"))
       // consumed by three plans below (the semi-join prune, the
       // intersection, and — transitively — the rejected set); released
       // with bsh once the rejected ids are materialized
