@@ -11,7 +11,8 @@ package graft
   * `start_s` from JVM start until the tables are marked too, and
   * `warmup_s` for the untimed warmup; `codegen_compiles` and
   * `codegen_ms` count the classes compiled, and the milliseconds spent
-  * compiling them, in the warmup and in all timed reps together. */
+  * compiling them, and `jobs` the Spark jobs submitted, in the warmup
+  * and in all timed reps together. */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -34,17 +35,19 @@ object TimeQuery {
       (System.nanoTime() - t0) / 1e9
     }
     val startS = sinceJvmStart()
+    val jobs = new JobCounter(spark.sparkContext)
     val c0 = compiled()
     val warmupS = once()
-    val c1 = compiled()
+    val (c1, j1) = (compiled(), jobs.drained())
     val times = Seq.fill(reps)(once())
-    val c2 = compiled()
+    val (c2, j2) = (compiled(), jobs.drained())
     println(f"""{"query":"$name","sf":"$sfDir","cores":$cores,""" +
       f""""session_s":$sessionS%.3f,"start_s":$startS%.3f,""" +
       f""""warmup_s":$warmupS%.3f,""" +
       s""""codegen_compiles":{"warmup":${c1._1 - c0._1},"reps":${c2._1 - c1._1}},""" +
       f""""codegen_ms":{"warmup":${(c1._2 - c0._2) / 1e6}%.1f,""" +
       f""""reps":${(c2._2 - c1._2) / 1e6}%.1f},""" +
+      s""""jobs":{"warmup":$j1,"reps":${j2 - j1}},""" +
       s""""reps":[${times.map(t => f"$t%.3f").mkString(",")}]}""")
     spark.stop()
   }
@@ -54,6 +57,38 @@ object TimeQuery {
   private def compiled(): (Long, Long) = (
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
     org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
+
+  /** Counts the Spark jobs started since it was registered. The
+    * listener bus is asynchronous, so [[drained]] first runs a marker
+    * job and waits until the listener has seen it: jobs reach the
+    * listener in submission order, so by then it has seen every job
+    * submitted before the marker. Marker jobs are not counted. */
+  private class JobCounter(sc: org.apache.spark.SparkContext)
+      extends org.apache.spark.scheduler.SparkListener {
+    private val Marker = "timequery-jobs-marker"
+    private val started = new java.util.concurrent.atomic.AtomicLong()
+    private val markers = new java.util.concurrent.atomic.AtomicLong()
+    sc.addSparkListener(this)
+
+    override def onJobStart(
+        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      if (Option(e.properties).map(_.getProperty("spark.job.description"))
+          .contains(Marker)) markers.incrementAndGet()
+      else started.incrementAndGet()
+
+    /** Jobs started so far, after every earlier job reached the bus. */
+    def drained(): Long = {
+      val want = markers.get() + 1
+      sc.setJobDescription(Marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (markers.get() < want && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      if (markers.get() < want)
+        throw new IllegalStateException("the listener never saw the marker job")
+      started.get()
+    }
+  }
 
   private def sinceJvmStart(): Double = (System.currentTimeMillis() -
     java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3

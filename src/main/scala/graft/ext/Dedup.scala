@@ -1197,7 +1197,7 @@ object Dedup {
     * against them — mirrored by both paths).
     *
     * EAGER at the rejected-id set: the batch's shingle frame feeds
-    * four consumers (bands, sizes, both intersection joins), so it is
+    * three consumers (bands, sizes, the intersection join), so it is
     * persisted for the duration of the call — and the only way to
     * release that cache deterministically instead of leaking one copy
     * per invocation (the g33/x9 hygiene rule) is to materialize the
@@ -1228,7 +1228,15 @@ object Dedup {
     * write; re-deriving would shingle/sign the admitted docs twice per
     * micro-batch). The caller owns `bsh`'s persist lifetime (the
     * [[minhashIndexFrames]] contract); this function is EAGER at the
-    * rejected-id set, so unpersisting right after return is safe. */
+    * rejected-id set, so unpersisting right after return is safe.
+    *
+    * ONE probe serves both rejection rules: a batch doc `a` is
+    * rejected when it verifies against a candidate `b` that is either
+    * a standing doc (`b_new = false`) or a LOWER-id batch doc
+    * (`b_new = true`, `b_id < a_id` — keep-first). The `b_new` tag
+    * keeps a batch doc apart from a standing doc with the same id.
+    * Tombstones strike standing candidates only: a deleted id names a
+    * standing doc, never the batch doc that happens to reuse it. */
   def nearDupIngestFromFrames(standingBands: DataFrame,
       standingShingles: DataFrame, standingSizes: DataFrame,
       batchIds: DataFrame, bban: DataFrame, bsh: DataFrame,
@@ -1236,62 +1244,51 @@ object Dedup {
       idCol: String = "doc_id",
       tombstones: Option[DataFrame] = None,
       idBuckets: Int = MinhashIndexBuckets): DataFrame = {
-    def jacc(inter: DataFrame, aSz: DataFrame, bSz: DataFrame) = inter
-      .join(aSz, "a_id").join(bSz, "b_id")
-      .filter(col("i").cast("double") /
-        (col("na") + col("nb") - col("i")) >= threshold)
-    // vs standing: batch band keys probe the stored bands; the batch
-    // side is the small build side (AQE broadcasts it), the standing
-    // frames stream
+    // a b-side frame: the standing rows (keyed `b_id`) tagged
+    // b_new = false, the batch's own rows tagged b_new = true
+    def tagged(standing: DataFrame, batch: DataFrame,
+        cols: Column*): DataFrame = {
+      val keyed = col("b_id") +: cols
+      standing.select(keyed :+ lit(false).as("b_new"): _*).unionByName(
+        batch.withColumnRenamed(idCol, "b_id")
+          .select(keyed :+ lit(true).as("b_new"): _*))
+    }
+    // the batch's band keys are the small build side (AQE broadcasts
+    // them); the standing bands stream
     val candRaw = bban.select(col(idCol).as("a_id"), col("band"), col("sig"))
-      .join(standingBands.select(col(idCol).as("b_id"), col("band"), col("sig")),
-        Seq("band", "sig"))
-      .select("a_id", "b_id").distinct()
+      .join(tagged(standingBands.withColumnRenamed(idCol, "b_id"), bban,
+        col("band"), col("sig")), Seq("band", "sig"))
+      .filter(!col("b_new") || col("b_id") < col("a_id"))
+      .select("a_id", "b_id", "b_new").distinct()
     // tombstones ([[deleteFromMinhashIndex]]) apply HERE, at the
     // delta-sized candidate-pair level, which is exactly equivalent to
     // having removed the docs from all three standing frames: standing
-    // rows reach this probe only through candidate b_ids (the shingle/
-    // size prunes below are semi-joins on candIds), so striking a
-    // b_id strikes every downstream trace of the doc. The anti-join
-    // costs O(candidates): AQE broadcasts a small tombstone side, and
-    // even a huge one shuffles only the delta-sized pairs — deletion
-    // adds NO corpus-scale term to serving, which is what makes the
-    // merge-on-read design viable between compactions. No distinct on
-    // the build side: anti-join semantics are duplicate-insensitive,
-    // and the aggregate would tax every serve just to trim rows only
-    // repeated deletes of one id can produce. The select keeps candRaw's
-    // column order (a using-join puts its key first): with tombstones
-    // or without, every plan downstream of the cached candidates has
-    // one shape, so a serve after the first delete reuses the compiled
-    // classes of the serves before it.
-    val candS = tombstones.fold(candRaw)(t =>
-        candRaw.join(t.select(col(idCol).as("b_id")),
-          Seq("b_id"), "left_anti").select("a_id", "b_id"))
-      // consumed by three plans below (the semi-join prune, the
-      // intersection, and — transitively — the rejected set); released
-      // with bsh once the rejected ids are materialized
+    // rows reach the verify only through candidate b_ids (the shingle
+    // and size prunes below are semi-joins on candIds). Deletion so
+    // adds no corpus-scale term to serving. No distinct on the build
+    // side: anti-join semantics are duplicate-insensitive. The select
+    // keeps candRaw's column order (a using-join puts its keys
+    // first), so every plan downstream of the cached candidates has
+    // one shape with tombstones or without, and reuses its compiled
+    // classes across serves.
+    val cand = tombstones.fold(candRaw)(t =>
+        candRaw.join(t.select(col(idCol).as("b_id"), lit(false).as("b_new")),
+          Seq("b_id", "b_new"), "left_anti").select("a_id", "b_id", "b_new"))
+      // consumed by the candidate collect, the prunes and the
+      // intersection; released once the rejected ids are materialized
       .persist(StorageLevel.MEMORY_AND_DISK)
     // The exact-Jaccard verify needs the STANDING frames only for
-    // candidate docs — a delta-sized id set. Three tiers of prune, best
-    // available first:
-    //  1. Stored frames carry the `bucket` partition column
-    //     ([[saveMinhashIndex]]): the candidates' bucket list (at most
-    //     the manifest's stored bucket count of ints, collected
-    //     driver-side — metadata-scale, the documented
-    //     discipline) becomes a literal partition filter, so the scan
-    //     READS only the candidates' buckets — O(candidates) I/O, not
-    //     an O(corpus) scan per batch.
-    //  2. In-memory frames (no bucket column): broadcast semi-join —
-    //     full scan, but only candidates' rows enter an exchange.
-    //  3. Candidate set too large to broadcast (a skewed batch hitting
-    //     a huge standing dup-cluster can make it corpus-scale, and an
-    //     explicit broadcast hint cannot be demoted by AQE): shuffle
-    //     semi-join — degrades gracefully instead of OOMing.
-    // The strategy pick costs ONE bounded driver action over the
-    // persisted candidate frame (the x26/g33 exception class): a
-    // per-bucket count whose ≤64 rows yield both the candidate count
-    // (broadcast gate) and the bucket list (partition filter).
-    val candIds = candS.select("b_id").distinct()
+    // candidate docs. Three tiers of prune, best available first:
+    //  1. stored frames carry the `bucket` partition column: the
+    //     candidates' bucket list becomes a literal partition filter,
+    //     so the scan reads only the candidates' buckets;
+    //  2. in-memory frames (no bucket column): broadcast semi-join;
+    //  3. a candidate set too large to broadcast (an explicit hint
+    //     cannot be demoted by AQE): shuffle semi-join.
+    // One bounded driver action picks the tier: a per-bucket count
+    // whose rows (at most the stored bucket count) yield both the
+    // candidate count and the bucket list.
+    val candIds = cand.filter(!col("b_new")).select("b_id").distinct()
     val hasBuckets = standingShingles.columns.contains("bucket") ||
       standingSizes.columns.contains("bucket")
     val (nCand, candBuckets) =
@@ -1305,37 +1302,24 @@ object Dedup {
     def pruneToCandidates(standing: DataFrame): DataFrame =
       pruneStandingToCandidates(standing, candIds, useBroadcast, idCol,
         candBuckets)
-    val candStandingSh = pruneToCandidates(standingShingles)
-      .select(col("b_id"), col("shingle"))
-    val interS = candS
+    val inter = cand
       .join(bsh.select(col(idCol).as("a_id"), col("shingle")), "a_id")
-      .join(candStandingSh, Seq("b_id", "shingle"))
-      .groupBy("a_id", "b_id").agg(count(lit(1)).as("i"))
-    val dupS = jacc(interS,
-        bsizes.select(col(idCol).as("a_id"), col("n_sh").as("na")),
-        pruneToCandidates(standingSizes)
-          .select(col("b_id"), col("n_sh").as("nb")))
+      .join(tagged(pruneToCandidates(standingShingles), bsh, col("shingle")),
+        Seq("b_id", "b_new", "shingle"))
+      .groupBy("a_id", "b_id", "b_new").agg(count(lit(1)).as("i"))
+    val dup = inter
+      .join(bsizes.select(col(idCol).as("a_id"), col("n_sh").as("na")), "a_id")
+      .join(tagged(pruneToCandidates(standingSizes), bsizes,
+        col("n_sh").as("nb")), Seq("b_id", "b_new"))
+      .filter(col("i").cast("double") /
+        (col("na") + col("nb") - col("i")) >= threshold)
       .select(col("a_id").as(idCol)).distinct()
-    // intra-batch keep-first: reject the higher id of any verified pair
-    val candB = bban.as("x").join(bban.as("y"), Seq("band", "sig"))
-      .filter(col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("a_id"), col(s"y.$idCol").as("b_id"))
-      .distinct()
-    val interB = candB
-      .join(bsh.select(col(idCol).as("a_id"), col("shingle")), "a_id")
-      .join(bsh.select(col(idCol).as("b_id"), col("shingle")),
-        Seq("b_id", "shingle"))
-      .groupBy("a_id", "b_id").agg(count(lit(1)).as("i"))
-    val dupB = jacc(interB,
-        bsizes.select(col(idCol).as("a_id"), col("n_sh").as("na")),
-        bsizes.select(col(idCol).as("b_id"), col("n_sh").as("nb")))
-      .select(col("b_id").as(idCol)).distinct()
     // ckptLocal, NOT ckpt: the rejected set is delta-sized, and in a
     // long-running ingest service a reliable checkpoint per call would
     // accumulate never-auto-removed files; localCheckpoint blocks are
     // ContextCleaner-reclaimed once the caller drops the frame.
-    val rejected = Checkpoints.ckptLocal(dupS.unionByName(dupB).distinct())
-    candS.unpersist()
+    val rejected = Checkpoints.ckptLocal(dup)
+    cand.unpersist()
     batchIds.join(rejected, Seq(idCol), "left_anti")
   }
 
